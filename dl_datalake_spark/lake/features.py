@@ -93,10 +93,8 @@ class FeatureStore:
     def get_feature_entry(self, feature_id: int) -> dict | None:
         """Manifest row for one feature file by catalog id (reference UI
         `routers/features.py` GET /{feature_id})."""
-        from pyspark.sql import functions as F
-
-        rows = self.manifest.load().where(F.col("id") == int(feature_id)).limit(1).collect()
-        return rows[0].asDict(recursive=True) if rows else None
+        rows = self.manifest._entries(id=int(feature_id))
+        return rows[0] if rows else None
 
     def feature_file_path(self, feature_id: int) -> str | None:
         """On-disk path for a feature file by catalog id, or None if the

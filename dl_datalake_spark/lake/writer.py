@@ -2073,12 +2073,7 @@ class LakeWriter:
         if delta_rows is not None:
             import json as _json
 
-            prior = (
-                self.manifest.list_entries(path=path)
-                .select("time_from", "time_to", "metadata_json")
-                .limit(1)
-                .collect()
-            )
+            prior = self.manifest._entries(path=path)[:1]
             prior_rows = None
             if prior:
                 try:

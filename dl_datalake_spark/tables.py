@@ -92,18 +92,20 @@ def load_table(
     A 0.6 MB table gets 1 partition instead of 32 (each extra partition
     is a Python worker task round-trip); a 100 GB table still saturates
     the cluster because the scan itself arrives with many splits.
+    Caveat: the fan-out is sized by bytes, while the real variable is
+    the per-row CPU cost of the downstream stage — a small table with
+    expensive rows is still under-spread. When the size is unknown
+    (a remote or scheme-prefixed `sf_dir` reads as 0 bytes here), the
+    target falls back to the default parallelism, as spread=True.
     """
     ensure_runtime_confs(spark)
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     df = spark.read.parquet(path)
     if spread:
-        if spread == "bytes":
-            target = max(1, min(
-                spark.sparkContext.defaultParallelism,
-                -(-_table_bytes(path) // (4 << 20)),
-            ))
-        else:
-            target = spark.sparkContext.defaultParallelism
+        target = spark.sparkContext.defaultParallelism
+        nbytes = _table_bytes(path) if spread == "bytes" else 0
+        if nbytes:
+            target = min(target, -(-nbytes // (4 << 20)))
         if df.rdd.getNumPartitions() < target:
             df = df.repartition(target)
     return df

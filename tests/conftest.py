@@ -18,15 +18,47 @@ def pytest_collection_modifyitems(config, items):
     """Mark the measured-slow tests (tests/slow_tests.txt, every test
     whose call time was >= 3 s on a quiet 4-core run) as `slow`, which
     pytest.ini deselects by default so the plain suite fits an external
-    verify budget. `pytest tests/ -m ''` runs everything."""
+    verify budget. `pytest tests/ -m ''` runs everything.
+
+    A list entry that matches no test would silently stop marking
+    anything, so collection fails on one: an entry whose file is gone,
+    or whose file was collected whole without a test of that id."""
     try:
         with open(_SLOW_LIST) as f:
             slow = {ln.strip() for ln in f if ln.strip() and not ln.startswith("#")}
     except OSError:
         return
+    collected = {item.nodeid for item in items}
+    files = {nodeid.split("::")[0] for nodeid in collected}
+    # files the run selected single tests from: their other tests are
+    # legitimately absent
+    picked = {
+        os.path.relpath(os.path.abspath(a.split("::")[0]), config.rootpath)
+        for a in config.args if "::" in a
+    }
+    stale = sorted(
+        nodeid for nodeid in slow - collected
+        if not os.path.exists(os.path.join(config.rootpath, nodeid.split("::")[0]))
+        or (nodeid.split("::")[0] in files and nodeid.split("::")[0] not in picked)
+    )
+    if stale:
+        raise pytest.UsageError(
+            "tests/slow_tests.txt names tests that do not exist: " + ", ".join(stale)
+        )
     for item in items:
         if item.nodeid in slow:
             item.add_marker(pytest.mark.slow)
+
+
+def pytest_terminal_summary(terminalreporter):
+    n = sum(
+        1 for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slow") is not None
+    )
+    if n:
+        terminalreporter.write_line(
+            f"{n} slow tests deselected (tests/slow_tests.txt); run them with: pytest tests/ -m ''"
+        )
 
 
 @pytest.fixture(scope="session")
