@@ -24,7 +24,7 @@ row-group min/max pruning.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -40,6 +40,10 @@ from dl_datalake_spark.lake.snapshot import (
     partition_of,
     resolve_live_files,
 )
+
+
+class _NoMatch(Exception):
+    """Internal: a DML matched no rows — abort, commit nothing."""
 
 
 class _ReplayedTxn(Exception):
@@ -345,8 +349,6 @@ class LakeWriter:
         `LakeReader.read_datasets` uses it to serve a consistent cut —
         the multi-commit is visible in all of its datasets or in none.
         """
-        from contextlib import ExitStack
-
         ts_col = _require_ts(df, "ts")
         ex, mk = exchange.upper(), market.upper()
         t = F.timestamp_millis(F.col(ts_col).cast("long"))
@@ -739,15 +741,24 @@ class LakeWriter:
         it the probe reads the dataset once to FIND touched partitions,
         but the rewrite is still bounded by the matching months.
 
-        A partition left empty by the delete is removed outright (dynamic
-        partition overwrite only replaces partitions present in the
-        output, so an emptied month must be dropped explicitly).
+        The kept rows of every touched month are written as new files
+        and the commit pins a listing without the month's old files, so
+        a partition left empty simply drops out of the snapshot (the old
+        files stay on disk as tombstones until `vacuum_tombstones`).
 
         The commit records mode="delete" with the touched partitions, so
         CDC consumers (read_changes_since) re-read exactly those months
         and recompute — which is how partition-granularity CDC propagates
         deletes without per-row change types.  A no-match delete commits
-        nothing (the claimed slot is released).
+        nothing (any claimed slot is released).
+
+        `optimistic` picks the schedule of the copy-on-write pipeline
+        (`_cow_dml`): False holds the commit claim across the probe and
+        rewrite jobs; True runs them outside the claim against a
+        captured snapshot and validates under the claim, raising
+        ConcurrentWriteConflict when a commit that landed mid-job
+        touched the rewritten months.  A legacy dataset (no pinned
+        listing) always takes the claimed schedule.
 
         Returns a WriteResult whose `rows` is the DELETED row count.
         The reference has no row-level delete at all (only whole-dataset
@@ -767,135 +778,6 @@ class LakeWriter:
             raise ValueError(f"unknown delete strategy {strategy!r} (rewrite|dv)")
         k = key.normalized()
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        if optimistic and resolve_live_files(self.fs, self.dataset_path(k)) is not None:
-            # the fast path is earned: legacy datasets (no pinned
-            # listing) fall through to the claimed path below, same
-            # rule as write_ohlc(optimistic=True)
-            return self._delete_where_optimistic(k, pred, months, commit_meta)
-
-        class _NoMatch(Exception):
-            pass
-
-        log = self.commit_log(k)
-        payload = {"mode": "delete", **(commit_meta or {})}
-        path = self.dataset_path(k)
-        try:
-            with log.transaction(timeout=self.commit_timeout_s, payload=payload) as meta:
-                existing = self._read_existing(k)
-                if existing is None:
-                    raise _NoMatch
-                if months:
-                    scan_pred = F.lit(False)
-                    for y, m in months:
-                        scan_pred = scan_pred | (
-                            (F.col("year") == int(y)) & (F.col("month") == int(m))
-                        )
-                    existing = existing.where(scan_pred)
-                # one probe pass finds the touched partitions AND the
-                # delete count (partition-pruned when `months` is given;
-                # otherwise a scan that reads but never rewrites)
-                probe = (
-                    existing.where(pred)
-                    .groupBy("year", "month")
-                    .agg(F.count(F.lit(1)).alias("n_del"))
-                    .collect()
-                )
-                if not probe:
-                    raise _NoMatch
-                touched = sorted((int(r["year"]), int(r["month"])) for r in probe)
-                rows_deleted = int(sum(r["n_del"] for r in probe))
-
-                month_pred = F.lit(False)
-                for y, m in touched:
-                    month_pred = month_pred | (
-                        (F.col("year") == y) & (F.col("month") == m)
-                    )
-                if self.emit_cdf:
-                    # pre-image of the purged rows, written BEFORE the
-                    # copy-on-write overwrite drops their files
-                    deleted = existing.where(month_pred).where(
-                        F.coalesce(pred, F.lit(False))
-                    ).withColumn("_change_type", F.lit("delete"))
-                    meta["cdf_bytes"] = self._write_cdf(
-                        k, meta["version"], deleted
-                    )
-                    meta["cdf"] = True
-                # keep = NOT TRUE (NULL predicate rows survive, like SQL)
-                kept = existing.where(month_pred).where(
-                    ~F.coalesce(pred, F.lit(False))
-                )
-                # MVCC copy-on-write: APPEND the kept rows as new files,
-                # then pin a live list excluding every old file of the
-                # touched months. The deleted rows vanish from the
-                # snapshot instantly; their files stay on disk as
-                # tombstones (a concurrent reader pinned to the previous
-                # commit still scans them) until vacuum_tombstones
-                # reclaims them past the retention horizon. An emptied
-                # partition simply has no files in the list — no
-                # directory surgery.
-                pre_live = resolve_live_files(self.fs, path)
-                on_disk = set(list_data_files(self.fs, path))
-                kept = kept.persist()
-                try:
-                    kept_any = kept.limit(1).count() > 0
-                    if kept_any:
-                        # per-dataset staging, same shared-_temporary
-                        # rationale as _write_locked's data write
-                        spec = log.partition_spec_at(None)
-                        (
-                            self._with_spec_cols(
-                                self._to_physical(kept, log), spec
-                            ).sortWithinPartitions("ts")
-                            .drop(
-                                "exchange", "market", "symbol",
-                                "data_type", "period",
-                            )
-                            .write.partitionBy(*spec)
-                            .option("compression", "snappy")
-                            .mode("append")
-                            .parquet(path)
-                        )
-                finally:
-                    kept.unpersist()
-                added = [
-                    f for f in list_data_files(self.fs, path) if f not in on_disk
-                ]
-                base_live = pre_live if pre_live is not None else sorted(on_disk)
-                t_set = set(touched)
-                new_live = sorted(
-                    {f for f in base_live if partition_of(f) not in t_set}.union(added)
-                )
-                meta.update(
-                    rows=rows_deleted,
-                    partitions=[list(p) for p in touched],
-                    files=new_live,
-                )
-                fstats, cstats = self._added_file_stats(path, added, "ts")
-                if fstats:
-                    meta["file_stats"] = fstats
-                if cstats:
-                    meta["col_stats"] = cstats
-        except _NoMatch:
-            return WriteResult(path=path, time_from=None, time_to=None, rows=0, partitions=[])
-        # incremental catalog refresh: a delete only removes rows, so
-        # the prior entry's count adjusts by the delta and its (widen-
-        # only) time range stands — no dataset rescan
-        return self._refresh_manifest_result(
-            k, path, rows_deleted, touched, delta_rows=-rows_deleted
-        )
-
-    def _delete_where_optimistic(
-        self, k: DatasetKey, pred, months, commit_meta
-    ) -> WriteResult:
-        """Copy-on-write DELETE through `_optimistic_dml`: the probe and
-        the kept-rows rewrite run OUTSIDE the commit claim against the
-        captured snapshot, so appenders to other months never queue
-        behind a long purge (VERDICT r11 #1 — Delta's
-        ConcurrentDeleteRead).  Identical row semantics to the claimed
-        path (NULL-predicate rows survive; emptied months drop from the
-        pinned listing); a commit that lands mid-job and touches the
-        read months raises ConcurrentWriteConflict with the dataset
-        untouched."""
 
         def compute(existing, snap):
             if existing is None:
@@ -927,16 +809,14 @@ class LakeWriter:
                 "rows": rows_deleted,
             }
 
-        res = self._optimistic_dml(
-            k, "delete", compute, commit_meta, read_set="rows"
-        )
-        path = self.dataset_path(k)
-        if res is None:
-            return WriteResult(
-                path=path, time_from=None, time_to=None, rows=0, partitions=[]
-            )
+        res = self._cow_dml(k, "delete", compute, commit_meta, optimistic=optimistic)
+        if not res.partitions:
+            return res  # no match: nothing committed
+        # incremental catalog refresh: a delete only removes rows, so
+        # the prior entry's count adjusts by the delta and its (widen-
+        # only) time range stands — no dataset rescan
         return self._refresh_manifest_result(
-            k, path, res.rows, [tuple(p) for p in res.partitions],
+            k, res.path, res.rows, [tuple(p) for p in res.partitions],
             delta_rows=-res.rows,
         )
 
@@ -967,10 +847,6 @@ class LakeWriter:
         have no snapshot to anchor positions to)."""
         k = key.normalized()
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-
-        class _NoMatch(Exception):
-            pass
-
         log = self.commit_log(k)
         payload = {"mode": "delete-dv", **(commit_meta or {})}
         path = self.dataset_path(k)
@@ -1075,7 +951,6 @@ class LakeWriter:
 
         Returns {dataset rel path: WriteResult} with the shared `txid`."""
         import uuid as _uuid
-        from contextlib import ExitStack
 
         from dl_datalake_spark.lake.multilog import MultiCommitLog
         from dl_datalake_spark.lake.paths import dataset_rel_path
@@ -1174,6 +1049,13 @@ class LakeWriter:
         rows emit ``update_postimage``, deleted rows a ``delete``
         pre-image, inserted rows ``insert``.
 
+        `optimistic` picks the schedule of the copy-on-write pipeline
+        (`_cow_dml`): False runs the join and rewrite under the commit
+        claim; True runs them outside it against a captured snapshot
+        and validates the read months (the source batch's, or every
+        target month under `full_scan`) under the claim.  A legacy
+        dataset always takes the claimed schedule.
+
         Returns a WriteResult whose `rows` is inserted+updated+deleted;
         the commit records the per-action counts
         (``merge_inserted/merge_updated/merge_deleted``)."""
@@ -1223,261 +1105,16 @@ class LakeWriter:
             else when_not_matched_insert
         )
 
-        class _NoMatch(Exception):
-            pass
-
         log = self.commit_log(k)
-        payload = {"mode": "merge", **(commit_meta or {})}
-        path = self.dataset_path(k)
         _require_ts(source, "ts")
         # persist: the duplicate-key check, the months collect, and the
         # outer-join build all consume the same source lineage — an
         # expensive upstream plan must not recompute three times
         src = self._partitioned(source, k, "ts").persist()
-        dup = (
-            src.groupBy(*on_cols)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .where(F.col("n") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            src.unpersist()
-            raise ValueError(
-                f"merge source has multiple rows for key "
-                f"{[dup[0][c] for c in on_cols]} — deduplicate the source "
-                f"first (Delta raises the same way)"
-            )
-        if optimistic and resolve_live_files(self.fs, path) is not None:
-            # join + rewrite outside the claim (legacy datasets without
-            # a pinned listing fall through to the claimed path)
-            try:
-                return self._merge_into_optimistic(
-                    k, src, on_cols, upd, del_cond, ins_cond,
-                    commit_meta, full_scan,
-                )
-            finally:
-                src.unpersist()
-        try:
-            with log.transaction(timeout=self.commit_timeout_s, payload=payload) as meta:
-                months = [
-                    (int(r["year"]), int(r["month"]))
-                    for r in src.select("year", "month").distinct().collect()
-                ]
-                if not months:
-                    raise _NoMatch
-                existing = self._read_existing(k)
-                if full_scan and "ts" not in on_cols and existing is not None:
-                    # partition-unbounded match: the rewrite spans every
-                    # target partition (kept_t re-emits all unmatched
-                    # rows) plus the batch's own months
-                    t_months = [
-                        (int(r["year"]), int(r["month"]))
-                        for r in existing.select("year", "month")
-                        .distinct()
-                        .collect()
-                    ]
-                    months = sorted(set(months) | set(t_months))
-                    t_df = existing
-                else:
-                    month_pred = F.lit(False)
-                    for y, m in months:
-                        month_pred = month_pred | (
-                            (F.col("year") == y) & (F.col("month") == m)
-                        )
-                    t_df = (
-                        existing.where(month_pred) if existing is not None else None
-                    )
-                s_df = src.withColumn("_s1", F.lit(1))
-                if t_df is None:
-                    joined = None
-                else:
-                    joined = (
-                        t_df.withColumn("_t1", F.lit(1))
-                        .alias("t")
-                        .join(
-                            s_df.alias("s"),
-                            [F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}")) for c in on_cols],
-                            "full_outer",
-                        )
-                        .persist()
-                    )
-                try:
-                    if joined is None:
-                        matched_n = deleted_n = 0
-                        # alias "s" here too: insert conditions are
-                        # documented as expressions over s (an empty
-                        # target must not crash "s.price > 0")
-                        ins = (
-                            s_df.alias("s").where(
-                                ins_cond if isinstance(ins_cond, Column) else F.lit(bool(ins_cond))
-                            )
-                            .drop("_s1")
-                        )
-                        inserted_n = ins.count()
-                        if inserted_n == 0:
-                            raise _NoMatch
-                        out = ins
-                        changed = ins
-                        cdf = (
-                            out.withColumn("_change_type", F.lit("insert"))
-                            if self.emit_cdf
-                            else None
-                        )
-                    else:
-                        is_m = F.col("t._t1").isNotNull() & F.col("s._s1").isNotNull()
-                        is_t = F.col("t._t1").isNotNull() & F.col("s._s1").isNull()
-                        is_s = F.col("t._t1").isNull() & F.col("s._s1").isNotNull()
-                        dele = (
-                            is_m & F.coalesce(del_cond, F.lit(False))
-                            if del_cond is not None
-                            else F.lit(False)
-                        )
-                        insc = (
-                            ins_cond
-                            if isinstance(ins_cond, Column)
-                            else F.lit(bool(ins_cond))
-                        )
-                        counts = joined.agg(
-                            F.sum(F.when(is_m & ~dele & F.lit(upd is not None), 1).otherwise(0)).alias("u"),
-                            F.sum(F.when(dele, 1).otherwise(0)).alias("d"),
-                            F.sum(F.when(is_s & F.coalesce(insc, F.lit(False)), 1).otherwise(0)).alias("i"),
-                        ).collect()[0]
-                        matched_n = int(counts["u"] or 0)
-                        deleted_n = int(counts["d"] or 0)
-                        inserted_n = int(counts["i"] or 0)
-                        if matched_n + deleted_n + inserted_n == 0:
-                            raise _NoMatch
-                        t_cols = [c for c in t_df.columns]
-                        s_cols = [c for c in src.columns]
-                        kept_t = joined.where(is_t).select(
-                            *[F.col(f"t.{c}").alias(c) for c in t_cols]
-                        )
-                        if upd == "*":
-                            upd_map = {
-                                c: F.col(f"s.{c}") for c in s_cols if c not in on_cols
-                            }
-                        else:
-                            upd_map = dict(upd or {})
-                        merged = joined.where(is_m & ~dele).select(
-                            *[
-                                (upd_map[c] if c in upd_map else F.col(f"t.{c}")).alias(c)
-                                for c in t_cols
-                            ]
-                        )
-                        ins = joined.where(is_s & F.coalesce(insc, F.lit(False))).select(
-                            *[F.col(f"s.{c}").alias(c) for c in s_cols]
-                        )
-                        out = kept_t.unionByName(merged, allowMissingColumns=True)
-                        out = out.unionByName(ins, allowMissingColumns=True)
-                        changed = merged.unionByName(ins, allowMissingColumns=True)
-                        if self.emit_cdf:
-                            parts = []
-                            if upd is not None:
-                                parts.append(
-                                    joined.where(is_m & ~dele).select(
-                                        *[
-                                            (upd_map[c] if c in upd_map else F.col(f"t.{c}")).alias(c)
-                                            for c in t_cols
-                                        ]
-                                    ).withColumn("_change_type", F.lit("update_postimage"))
-                                )
-                            if del_cond is not None:
-                                parts.append(
-                                    joined.where(dele)
-                                    .select(*[F.col(f"t.{c}").alias(c) for c in t_cols])
-                                    .withColumn("_change_type", F.lit("delete"))
-                                )
-                            parts.append(
-                                ins.withColumn("_change_type", F.lit("insert"))
-                            )
-                            cdf = parts[0]
-                            for p in parts[1:]:
-                                cdf = cdf.unionByName(p, allowMissingColumns=True)
-                        else:
-                            cdf = None
-                    # DML gate BEFORE the CDF write: a rejected merge
-                    # must not leave a change-feed dir claiming rows it
-                    # never wrote, and the gate's lossless upcasts must
-                    # reach the feed too (CDF consumers see the same
-                    # column types as the data files of this commit)
-                    out = self._enforce_dml_contract(
-                        out, log, f"merge_into {k.symbol}", post_only=changed
-                    )
-                    if cdf is not None:
-                        meta["cdf_bytes"] = self._write_cdf(
-                            k, meta["version"], self._align_cdf_types(cdf, log)
-                        )
-                        meta["cdf"] = True
-                    pre_live = resolve_live_files(self.fs, path)
-                    on_disk = set(list_data_files(self.fs, path))
-                    spec = log.partition_spec_at(None)
-                    (
-                        self._with_spec_cols(self._to_physical(out, log), spec)
-                        .sortWithinPartitions("ts")
-                        .drop("exchange", "market", "symbol", "data_type", "period")
-                        .write.partitionBy(*spec)
-                        .option("compression", "snappy")
-                        .mode("append")
-                        .parquet(path)
-                    )
-                finally:
-                    if joined is not None:
-                        joined.unpersist()
-                added = [
-                    f for f in list_data_files(self.fs, path) if f not in on_disk
-                ]
-                base_live = pre_live if pre_live is not None else sorted(on_disk - set(added))
-                t_set = set(months)
-                new_live = sorted(
-                    {f for f in base_live if partition_of(f) not in t_set}.union(added)
-                )
-                total = matched_n + deleted_n + inserted_n
-                meta.update(
-                    rows=total,
-                    partitions=[list(p) for p in sorted(months)],
-                    files=new_live,
-                    merge_inserted=inserted_n,
-                    merge_updated=matched_n,
-                    merge_deleted=deleted_n,
-                )
-                fstats, cstats = self._added_file_stats(path, added, "ts")
-                if fstats:
-                    meta["file_stats"] = fstats
-                if cstats:
-                    meta["col_stats"] = cstats
-        except _NoMatch:
-            return WriteResult(path=path, time_from=None, time_to=None, rows=0, partitions=[])
-        finally:
-            src.unpersist()
-        return self._refresh_manifest_result(
-            k, path, total, sorted(months),
-            delta_rows=inserted_n - deleted_n,
-            batch_bounds=self._stats_bounds(fstats),
-        )
-
-    def _merge_into_optimistic(
-        self, k: DatasetKey, src: DataFrame, on_cols: list[str], upd,
-        del_cond, ins_cond, commit_meta, full_scan: bool,
-    ) -> WriteResult:
-        """MERGE through `_optimistic_dml` (VERDICT r11 #1): the
-        full-outer join, action counts, and post-image assembly all run
-        outside the claim against the captured snapshot — identical
-        frame semantics to the claimed `merge_into` body (`src` arrives
-        partitioned, persisted, and duplicate-checked).  Read months =
-        the source batch's months (full_scan widens to every target
-        month), so a commit landing mid-job into any of them conflicts
-        loudly."""
-        log = self.commit_log(k)
+        joins: list[DataFrame] = []
         counts: dict[str, int] = {}
-        pinned: list[DataFrame] = []
 
         def compute(existing, snap):
-            # a conflicted retry re-enters here: the previous attempt's
-            # pinned join is dead weight in executor storage — release
-            # it before building this attempt's
-            while pinned:
-                pinned.pop().unpersist()
             months = [
                 (int(r["year"]), int(r["month"]))
                 for r in src.select("year", "month").distinct().collect()
@@ -1485,6 +1122,9 @@ class LakeWriter:
             if not months:
                 return None
             if full_scan and "ts" not in on_cols and existing is not None:
+                # partition-unbounded match: the rewrite spans every
+                # target partition (kept_t re-emits all unmatched rows)
+                # plus the batch's own months
                 t_months = [
                     (int(r["year"]), int(r["month"]))
                     for r in existing.select("year", "month").distinct().collect()
@@ -1502,11 +1142,14 @@ class LakeWriter:
                 ins_cond if isinstance(ins_cond, Column) else F.lit(bool(ins_cond))
             )
             if t_df is None:
+                # alias "s" here too: insert conditions are documented
+                # as expressions over s (an empty target must not crash
+                # "s.price > 0")
                 ins = s_df.alias("s").where(insc).drop("_s1")
                 inserted_n = ins.count()
                 if inserted_n == 0:
                     return None
-                counts.update(i=inserted_n, u=0, d=0)
+                counts.update(i=inserted_n, d=0)
                 out = self._enforce_dml_contract(
                     ins, log, f"merge_into {k.symbol}", post_only=ins
                 )
@@ -1527,10 +1170,8 @@ class LakeWriter:
                     },
                 }
             # persist: the counts agg, kept_t/merged/ins staging union,
-            # and each CDF part all consume this join — the claimed
-            # path pins the identical join (writer.py:1303) for the
-            # same reason; without it the target scan + full-outer
-            # join recomputes ~5x
+            # and each CDF part all consume this join; without it the
+            # target scan + full-outer join recomputes ~5x
             joined = (
                 t_df.withColumn("_t1", F.lit(1))
                 .alias("t")
@@ -1544,7 +1185,7 @@ class LakeWriter:
                 )
                 .persist()
             )
-            pinned.append(joined)
+            joins.append(joined)
             is_m = F.col("t._t1").isNotNull() & F.col("s._s1").isNotNull()
             is_t = F.col("t._t1").isNotNull() & F.col("s._s1").isNull()
             is_s = F.col("t._t1").isNull() & F.col("s._s1").isNotNull()
@@ -1567,7 +1208,7 @@ class LakeWriter:
             inserted_n = int(agg["i"] or 0)
             if matched_n + deleted_n + inserted_n == 0:
                 return None
-            counts.update(i=inserted_n, u=matched_n, d=deleted_n)
+            counts.update(i=inserted_n, d=deleted_n)
             t_cols = list(t_df.columns)
             s_cols = list(src.columns)
             kept_t = joined.where(is_t).select(
@@ -1596,16 +1237,7 @@ class LakeWriter:
                 parts = []
                 if upd is not None:
                     parts.append(
-                        joined.where(is_m & ~dele)
-                        .select(
-                            *[
-                                (
-                                    upd_map[c] if c in upd_map else F.col(f"t.{c}")
-                                ).alias(c)
-                                for c in t_cols
-                            ]
-                        )
-                        .withColumn("_change_type", F.lit("update_postimage"))
+                        merged.withColumn("_change_type", F.lit("update_postimage"))
                     )
                 if del_cond is not None:
                     parts.append(
@@ -1617,6 +1249,11 @@ class LakeWriter:
                 cdf = parts[0]
                 for p in parts[1:]:
                     cdf = cdf.unionByName(p, allowMissingColumns=True)
+            # DML gate BEFORE the CDF write: a rejected merge must not
+            # leave a change-feed dir claiming rows it never wrote, and
+            # the gate's lossless upcasts must reach the feed too (CDF
+            # consumers see the same column types as the data files of
+            # this commit)
             out = self._enforce_dml_contract(
                 out, log, f"merge_into {k.symbol}", post_only=changed
             )
@@ -1635,24 +1272,30 @@ class LakeWriter:
             }
 
         try:
-            res = self._optimistic_dml(
-                k, "merge", compute, commit_meta, read_set="rows"
+            dup = (
+                src.groupBy(*on_cols)
+                .agg(F.count(F.lit(1)).alias("n"))
+                .where(F.col("n") > 1)
+                .limit(1)
+                .collect()
             )
+            if dup:
+                raise ValueError(
+                    f"merge source has multiple rows for key "
+                    f"{[dup[0][c] for c in on_cols]} — deduplicate the source "
+                    f"first (Delta raises the same way)"
+                )
+            res = self._cow_dml(k, "merge", compute, commit_meta, optimistic=optimistic)
         finally:
-            for df_ in pinned:
+            for df_ in joins:
                 df_.unpersist()
-        path = self.dataset_path(k)
-        if res is None:
-            return WriteResult(
-                path=path, time_from=None, time_to=None, rows=0, partitions=[]
-            )
-        bounds = (
-            (res.time_from, res.time_to) if res.time_from is not None else None
-        )
+            src.unpersist()
+        if not res.partitions:
+            return res  # no match: nothing committed
         return self._refresh_manifest_result(
-            k, path, res.rows, [tuple(p) for p in res.partitions],
-            delta_rows=counts.get("i", 0) - counts.get("d", 0),
-            batch_bounds=bounds,
+            k, res.path, res.rows, [tuple(p) for p in res.partitions],
+            delta_rows=counts["i"] - counts["d"],
+            batch_bounds=self._stats_bounds(res.file_stats),
         )
 
     _UPDATE_FORBIDDEN = ("exchange", "market", "symbol", "data_type", "period", "year", "month")
@@ -1704,6 +1347,13 @@ class LakeWriter:
         write cost is O(matched rows), not O(touched partitions), the
         right trade for surgical fixes on a 100 TB dataset.
 
+        `optimistic` (rewrite only) picks the schedule of the
+        copy-on-write pipeline (`_cow_dml`): False holds the commit
+        claim across the probe and rewrite jobs; True runs them outside
+        it against a captured snapshot and validates the READ months
+        under the claim (a ts move's destination months only gain
+        files).  A legacy dataset always takes the claimed schedule.
+
         CDF convention: matched rows are emitted as `update_postimage`;
         a row whose ts CHANGED additionally emits a `delete` pre-image
         at the old ts (so ts-keyed feed folding reproduces the move).
@@ -1733,126 +1383,6 @@ class LakeWriter:
             return self._update_where_dv(k, sets, pred, months, commit_meta)
         if strategy != "rewrite":
             raise ValueError(f"unknown update strategy {strategy!r} (rewrite|dv)")
-        if optimistic and resolve_live_files(self.fs, self.dataset_path(k)) is not None:
-            return self._update_where_optimistic(k, sets, pred, months, commit_meta)
-
-        class _NoMatch(Exception):
-            pass
-
-        log = self.commit_log(k)
-        payload = {"mode": "update", **(commit_meta or {})}
-        path = self.dataset_path(k)
-        try:
-            with log.transaction(timeout=self.commit_timeout_s, payload=payload) as meta:
-                existing = self._read_existing(k)
-                if existing is None:
-                    raise _NoMatch
-                if months:
-                    scan_pred = F.lit(False)
-                    for y, m in months:
-                        scan_pred = scan_pred | (
-                            (F.col("year") == int(y)) & (F.col("month") == int(m))
-                        )
-                    existing = existing.where(scan_pred)
-                matched = F.coalesce(pred, F.lit(False))
-                probe = (
-                    existing.where(matched)
-                    .groupBy("year", "month")
-                    .agg(F.count(F.lit(1)).alias("n_upd"))
-                    .collect()
-                )
-                if not probe:
-                    raise _NoMatch
-                touched = sorted((int(r["year"]), int(r["month"])) for r in probe)
-                rows_updated = int(sum(r["n_upd"] for r in probe))
-
-                month_pred = F.lit(False)
-                for y, m in touched:
-                    month_pred = month_pred | (
-                        (F.col("year") == y) & (F.col("month") == m)
-                    )
-                spec = log.partition_spec_at(None)
-                updated = self._apply_assignments(
-                    existing.where(month_pred), sets, matched, spec
-                )
-                # DML gate: schema exactness over the written frame,
-                # CHECK expectations over just the transformed rows
-                updated = self._enforce_dml_contract(
-                    updated,
-                    log,
-                    f"update_where {k.symbol}",
-                    post_only=self._apply_assignments(
-                        existing.where(month_pred).where(matched), sets,
-                        F.lit(True), spec,
-                    ),
-                    assigned_types=self._assignment_types(existing, sets),
-                )
-                if self.emit_cdf:
-                    # the feed carries the same types as this commit's
-                    # data files (the gate's lossless upcasts included)
-                    meta["cdf_bytes"] = self._write_cdf(
-                        k,
-                        meta["version"],
-                        self._align_cdf_types(
-                            self._update_cdf_rows(
-                                existing.where(month_pred), matched, sets, spec
-                            ),
-                            log,
-                        ),
-                    )
-                    meta["cdf"] = True
-                pre_live = resolve_live_files(self.fs, path)
-                on_disk = set(list_data_files(self.fs, path))
-                (
-                    self._with_spec_cols(self._to_physical(updated, log), spec)
-                    .sortWithinPartitions("ts")
-                    .drop("exchange", "market", "symbol", "data_type", "period")
-                    .write.partitionBy(*spec)
-                    .option("compression", "snappy")
-                    .mode("append")
-                    .parquet(path)
-                )
-                added = [
-                    f for f in list_data_files(self.fs, path) if f not in on_disk
-                ]
-                base_live = pre_live if pre_live is not None else sorted(on_disk)
-                t_set = set(touched)
-                new_live = sorted(
-                    {f for f in base_live if partition_of(f) not in t_set}.union(added)
-                )
-                all_parts = sorted(
-                    t_set | ({partition_of(f) for f in added} - {(None, None)})
-                )
-                meta.update(
-                    rows=rows_updated,
-                    partitions=[list(p) for p in all_parts],
-                    files=new_live,
-                )
-                fstats, cstats = self._added_file_stats(path, added, "ts")
-                if fstats:
-                    meta["file_stats"] = fstats
-                if cstats:
-                    meta["col_stats"] = cstats
-        except _NoMatch:
-            return WriteResult(path=path, time_from=None, time_to=None, rows=0, partitions=[])
-        # incremental catalog refresh: updates keep the row count and
-        # can only EXTEND the range (ts moves ride the added files'
-        # stats) — no dataset rescan
-        return self._refresh_manifest_result(
-            k, path, rows_updated, touched,
-            delta_rows=0, batch_bounds=self._stats_bounds(fstats),
-        )
-
-    def _update_where_optimistic(
-        self, k: DatasetKey, sets: dict, pred, months, commit_meta
-    ) -> WriteResult:
-        """Copy-on-write UPDATE through `_optimistic_dml` (VERDICT r11
-        #1): probe + rewrite run outside the claim against the captured
-        snapshot.  Same semantics as the claimed path — assignments
-        evaluate against pre-update rows, a `ts` assignment MOVES rows
-        (the destination months only gain files, so only the READ
-        months join the conflict set), CDF carries update_postimage
-        plus delete pre-images for moved rows."""
         log = self.commit_log(k)
 
         def compute(existing, snap):
@@ -1876,6 +1406,8 @@ class LakeWriter:
             # already in hand from the captured contract, no listing
             spec = tuple(snap["contract"][4])
             updated = self._apply_assignments(scan.where(mp), sets, matched, spec)
+            # DML gate: schema exactness over the written frame, CHECK
+            # expectations over just the transformed rows
             updated = self._enforce_dml_contract(
                 updated,
                 log,
@@ -1885,6 +1417,8 @@ class LakeWriter:
                 ),
                 assigned_types=self._assignment_types(existing, sets),
             )
+            # the feed carries the same types as this commit's data
+            # files (the gate's lossless upcasts included)
             cdf = (
                 self._align_cdf_types(
                     self._update_cdf_rows(scan.where(mp), matched, sets, spec),
@@ -1900,20 +1434,15 @@ class LakeWriter:
                 "rows": rows_updated,
             }
 
-        res = self._optimistic_dml(
-            k, "update", compute, commit_meta, read_set="rows"
-        )
-        path = self.dataset_path(k)
-        if res is None:
-            return WriteResult(
-                path=path, time_from=None, time_to=None, rows=0, partitions=[]
-            )
-        bounds = (
-            (res.time_from, res.time_to) if res.time_from is not None else None
-        )
+        res = self._cow_dml(k, "update", compute, commit_meta, optimistic=optimistic)
+        if not res.partitions:
+            return res  # no match: nothing committed
+        # incremental catalog refresh: updates keep the row count and
+        # can only EXTEND the range (ts moves ride the added files'
+        # stats) — no dataset rescan
         return self._refresh_manifest_result(
-            k, path, res.rows, [tuple(p) for p in res.partitions],
-            delta_rows=0, batch_bounds=bounds,
+            k, res.path, res.rows, [tuple(p) for p in res.partitions],
+            delta_rows=0, batch_bounds=self._stats_bounds(res.file_stats),
         )
 
     def _enforce_dml_contract(
@@ -2127,9 +1656,6 @@ class LakeWriter:
         """Merge-on-read UPDATE: deletion-vector the matched rows' old
         copies, append their post-images — O(matched rows) of write,
         no partition rewrite (`update_where(strategy='dv')`)."""
-        class _NoMatch(Exception):
-            pass
-
         log = self.commit_log(k)
         payload = {"mode": "update-dv", **(commit_meta or {})}
         path = self.dataset_path(k)
@@ -2613,7 +2139,6 @@ class LakeWriter:
         whole restore commits, so a torn crash never leaves the catalog
         advertising an invisible restore."""
         import uuid as _uuid
-        from contextlib import ExitStack
 
         from dl_datalake_spark.lake.multilog import MultiCommitLog
         from dl_datalake_spark.lake.paths import dataset_rel_path, key_from_rel_path
@@ -3648,10 +3173,10 @@ class LakeWriter:
         """`_read_existing` evaluated at a CAPTURED snapshot version:
         the pinned listing `live` (= files_at(rv)), that version's
         deletion vectors, and that version's contract (logical names,
-        widened types, retired columns excluded).  This is what an
-        optimistic DML's pre-claim compute phase reads — resolving any
-        of the three at head instead would let a commit that lands
-        mid-job slip past `_validate_concurrent` (the same capture
+        widened types, retired columns excluded).  This is what
+        `_cow_dml`'s compute phase reads — on the optimistic schedule,
+        resolving any of the three at head instead would let a commit
+        that lands mid-job slip past `_validate_concurrent` (the same capture
         discipline `_write_optimistic_append` documents for rv/contract).
         Tombstone retention keeps the listed files on disk for the whole
         job (vacuum_tombstones' horizon), exactly as it does for any
@@ -3670,7 +3195,7 @@ class LakeWriter:
             log, self.fs, version=rv, logical=logical,
         )
 
-    def _optimistic_dml(
+    def _cow_dml(
         self,
         key: DatasetKey,
         mode: str,
@@ -3678,34 +3203,38 @@ class LakeWriter:
         commit_meta: dict | None = None,
         read_set: str = "rows",
         physical: bool = False,
-    ) -> WriteResult | None:
-        """Partition-disjoint optimistic COPY-ON-WRITE DML — the
-        round-11 staging+validate protocol (`_write_optimistic_append`)
-        extended from blind appends to delete/update/merge/compact
-        (Delta's ConcurrentDeleteRead/ConcurrentAppend model).  Without
-        this, a long-running GDPR purge or compaction holds the dataset
-        claim across its whole Spark job and every appender
-        re-serializes behind it.
+        optimistic: bool = True,
+    ) -> WriteResult:
+        """The one COPY-ON-WRITE DML pipeline (delete/update/merge/
+        compact): read a snapshot, stage the post-image and change feed
+        under `_staging_<token>` / `_cdf/_staging_<token>` (token-unique
+        final names, heartbeat-touched), move them in under the claim
+        and commit add/remove actions (Delta's protocol).  The two
+        schedules differ only in WHEN the claim is taken:
 
-        Protocol:
-        1. capture the snapshot: rv, contract AT rv, pinned listing AT
-           rv (then read data through `_read_pinned_at` only);
-        2. run `compute(existing)` — every probe/rewrite Spark job —
-           OUTSIDE any claim; stage the post-image under
-           `_staging_<token>` (token-unique final names) and the change
-           feed under `_cdf/_staging_<token>`, both heartbeat-touched;
-        3. claim; replay every commit in (rv, claimed v) through
-           `_validate_concurrent(read_set=...)` — conflicts raise
-           ConcurrentWriteConflict with the tree untouched;
-        4. move the staged files in (milliseconds), finalize a
-           REBASABLE delta: files_add = staged, files_remove = the
-           rv-live files of the READ months.
+        - optimistic (`optimistic=True`): capture the snapshot (rv,
+          contract AT rv, pinned listing AT rv) -> compute -> stage ->
+          claim -> replay every commit in (rv, claimed v) through
+          `_validate_concurrent(read_set=...)` (conflicts raise
+          ConcurrentWriteConflict with the tree untouched) -> move in.
+          Every Spark job runs OUTSIDE the claim, so appenders to other
+          months never queue behind a long purge or compaction; the
+          commit is a REBASABLE delta (files_add = staged, files_remove
+          = the rv-live files of the read months).
+        - claimed (`optimistic=False`): claim -> capture the snapshot at
+          v - 1 -> compute -> stage -> move in.  Under a held claim no
+          commit lands between snapshot and finalize, so there is
+          nothing to validate; the commit hands the log the full
+          `files` listing (`CommitLog._encode_files` delta-encodes it).
+          A LEGACY dataset (no pinned listing) always takes this
+          schedule: the on-disk listing is the base and data is read
+          through `_read_existing`.
 
         `compute(existing, snap)` gets the snapshot frame (logical
-        names, DVs applied; None when the snapshot is pinned-empty)
-        plus `snap = {"rv", "live", "contract"}` (compaction plans from
-        the listing, not the rows) and returns None for "no match,
-        commit nothing", else a dict:
+        names, DVs applied; None when the snapshot is empty) plus
+        `snap = {"rv", "live", "contract"}` (compaction plans from the
+        listing, not the rows) and returns None for "no match, commit
+        nothing", else a dict:
           out          post-image rows of every read month (None = all
                        rows deleted); LOGICAL names unless `physical`
           cdf          change-feed rows (written iff emit_cdf), or None
@@ -3716,90 +3245,106 @@ class LakeWriter:
           cdc_partitions  override for the commit's `partitions` key
                        (compaction records [] so CDC consumers skip a
                        byte-identical rewrite), optional
-        Returns the WriteResult, or None for a no-match compute.
+        Returns the WriteResult; a no-match commits nothing (any claim
+        is released) and returns rows=0, partitions=[].
         """
         import uuid as _uuid
 
         k = key.normalized()
         log = self.commit_log(k)
         ds_path = self.dataset_path(k)
-        rv = log.latest_version()
-        base_contract = log.contract_at(rv)
-        live = log.files_at(rv)
-        if live is None:
-            raise ValueError(
-                f"optimistic DML needs a commit-pinned snapshot; {ds_path} "
-                "has no trustworthy pinned file list (legacy dataset) — "
-                "run the claimed path (optimistic=False) or write through "
-                "LakeWriter first"
-            )
-        base_cmap = base_contract[1]
-        plan = compute(
-            self._read_pinned_at(k, log, rv, live),
-            {"rv": rv, "live": live, "contract": base_contract},
-        )
-        if plan is None:
-            return None
-        read_months = sorted((int(y), int(m)) for y, m in plan["read_months"])
-        r_set = set(read_months)
+        if optimistic:
+            rv = log.latest_version()
+            live = log.files_at(rv) if rv >= 0 else None
+            # a legacy dataset has no pinned listing to rebase against
+            optimistic = live is not None
         token = _uuid.uuid4().hex
         staging = f"{ds_path}/_staging_{token}"
         cdf_staging = f"{ds_path}/{self.CDF_DIR}/_staging_{token}"
+        payload = {
+            "mode": mode,
+            **({"optimistic": True} if optimistic else {}),
+            **(commit_meta or {}),
+        }
         added: list[str] = []
         moved: list[str] = []
-        fstats: dict = {}
-        cstats: dict = {}
         stop_beat = self._staging_heartbeat(staging, cdf_staging)
         try:
-            out = plan.get("out")
-            if out is not None:
-                frame = out if physical else self._rename_frame(out, base_cmap)
-                base_spec = tuple(base_contract[4])
-                (
-                    self._with_spec_cols(frame, base_spec)
-                    .sortWithinPartitions("ts")
-                    .drop("exchange", "market", "symbol", "data_type", "period")
-                    .write.partitionBy(*base_spec)
-                    .option("compression", "snappy")
-                    .mode("append")
-                    .parquet(staging)
+            with ExitStack() as claim:
+                if not optimistic:
+                    meta = claim.enter_context(
+                        log.transaction(timeout=self.commit_timeout_s, payload=payload)
+                    )
+                    rv = meta["version"] - 1
+                    live = log.files_at(rv) if rv >= 0 else None
+                base_contract = log.contract_at(rv)
+                base_cmap = base_contract[1]
+                if live is None:
+                    live = list_data_files(self.fs, ds_path)
+                    existing = self._read_existing(k)
+                else:
+                    existing = self._read_pinned_at(k, log, rv, live)
+                plan = compute(
+                    existing, {"rv": rv, "live": live, "contract": base_contract}
                 )
-            cdf = plan.get("cdf") if self.emit_cdf else None
-            if cdf is not None:
-                cdf.write.mode("overwrite").option(
-                    "compression", "snappy"
-                ).parquet(cdf_staging)
-            # final token-unique names while still in staging: the
-            # stats jobs below run pre-claim against rel paths that
-            # already equal what the commit will pin
-            for rel in list_data_files(self.fs, staging):
-                d, _, name = rel.rpartition("/")
-                dst_rel = (
-                    f"{d}/{token[:12]}-{name}" if d else f"{token[:12]}-{name}"
+                if plan is None:
+                    raise _NoMatch
+                r_set = {(int(y), int(m)) for y, m in plan["read_months"]}
+                out = plan.get("out")
+                if out is not None:
+                    # DML post-images take the writer's file layout (the
+                    # bucket sets of the point-lookup index stay tight);
+                    # compaction already chose its own file count
+                    frame = (
+                        out.sortWithinPartitions("ts")
+                        if physical
+                        else self._rename_frame(
+                            self._cluster_output(
+                                out, "ts", ["year", "month"], len(r_set)
+                            ),
+                            base_cmap,
+                        )
+                    )
+                    base_spec = tuple(base_contract[4])
+                    (
+                        self._with_spec_cols(frame, base_spec)
+                        .drop("exchange", "market", "symbol", "data_type", "period")
+                        .write.partitionBy(*base_spec)
+                        .option("compression", "snappy")
+                        .mode("append")
+                        .parquet(staging)
+                    )
+                cdf = plan.get("cdf") if self.emit_cdf else None
+                if cdf is not None:
+                    cdf.write.mode("overwrite").option(
+                        "compression", "snappy"
+                    ).parquet(cdf_staging)
+                # final token-unique names while still in staging: the
+                # stats jobs below run against rel paths that already
+                # equal what the commit will pin
+                for rel in list_data_files(self.fs, staging):
+                    d, _, name = rel.rpartition("/")
+                    dst_rel = (
+                        f"{d}/{token[:12]}-{name}" if d else f"{token[:12]}-{name}"
+                    )
+                    self.fs.rename(f"{staging}/{rel}", f"{staging}/{dst_rel}")
+                    added.append(dst_rel)
+                write_months = r_set | (
+                    {partition_of(f) for f in added} - {(None, None)}
                 )
-                self.fs.rename(f"{staging}/{rel}", f"{staging}/{dst_rel}")
-                added.append(dst_rel)
-            write_months = r_set | (
-                {partition_of(f) for f in added} - {(None, None)}
-            )
-            fstats, cstats = self._added_file_stats(
-                staging, added, "ts", column_map=base_cmap
-            )
-            fbuckets, bspec = self._added_file_buckets(
-                staging, added, column_map=base_cmap
-            )
-            fbytes = {rel: self.fs.getsize(f"{staging}/{rel}") for rel in added}
-            files_remove = [f for f in live if partition_of(f) in r_set]
+                fstats, cstats = self._added_file_stats(
+                    staging, added, "ts", column_map=base_cmap
+                )
+                fbuckets, bspec = self._added_file_buckets(
+                    staging, added, column_map=base_cmap
+                )
+                fbytes = {rel: self.fs.getsize(f"{staging}/{rel}") for rel in added}
+                removed = [f for f in live if partition_of(f) in r_set]
 
-            payload = {
-                "mode": mode,
-                "optimistic": True,
-                **(plan.get("extra_meta") or {}),
-                **(commit_meta or {}),
-            }
-            with log.transaction(
-                timeout=self.commit_timeout_s, payload=payload
-            ) as meta:
+                if optimistic:
+                    meta = claim.enter_context(
+                        log.transaction(timeout=self.commit_timeout_s, payload=payload)
+                    )
                 v = meta["version"]
                 for iv in range(rv + 1, v):
                     e = log.committed_entry(iv)
@@ -3823,17 +3368,22 @@ class LakeWriter:
                     meta["cdf"] = True
                     meta["cdf_bytes"] = self._dir_bytes(cdf_dst)
                 cdc_parts = plan.get("cdc_partitions")
+                for mk, mv in (plan.get("extra_meta") or {}).items():
+                    meta.setdefault(mk, mv)  # commit_meta keys win
                 meta.update(
                     rows=int(plan["rows"]),
-                    partitions=(
-                        [list(p) for p in sorted(write_months)]
-                        if cdc_parts is None
-                        else [list(p) for p in cdc_parts]
-                    ),
-                    files_add=added,
-                    files_remove=files_remove,
+                    partitions=[
+                        list(p)
+                        for p in sorted(
+                            write_months if cdc_parts is None else cdc_parts
+                        )
+                    ],
                     file_bytes=fbytes,
                 )
+                if optimistic:
+                    meta.update(files_add=added, files_remove=removed)
+                else:
+                    meta["files"] = sorted(set(live).difference(removed).union(added))
                 if fstats:
                     meta["file_stats"] = fstats
                 if cstats:
@@ -3842,9 +3392,9 @@ class LakeWriter:
                     meta["file_buckets"] = fbuckets
                 if bspec:
                     meta["bucket_by"] = bspec
-        except BaseException:
-            # conflict/timeout/crash: whatever reached the tree is
-            # uncommitted (invisible) — remove it with the staging
+        except BaseException as exc:
+            # conflict/timeout/crash/no match: whatever reached the tree
+            # is uncommitted (invisible) — remove it with the staging
             stop_beat()
             for rel in moved:
                 try:
@@ -3853,6 +3403,10 @@ class LakeWriter:
                     pass
             self.fs.rmtree(staging)
             self.fs.rmtree(cdf_staging)
+            if isinstance(exc, _NoMatch):
+                return WriteResult(
+                    path=ds_path, time_from=None, time_to=None, rows=0, partitions=[]
+                )
             raise
         stop_beat()
         bounds = self._stats_bounds(fstats) or (None, None)
@@ -3878,8 +3432,8 @@ class LakeWriter:
         """OPTIMISTIC small-file compaction of one dataset's month
         partitions (Delta's ``OPTIMIZE ... WHERE``): each fragmented
         month's live files are rewritten into fresh ts-sorted
-        token-named files, staged and validated through
-        `_optimistic_dml` — the rewrite job never holds the commit
+        token-named files, staged and validated through the optimistic
+        schedule of `_cow_dml` — the rewrite job never holds the commit
         claim, so concurrent APPENDS keep landing at full rate (their
         files are new and provably commute; `read_set="files"`), while
         a concurrent rewrite of the same months conflicts loudly.  The
@@ -3942,16 +3496,10 @@ class LakeWriter:
                 "cdc_partitions": [],
             }
 
-        res = self._optimistic_dml(
+        return self._cow_dml(
             k, "compact", compute, commit_meta,
             read_set="files", physical=True,
         )
-        if res is None:
-            return WriteResult(
-                path=self.dataset_path(k), time_from=None, time_to=None,
-                rows=0, partitions=[],
-            )
-        return res
 
     def _write_locked(
         self, df: DataFrame, key: DatasetKey, mode: str, cdf_version: int | None = None,

@@ -1,6 +1,6 @@
 """Round-12 additions: optimistic partition-disjoint DML
-(delete/update/merge staged OUTSIDE the commit claim,
-writer._optimistic_dml), optimistic per-dataset compaction
+(delete/update/merge staged OUTSIDE the commit claim, the optimistic
+schedule of writer._cow_dml), optimistic per-dataset compaction
 (writer.compact_partitions), and the SQL write surface
 (INSERT INTO / CTAS / UPDATE / DELETE on `lake.<t>`, lake/sql_catalog).
 
@@ -60,8 +60,8 @@ WHERE (k.b IS NOT NULL AND ABS(k.c) % 2 = 0) OR p.b IS NOT NULL
 """,
 )
 def events_optimistic_dml(spark: SparkSession, sf_dir: str):
-    """OPTIMISTIC PARTITION-DISJOINT DML (writer._optimistic_dml,
-    round 12 — VERDICT r11 #1): a DELETE, an UPDATE, and a MERGE each
+    """OPTIMISTIC PARTITION-DISJOINT DML (writer._cow_dml's optimistic
+    schedule, round 12 — VERDICT r11 #1): a DELETE, an UPDATE, and a MERGE each
     run their probe/rewrite Spark jobs OUTSIDE the commit claim
     (staging + validate, Delta's ConcurrentDeleteRead) and the
     read-back must equal the bucket arithmetic exactly:

@@ -118,3 +118,44 @@ def test_bucket_by_rejects_cluster_by_combo(tmp_path, spark):
         )
     with pytest.raises(ValueError, match="n_buckets"):
         LakeWriter(spark, str(tmp_path / "c"), bucket_by={"a": 1})
+
+
+def _claimed_dml(verb, w, spark):
+    if verb == "delete":
+        return w.delete_where(KEY, "value < 10", optimistic=False)
+    if verb == "update":
+        return w.update_where(
+            KEY, {"value": "value + 1000"}, "user_id = 3", optimistic=False
+        )
+    src = spark.createDataFrame(
+        [(T0 + i * 1000, 42, -1.0) for i in range(0, 600, 7)]
+        + [(T0 + 10_000_000 + i, 42, 5.0) for i in range(3)],
+        "ts long, user_id long, value double",
+    )
+    return w.merge_into(
+        KEY, src, on="ts", when_matched_update="*", optimistic=False
+    )
+
+
+@pytest.mark.parametrize("verb", ["delete", "update", "merge"])
+def test_claimed_dml_keeps_bucket_index(lake, spark, verb):
+    """A claimed copy-on-write rewrite records bucket sets for every
+    file it adds, so point lookups keep pruning after the DML."""
+    w, r, _ = lake
+    w.write_ticks(_rows(spark), KEY)
+    log = CommitLog(w.dataset_path(KEY), fs=w.fs)
+    before = set(log.latest_files())
+    assert _claimed_dml(verb, w, spark).rows > 0
+    live = set(log.latest_files())
+    added = live - before
+    assert added
+    e = log.committed_entry(log.latest_version())
+    assert added <= set(e["file_buckets"]["user_id"])
+
+    full = r.read_dataset(KEY)
+    pt = r.read_dataset(KEY, point={"user_id": 42})
+    assert len(pt.inputFiles()) < len(full.inputFiles()) == len(live)
+    cols = ["ts", "user_id", "value"]
+    expect = sorted(full.where(F.col("user_id") == 42).select(*cols).collect())
+    assert sorted(pt.select(*cols).collect()) == expect
+    assert expect

@@ -107,15 +107,13 @@ def test_true_conflict_aborts_loudly_and_cleanly(spark, tmp_path):
         CommitLog.latest_version = orig_latest
     got = LakeReader(spark, base).read_dataset(KEY)
     assert got.count() == 2  # 5 - 3 deleted; loser's 5 rows never landed
-    # loser's moved files were cleaned out of the tree (optimistic adds
-    # are token-prefixed; the delete's plain-named tombstones rightfully
-    # remain until vacuum)
-    import re
-
+    # loser's moved files were cleaned out of the tree: the disk holds
+    # exactly the winner's live files plus the delete's tombstones (the
+    # version-0 files, which rightfully remain until vacuum)
     from dl_datalake_spark.lake.snapshot import list_data_files
 
-    on_disk = list_data_files(w.fs, w.dataset_path(KEY))
-    assert not [f for f in on_disk if re.search(r"/[0-9a-f]{12}-part-", f)]
+    on_disk = set(list_data_files(w.fs, w.dataset_path(KEY)))
+    assert on_disk == set(log.latest_files()) | set(log.files_at(0))
     assert not [d for d in w.fs.listdir(w.dataset_path(KEY)) if d.startswith("_staging")]
 
 

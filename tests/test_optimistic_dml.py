@@ -321,31 +321,72 @@ def test_optimistic_dv_strategy_refused(spark, tmp_path):
         w.update_where(KEY, {"price": "0"}, "price < 3", strategy="dv", optimistic=True)
 
 
-def test_optimistic_dml_falls_back_on_legacy_dataset(spark, tmp_path):
+@pytest.mark.parametrize("optimistic", [False, True])
+@pytest.mark.parametrize("verb", ["delete", "update", "merge"])
+def test_optimistic_dml_falls_back_on_legacy_dataset(
+    spark, tmp_path, verb, optimistic
+):
     """A dataset with no pinned listing (external writer) takes the
-    claimed path under optimistic=True — correctness first."""
+    claimed schedule under either `optimistic` value — correctness
+    first: the on-disk listing is the base, and the first DML pins it
+    minus the rewritten month plus the files it added."""
     base = str(tmp_path / "lake")
     w = LakeWriter(spark, base)
     ds = w.dataset_path(KEY)
-    _mk(spark, [(JAN + i * 60000, float(i)) for i in range(6)]).withColumn(
-        "year", F.lit(2023)
-    ).withColumn("month", F.lit(1)).write.partitionBy("year", "month").parquet(ds)
+    jan = [(JAN + i * 60000, float(i)) for i in range(6)]
+    feb = [(FEB + i * 60000, 100.0 + i) for i in range(3)]
+    for month, rows in ((1, jan), (2, feb)):
+        _mk(spark, rows).withColumn("year", F.lit(2023)).withColumn(
+            "month", F.lit(month)
+        ).write.mode("append").partitionBy("year", "month").parquet(ds)
     assert resolve_live_files(w.fs, ds) is None
-    res = w.delete_where(KEY, "price < 2", optimistic=True)
+    on_disk = set(list_data_files(w.fs, ds))
+    if verb == "delete":
+        res = w.delete_where(KEY, "price < 2", optimistic=optimistic)
+        expect = jan[2:] + feb
+    elif verb == "update":
+        res = w.update_where(
+            KEY, {"price": "price + 0.5"}, "price < 2", optimistic=optimistic
+        )
+        expect = [(t, p + 0.5) for t, p in jan[:2]] + jan[2:] + feb
+    else:
+        src = _mk(spark, [(JAN, -1.0), (JAN + 99 * 60000, 9.0)])
+        res = w.merge_into(
+            KEY, src, when_matched_update="*", optimistic=optimistic
+        )
+        expect = [(JAN, -1.0)] + jan[1:] + [(JAN + 99 * 60000, 9.0)] + feb
     assert res.rows == 2
-    assert len(_rows(spark, base)) == 4
+    assert _rows(spark, base) == sorted(expect)
+    pinned = set(resolve_live_files(w.fs, ds))
+    added = pinned - on_disk
+    untouched = {f for f in on_disk if partition_of(f) != (2023, 1)}
+    assert added and pinned == untouched | added
+    e = w.commit_log(KEY).committed_entry(w.commit_log(KEY).latest_version())
+    assert "files" in e and "optimistic" not in e
 
 
-def test_optimistic_dml_contract_gate_still_applies(spark, tmp_path):
+@pytest.mark.parametrize("optimistic", [False, True])
+def test_optimistic_dml_contract_gate_still_applies(spark, tmp_path, optimistic):
+    """A rejected update or merge commits nothing and leaves no staged
+    data or change-feed dir on either schedule."""
     from dl_datalake_spark.lake.schema import SchemaContractError
 
     base = str(tmp_path / "lake")
-    w = _seed(spark, base)
+    w = _seed(spark, base, emit_cdf=True)
     v = w.commit_log(KEY).latest_version()
     with pytest.raises(SchemaContractError):
         w.update_where(
-            KEY, {"price": "CAST(price AS string)"}, "price < 3", optimistic=True
+            KEY, {"price": "CAST(price AS string)"}, "price < 3",
+            optimistic=optimistic,
         )
+    # a merge never evolves the schema: an inserted new column is refused
+    src = spark.createDataFrame(
+        [(JAN + 99 * 60000, 9.0, "x")], "ts long, price double, note string"
+    )
+    with pytest.raises(SchemaContractError, match="note"):
+        w.merge_into(KEY, src, optimistic=optimistic)
     assert w.commit_log(KEY).latest_version() == v
     ds = w.dataset_path(KEY)
-    assert not [d for d in w.fs.listdir(ds) if d.startswith("_staging")]
+    for d in (ds, f"{ds}/{w.CDF_DIR}"):
+        names = w.fs.listdir(d) if w.fs.exists(d) else []
+        assert not [n for n in names if n.startswith("_staging")]
