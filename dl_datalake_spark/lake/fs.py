@@ -122,6 +122,14 @@ class Filesystem:
     def read_bytes(self, path: str) -> bytes:
         raise NotImplementedError
 
+    def read_tail(self, path: str, n: int) -> bytes:
+        """The last `n` bytes of a file (all of it when shorter) — what a
+        Parquet footer read needs.  Default: a whole-file `read_bytes`,
+        so every subclass and delegating wrapper works unchanged; stores
+        with ranged reads override it."""
+        data = self.read_bytes(path)
+        return data[max(0, len(data) - n):]
+
     def write_bytes_atomic(self, path: str, data: bytes) -> None:
         """Write via tmp file + rename so readers never see a partial file."""
         raise NotImplementedError
@@ -184,6 +192,11 @@ class LocalFS(Filesystem):
 
     def read_bytes(self, path: str) -> bytes:
         with open(_local(path), "rb") as fh:
+            return fh.read()
+
+    def read_tail(self, path: str, n: int) -> bytes:
+        with open(_local(path), "rb") as fh:
+            fh.seek(max(0, os.fstat(fh.fileno()).st_size - n))
             return fh.read()
 
     def write_bytes_atomic(self, path: str, data: bytes) -> None:
@@ -349,6 +362,24 @@ class HadoopFS(Filesystem):
             ioutils = self._jvm.org.apache.commons.io.IOUtils
             out.extend(ioutils.toByteArray(stream))
             return bytes(out)
+        finally:
+            stream.close()
+
+    def read_tail(self, path: str, n: int) -> bytes:
+        p = self._p(path)
+        try:
+            size = int(self._fs.getFileStatus(p).getLen())
+            stream = self._fs.open(p)
+        except Exception as e:  # noqa: BLE001
+            self._raise_or_oserror(e, path)
+        try:
+            k = min(n, size)
+            stream.seek(size - k)
+            # read into a JVM-side byte[] and return it: py4j hands a
+            # byte[] back as Python bytes in one transfer (an array
+            # passed IN would be copied, never filled)
+            ioutils = self._jvm.org.apache.commons.io.IOUtils
+            return bytes(ioutils.toByteArray(stream, k))
         finally:
             stream.close()
 

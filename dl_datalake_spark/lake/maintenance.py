@@ -404,7 +404,7 @@ def compact(
             # fresh data-skipping stats for the rewritten files: without
             # them every post-compaction bounded read would scan the
             # whole dataset again (compacted files are exactly the ones
-            # a deployment reads most) — one ts-only scan of the rewrite
+            # a deployment reads most) — read from the rewrite's footers
             fstats, colstats = {}, {}
             if compacted_files and ds in data_datasets:
                 from dl_datalake_spark.lake.snapshot import added_file_stats
@@ -423,17 +423,13 @@ def compact(
                         }
                     )
                 )
-                try:
-                    got = added_file_stats(
-                        spark,
-                        {f"{out}/{rel}": compacted_files},
-                        extra_cols=idx_cols,
-                    )
-                    fstats, cmap = got if idx_cols else (got, {})
-                    fstats = fstats.get(f"{out}/{rel}", {})
-                    colstats = cmap.get(f"{out}/{rel}", {}) if idx_cols else {}
-                except Exception:
-                    fstats, colstats = {}, {}  # non-ts dataset: skipping stays disabled
+                # a dataset without a ts column simply gets no ts entries
+                got = added_file_stats(
+                    fs, {f"{out}/{rel}": compacted_files}, extra_cols=idx_cols
+                )
+                fstats, cmap = got if idx_cols else (got, {})
+                fstats = fstats.get(f"{out}/{rel}", {})
+                colstats = cmap.get(f"{out}/{rel}", {})
             if in_place:
                 # rides the held transaction: finalizes (after the swap)
                 # as this dataset's compact commit in the swapped-in tree
@@ -703,9 +699,7 @@ def recluster(
         # under the LOGICAL keys reader bounds look up (the same
         # translation LakeWriter._added_file_stats applies)
         phys_cols = tuple(to_physical.get(c, c) for c in cols)
-        fstats, cstats = added_file_stats(
-            spark, {ds: added}, "ts", extra_cols=phys_cols
-        )
+        fstats, cstats = added_file_stats(fs, {ds: added}, "ts", extra_cols=phys_cols)
         meta.update(partitions=[], files=added)
         if fstats.get(ds):
             meta["file_stats"] = fstats[ds]

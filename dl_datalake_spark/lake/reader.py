@@ -205,7 +205,14 @@ class LakeReader:
                 def _in(s, blo, bhi):
                     if not s or s[0] is None or s[1] is None:
                         return True  # unknown range: must scan
-                    return (bhi is None or s[0] <= bhi) and (
+                    if s[0] != s[0] or s[1] != s[1]:
+                        # a NaN stat (older commits recorded Spark's
+                        # min/max, which orders NaN above every number):
+                        # no usable order, must scan
+                        return True
+                    # Spark's `x <= NaN` holds for every number: a NaN
+                    # upper bound prunes nothing
+                    return (bhi is None or bhi != bhi or s[0] <= bhi) and (
                         blo is None or s[1] >= blo
                     )
 

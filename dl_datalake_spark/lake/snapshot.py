@@ -37,6 +37,9 @@ metadata noise next to any scan.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+
 from dl_datalake_spark.lake.fs import Filesystem
 
 
@@ -82,57 +85,99 @@ def resolve_live_files(fs: Filesystem, dataset_path: str) -> list[str] | None:
     return log.latest_files()
 
 
+#: speculative tail read: a Spark-written footer is a few KiB, so one
+#: read almost always covers it; a larger footer costs one exact re-read
+FOOTER_READ = 64 * 1024
+
+
+def _footer(fs: Filesystem, path: str):
+    """Parquet footer metadata of `path`, read on the driver through `fs`
+    (one tail read, a second only when the footer outgrows the first)."""
+    tail = fs.read_tail(path, FOOTER_READ)
+    if len(tail) < 12 or tail[-4:] != b"PAR1":
+        raise OSError(f"not a parquet file: {path}")
+    need = int.from_bytes(tail[-8:-4], "little") + 8
+    if need > len(tail):
+        tail = fs.read_tail(path, need)
+    # magic + footer + length + magic is a complete file to the parser:
+    # only the footer is decoded, never the (absent) column chunks
+    return pq.ParquetFile(pa.BufferReader(b"PAR1" + tail[-need:])).metadata
+
+
+#: Parquet (physical, logical) types whose statistics decode to JSON-
+#: native values (int, float, bool, str); dates, decimals, timestamps
+#: (INT96 has no usable stats at all) and raw binary do not
+_NATIVE = {
+    ("BOOLEAN", "NONE"), ("INT32", "NONE"), ("INT32", "INT"),
+    ("INT64", "NONE"), ("INT64", "INT"), ("FLOAT", "NONE"),
+    ("DOUBLE", "NONE"), ("BYTE_ARRAY", "STRING"),
+}
+
+
+def _column_range(md, j: int) -> list | None:
+    """[min, max] of flat column `j` over every row group, or None when
+    no sound JSON-native range exists: the type is not JSON-native, a
+    row group with values has no min/max (parquet-java drops stats over
+    4 KiB), or a bound is NaN.  All-null row groups contribute
+    nothing."""
+    col = md.schema.column(j)
+    if (col.physical_type, col.logical_type.type) not in _NATIVE:
+        return None
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        if rg.num_rows == 0:
+            continue
+        st = rg.column(j).statistics
+        if st is not None and st.has_null_count and st.null_count == rg.num_rows:
+            continue
+        if st is None or not st.has_min_max:
+            return None
+        mn, mx = st.min, st.max
+        if mn != mn or mx != mx:
+            return None
+        lo = mn if lo is None else min(lo, mn)
+        hi = mx if hi is None else max(hi, mx)
+    return None if lo is None else [lo, hi]
+
+
 def added_file_stats(
-    spark,
+    fs: Filesystem,
     added_by_path: dict[str, list[str]],
     ts_col: str = "ts",
     extra_cols: tuple[str, ...] = (),
 ):
-    """Per-file [min_ts, max_ts] for freshly written files, across many
-    datasets in ONE Spark job — the data-skipping stats a commit records
-    so time-bounded reads can drop non-overlapping files before the scan
-    (`LakeReader._scan_paths`).  One stats-columns-only scan of exactly
-    the named files: cost ∝ the batch, never the dataset.  Returns
-    {dataset path: {rel path: [min_ts, max_ts]}}.
+    """Per-file [min_ts, max_ts] for freshly written files — the
+    data-skipping stats a commit records so time-bounded reads can drop
+    non-overlapping files before the scan (`LakeReader._scan_paths`).
+    Read from the files' Parquet FOOTERS on the driver through `fs`
+    (Delta's write-time stats: the writer already stored per-row-group
+    min/max), so the call starts no Spark job and costs one small tail
+    read per file.  Returns {dataset path: {rel path: [min_ts, max_ts]}}.
 
-    `extra_cols` generalizes the index beyond ts (VERDICT r7 #2): the
-    SAME job also aggregates per-file [min, max] of each named column
-    present in the schema, and the return becomes a pair
+    `extra_cols` generalizes the index beyond ts (VERDICT r7 #2): each
+    named column's per-file [min, max] is read from the same footers,
+    and the return becomes a pair
     (ts_stats, {dataset path: {col: {rel path: [min, max]}}}) — the
     shape `CommitLog.col_stats` serves so a scan bounded on a clustered
-    column prunes files before any footer RPC.  Non-JSON-native values
-    (timestamps, decimals) are dropped per column: the file is merely
-    scanned, never skipped wrongly."""
-    from pyspark.sql import functions as F
-
-    pairs = [(p, f) for p, fs_ in added_by_path.items() for f in fs_]
-    if not pairs:
-        return ({}, {}) if extra_cols else {}
-    df = spark.read.parquet(*[f"{p}/{f}" for p, f in pairs])
-    cols = [c for c in extra_cols if c in df.columns and c != ts_col]
-    aggs = [F.min(ts_col).alias("t0"), F.max(ts_col).alias("t1")]
-    for i, c in enumerate(cols):
-        aggs.append(F.min(c).alias(f"n{i}"))
-        aggs.append(F.max(c).alias(f"x{i}"))
-    rows = df.groupBy(F.col("_metadata.file_path").alias("fp")).agg(*aggs).collect()
+    column prunes files before any footer RPC.  A (file, column) whose
+    footer gives no sound range (`_column_range`) gets no entry: the
+    file is merely scanned, never skipped wrongly."""
     out: dict[str, dict[str, list]] = {}
     out_cols: dict[str, dict[str, dict[str, list]]] = {}
-
-    def _plain(v):
-        return v is None or isinstance(v, (int, float, str, bool))
-
-    for r in rows:
-        # file_path is an absolute URI; dynamic-partition jobs reuse one
-        # basename across partition dirs, so match the full dataset-dir +
-        # relative suffix, never the name alone
-        hit = next(((p, f) for p, f in pairs if r["fp"].endswith(f"{p}/{f}")), None)
-        if hit is None:
-            continue
-        out.setdefault(hit[0], {})[hit[1]] = [r["t0"], r["t1"]]
-        for i, c in enumerate(cols):
-            mn, mx = r[f"n{i}"], r[f"x{i}"]
-            if _plain(mn) and _plain(mx):
-                out_cols.setdefault(hit[0], {}).setdefault(c, {})[hit[1]] = [mn, mx]
+    cols = tuple(c for c in extra_cols if c != ts_col)
+    for p, rels in added_by_path.items():
+        for rel in rels:
+            md = _footer(fs, f"{p}/{rel}")
+            idx = {md.schema.column(j).path: j for j in range(md.num_columns)}
+            if ts_col in idx:
+                r = _column_range(md, idx[ts_col])
+                if r is not None:
+                    out.setdefault(p, {})[rel] = r
+            for c in cols:
+                r = _column_range(md, idx[c]) if c in idx else None
+                if r is not None:
+                    out_cols.setdefault(p, {}).setdefault(c, {})[rel] = r
     return (out, out_cols) if extra_cols else out
 
 

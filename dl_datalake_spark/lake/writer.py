@@ -132,8 +132,9 @@ class LakeWriter:
 
         `stats_cols` extends the commit-level data-skipping index beyond
         ts: every commit also records per-added-file [min, max] of these
-        columns (same single stats job), so `LakeReader` scans bounded
-        on them prune files BEFORE any parquet footer read — pair with
+        columns (read from the same footers, no Spark job), so
+        `LakeReader` scans bounded on them prune files BEFORE any
+        parquet footer read at scan time — pair with
         `maintenance.recluster` (Z-order) to make the ranges tight.
         Columns absent from a batch's schema are skipped per commit.
 
@@ -624,12 +625,15 @@ class LakeWriter:
                     t_set = {(y, m) for y, m in parts_by_symbol.get(s, [])}
                     kept = [f for f in base_live if partition_of(f) not in t_set]
                     new_live[s] = sorted(set(kept).union(added))
-            # per-file ts (+ stats_cols) stats for reader file skipping —
-            # ONE job for every dataset's added files, same discipline as
-            # the write
-            stats_by_path, cstats_by_path = self._added_file_stats_multi(
-                {ds_paths[s]: a for s, a in added_by_symbol.items() if a}, ts_col
+            # per-file ts (+ stats_cols) stats for reader file skipping,
+            # from the added files' footers — no Spark job per dataset
+            got = added_file_stats(
+                self.fs,
+                {ds_paths[s]: a for s, a in added_by_symbol.items() if a},
+                ts_col,
+                tuple(self.stats_cols),
             )
+            stats_by_path, cstats_by_path = got if self.stats_cols else (got, {})
 
             # Manifest registration happens while the dataset locks are
             # still held — same data-then-manifest ordering contract as
@@ -2671,18 +2675,18 @@ class LakeWriter:
         spec: tuple = ("year", "month"),
     ) -> DataFrame:
         t = F.timestamp_millis(F.col(ts_col).cast("long"))
-        out = (
-            df.withColumn("exchange", F.lit(key.exchange))
-            .withColumn("market", F.lit(key.market))
-            .withColumn("symbol", F.lit(key.symbol))
-            .withColumn("data_type", F.lit(key.data_type))
-            .withColumn("period", F.lit(key.period))
-            .withColumn("year", F.year(t))
-            .withColumn("month", F.month(t))
-        )
+        cols = {
+            "exchange": F.lit(key.exchange),
+            "market": F.lit(key.market),
+            "symbol": F.lit(key.symbol),
+            "data_type": F.lit(key.data_type),
+            "period": F.lit(key.period),
+            "year": F.year(t),
+            "month": F.month(t),
+        }
         if "day" in spec:
-            out = out.withColumn("day", F.dayofmonth(t))
-        return out
+            cols["day"] = F.dayofmonth(t)
+        return df.withColumns(cols)
 
     @staticmethod
     def _with_spec_cols(df: DataFrame, spec: tuple, ts_col: str = "ts") -> DataFrame:
@@ -3011,17 +3015,7 @@ class LakeWriter:
         # jobs): a concurrent vacuum must never age this staging out
         stop_beat = self._staging_heartbeat(staging, cdf_staging)
         try:
-            stats = batch.agg(
-                F.min(ts_col).alias("t0"), F.max(ts_col).alias("t1"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()[0]
-            pcounts = {
-                (int(r["year"]), int(r["month"])): int(r["n"])
-                for r in batch.groupBy("year", "month")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-                if r["year"] is not None
-            }
+            stats, pcounts = self._month_facts(batch, ts_col)
             touched = sorted(pcounts)
             out = self._layout_append(batch, ts_col, pcounts)
             (
@@ -3045,9 +3039,9 @@ class LakeWriter:
         batch.unpersist()
         try:
             # Rename IN PLACE to the final token-unique names and compute
-            # every stat from the STAGING tree — the Spark stats jobs run
-            # pre-claim, and the rel paths already equal what the commit
-            # will pin.
+            # every stat from the STAGING tree — the footer reads and the
+            # bucket-set job run pre-claim, and the rel paths already
+            # equal what the commit will pin.
             for rel in list_data_files(self.fs, staging):
                 d, _, name = rel.rpartition("/")
                 dst_rel = f"{d}/{token[:12]}-{name}" if d else f"{token[:12]}-{name}"
@@ -3320,8 +3314,8 @@ class LakeWriter:
                         "compression", "snappy"
                     ).parquet(cdf_staging)
                 # final token-unique names while still in staging: the
-                # stats jobs below run against rel paths that already
-                # equal what the commit will pin
+                # footer stats and bucket sets below are keyed by rel
+                # paths that already equal what the commit will pin
                 for rel in list_data_files(self.fs, staging):
                     d, _, name = rel.rpartition("/")
                     dst_rel = (
@@ -3545,19 +3539,12 @@ class LakeWriter:
             if emit_cdf
             else merged
         )
-        stats = data_rows.agg(
-            F.min(ts_col).alias("t0"), F.max(ts_col).alias("t1"), F.count(F.lit(1)).alias("n")
-        ).collect()[0]
-        # the batch's (year, month) set = the partitions this commit
-        # replaces (dynamic overwrite touches nothing else); bounded
-        # driver state, same cardinality the overwrite commit enumerates
-        pcounts = {
-            (int(r["year"]), int(r["month"])): int(r["n"])
-            for r in batch.groupBy("year", "month")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-            if r["year"] is not None
-        }
+        # the written rows' (year, month) set = the batch's = the
+        # partitions this commit replaces: upsert and overwrite emit rows
+        # only in the batch's months (dynamic overwrite touches nothing
+        # else); bounded driver state, same cardinality the overwrite
+        # commit enumerates
+        stats, pcounts = self._month_facts(data_rows, ts_col)
         touched = sorted(pcounts)
 
         if emit_cdf:
@@ -3654,6 +3641,35 @@ class LakeWriter:
                 metadata={"timeframe": key.period, "rows": result.rows},
             )
         return result
+
+    @staticmethod
+    def _month_facts(rows: DataFrame, ts_col: str) -> tuple[dict, dict]:
+        """One grouped aggregate over the rows a commit writes:
+        ({"t0", "t1", "n"} over ALL rows, {(year, month): rows} over the
+        dated ones) — the commit's time range, row count and per-month
+        counts from a single job on the persisted rows.  A null-month
+        group (null ts) counts toward n but touches no partition."""
+        groups = (
+            rows.groupBy("year", "month")
+            .agg(
+                F.min(ts_col).alias("t0"), F.max(ts_col).alias("t1"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            .collect()
+        )
+        t0s = [r["t0"] for r in groups if r["t0"] is not None]
+        t1s = [r["t1"] for r in groups if r["t1"] is not None]
+        stats = {
+            "t0": min(t0s) if t0s else None,
+            "t1": max(t1s) if t1s else None,
+            "n": sum(int(r["n"]) for r in groups),
+        }
+        pcounts = {
+            (int(r["year"]), int(r["month"])): int(r["n"])
+            for r in groups
+            if r["year"] is not None
+        }
+        return stats, pcounts
 
     def _layout_append(
         self, rows: DataFrame, ts_col: str, pcounts: dict
@@ -3907,52 +3923,35 @@ class LakeWriter:
         """Per-added-file [min_ts, max_ts] (plus, when `stats_cols` is
         configured, per-column [min, max]) for reader-side FILE SKIPPING
         (Delta's data-skipping stats, rel-path-keyed in the commit
-        payload).  One stats-columns-only scan of JUST the files this
-        commit added — cost proportional to the batch, never the
+        payload).  Read from the Parquet footers of JUST the files this
+        commit added (`snapshot.added_file_stats`): driver-side tail
+        reads, no Spark job, cost proportional to the batch, never the
         dataset.  A bounded read drops non-overlapping files before the
         scan even starts (`LakeReader.read_range` / column bounds);
-        files without stats (legacy/compacted) are simply scanned, so
-        skipping is always sound.  Returns (ts_stats, col_stats).
+        files without stats (legacy, or a footer without a sound range)
+        are simply scanned, so skipping is always sound.  Returns
+        (ts_stats, col_stats).
 
         Column mapping: `stats_cols` are LOGICAL names; post-rename the
-        files carry PHYSICAL ones, so the stats scan translates through
-        the dataset's map and the recorded stats stay keyed logical
-        (what reader bounds look up).  `column_map` overrides the
-        committed map — the commit that ASSIGNS a fresh physical name
-        (re-added column) must stat the files it just wrote under that
-        name, which is not committed yet."""
+        files carry PHYSICAL ones, so the footer lookup translates
+        through the dataset's map and the recorded stats stay keyed
+        logical (what reader bounds look up).  `column_map` overrides
+        the committed map — the commit that ASSIGNS a fresh physical
+        name (re-added column) must stat the files it just wrote under
+        that name, which is not committed yet."""
         cmap = (
             column_map
             if column_map is not None
             else CommitLog(ds_path, fs=self.fs).column_map_at(None)
         )
-        hit = {c: cmap[c] for c in self.stats_cols if c in cmap}
-        if not hit:
-            f, c = self._added_file_stats_multi({ds_path: added}, ts_col)
-            return f.get(ds_path, {}), c.get(ds_path, {})
         phys_cols = tuple(cmap.get(c, c) for c in self.stats_cols)
-        f, c = added_file_stats(
-            self.spark, {ds_path: added}, ts_col, extra_cols=phys_cols
-        )
+        got = added_file_stats(self.fs, {ds_path: added}, ts_col, phys_cols)
+        f, c = got if phys_cols else (got, {})
         back = {p: l for l, p in cmap.items()}
         cstats = {
             back.get(col, col): v for col, v in (c.get(ds_path) or {}).items()
         }
         return f.get(ds_path, {}), cstats
-
-    def _added_file_stats_multi(
-        self, added_by_path: dict[str, list[str]], ts_col: str
-    ) -> tuple[dict, dict]:
-        """`_added_file_stats` across many datasets in ONE Spark job
-        (write_ohlc_multi's contract: 1,000 symbols must not mean 1,000
-        jobs).  Returns ({dataset path: {rel path: [min_ts, max_ts]}},
-        {dataset path: {col: {rel path: [min, max]}}})."""
-        f_c = added_file_stats(
-            self.spark, added_by_path, ts_col, extra_cols=tuple(self.stats_cols)
-        )
-        if self.stats_cols:
-            return f_c
-        return f_c, {}
 
     def _merge_keep_last(
         self, batch: DataFrame, key: DatasetKey, ts_col: str, tag_changes: bool = False

@@ -36,7 +36,9 @@ RUNTIME_CONFS: dict[str, str] = {
     # NOT set: spark.sql.parquet.aggregatePushdown — it only engages on
     # the DSv2 read path, and moving parquet off the v1 source list
     # would change dynamic-partition-overwrite semantics the writer's
-    # upsert depends on. Bare MIN/MAX/COUNT stats reads stay row scans.
+    # upsert depends on. Commit stats need none of it: the writer reads
+    # per-file min/max from the Parquet footers on the driver
+    # (lake/snapshot.added_file_stats).
 }
 
 

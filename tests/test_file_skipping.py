@@ -86,7 +86,7 @@ def test_files_without_stats_are_scanned_not_skipped(lake, spark):
 
 
 def test_multi_write_and_delete_record_stats_too(lake, spark):
-    """write_ohlc_multi (one stats job across datasets) and delete_where
+    """write_ohlc_multi (footer stats for every dataset) and delete_where
     rewrites both feed the skipping index."""
     from pyspark.sql import functions as F
 
@@ -286,6 +286,46 @@ def test_compact_carries_col_stats_through(tmp_path, spark):
     assert live and all(rel in cstats for rel in live)
     got = reader.read_dataset(KEY, bounds={"close": (900.0, 904.0)})
     assert got.count() == 5
+
+
+def test_nan_values_never_skip_matching_rows(tmp_path, spark):
+    """Spark orders NaN above every number, so `x >= 5` matches a NaN
+    row.  A file holding {1.0, NaN} must therefore survive that bound:
+    the writer records no stats for a column with a NaN bound, and the
+    reader scans a file whose stats already on disk carry a NaN."""
+    import json
+
+    base = str(tmp_path / "base")
+    writer = LakeWriter(spark, base, stats_cols=["x"])
+    reader = LakeReader(spark, base)
+
+    def batch(t0, xs):
+        return spark.createDataFrame(
+            [(t0 + i * 60000, x) for i, x in enumerate(xs)], "ts long, x double"
+        ).coalesce(1)
+
+    writer.write_ohlc(batch(JAN1, [1.0, float("nan")]), KEY, mode="append")
+    log = writer.commit_log(KEY)
+    assert reader.read_dataset(KEY).where("x >= 5").count() == 1
+    assert reader.read_dataset(KEY, bounds={"x": (5.0, None)}).count() == 1
+    assert log.col_stats("x") == {}  # NaN bound: no entry, the file is scanned
+
+    # a commit written before the fix carries Spark's [min, max] = [1.0, NaN]
+    nan_files = log.latest_files()
+    for v in log._entries():
+        path = f"{log.log_dir}/{v:020d}.json"
+        e = json.loads(open(path).read())
+        if e.get("status") == "committed":
+            e["col_stats"] = {"x": {rel: [1.0, float("nan")] for rel in nan_files}}
+            open(path, "w").write(json.dumps(e))
+    writer.write_ohlc(batch(JAN1 + 600000, [2.0, 3.0]), KEY, mode="append")
+    stats = log.col_stats("x")
+    assert all(stats[rel][1] != stats[rel][1] for rel in nan_files)
+    assert sorted(v for rel, v in stats.items() if rel not in nan_files) == [[2.0, 3.0]]
+
+    assert reader.read_dataset(KEY, bounds={"x": (5.0, None)}).count() == 1
+    # Spark's `x <= NaN` holds for every value: a NaN upper bound prunes nothing
+    assert reader.read_dataset(KEY, bounds={"x": (None, float("nan"))}).count() == 4
 
 
 def test_property_bounded_read_always_exact(tmp_path, spark):
