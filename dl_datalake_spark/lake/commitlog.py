@@ -242,12 +242,23 @@ class CommitLog:
         data-skipping index for time-bounded reads.  Best-effort by
         design: a live file whose stats were pruned with its commit is
         merely scanned, never skipped wrongly."""
-        out: dict[str, list] = {}
+        return self.file_facts()[0]
+
+    def file_facts(self) -> tuple[dict[str, list], dict[str, int]]:
+        """`file_stats` and the per-file `file_bytes` ({rel path: bytes},
+        newest entry wins) from ONE pass over the retained entries — the
+        reader sizes its planned input from the log alone.  A live file
+        with no recorded size (its commit predates size recording or
+        was pruned) is simply absent; callers must treat that as
+        unknown, never as 0 bytes."""
+        stats: dict[str, list] = {}
+        sizes: dict[str, int] = {}
         for v in self._entries():
             e = self._read_entry(v)
             if e.get("status") == "committed":
-                out.update(e.get("file_stats") or {})
-        return out
+                stats.update(e.get("file_stats") or {})
+                sizes.update(e.get("file_bytes") or {})
+        return stats, sizes
 
     def last_txn_version(self, app_id: str) -> int:
         """Newest committed `txn.version` recorded by `app_id` (Delta's

@@ -25,7 +25,11 @@ from pyspark.sql import functions as F
 from dl_datalake_spark.lake.fs import Filesystem, get_fs, has_visible_children
 from dl_datalake_spark.lake.manifest import ManifestManager
 from dl_datalake_spark.lake.paths import PARTITION_COLS
-from dl_datalake_spark.lake.snapshot import list_data_files, resolve_live_files
+from dl_datalake_spark.lake.snapshot import (
+    file_sizes,
+    list_data_files,
+    resolve_live_files,
+)
 
 
 @dataclass
@@ -401,6 +405,7 @@ def compact(
             # files, which don't exist in the rewritten tree — a reader
             # resolving it would die on the first scan
             compacted_files = list_data_files(fs, f"{out}/{rel}")
+            fbytes = file_sizes(fs, f"{out}/{rel}", compacted_files)
             # fresh data-skipping stats for the rewritten files: without
             # them every post-compaction bounded read would scan the
             # whole dataset again (compacted files are exactly the ones
@@ -436,6 +441,8 @@ def compact(
                 metas[ds]["files"] = compacted_files
                 if fstats:
                     metas[ds]["file_stats"] = fstats
+                if fbytes:
+                    metas[ds]["file_bytes"] = fbytes
                 if colstats:
                     metas[ds]["col_stats"] = colstats
             else:
@@ -450,6 +457,8 @@ def compact(
                     payload["file_stats"] = fstats
                 if colstats:
                     payload["col_stats"] = colstats
+                if fbytes:
+                    payload["file_bytes"] = fbytes
                 with CommitLog(f"{out}/{rel}", fs=fs).transaction(
                     timeout=commit_timeout_s,
                     payload=payload,
@@ -586,11 +595,7 @@ def recluster(
     {"files_before": n, "files_after": m}."""
     from dl_datalake_spark.lake.clustering import zorder_key
     from dl_datalake_spark.lake.commitlog import CommitLog
-    from dl_datalake_spark.lake.snapshot import (
-        added_file_stats,
-        list_data_files,
-        resolve_live_files,
-    )
+    from dl_datalake_spark.lake.snapshot import added_file_stats
 
     fs = fs if fs is not None else get_fs(dataset_path, spark)
     ds = dataset_path.rstrip("/")
@@ -700,7 +705,7 @@ def recluster(
         # translation LakeWriter._added_file_stats applies)
         phys_cols = tuple(to_physical.get(c, c) for c in cols)
         fstats, cstats = added_file_stats(fs, {ds: added}, "ts", extra_cols=phys_cols)
-        meta.update(partitions=[], files=added)
+        meta.update(partitions=[], files=added, file_bytes=file_sizes(fs, ds, added))
         if fstats.get(ds):
             meta["file_stats"] = fstats[ds]
         if cstats.get(ds):

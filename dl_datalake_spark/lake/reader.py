@@ -25,7 +25,9 @@ standardized per SURVEY §7.1).
 
 from __future__ import annotations
 
+import operator
 from datetime import datetime, timezone
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -94,11 +96,13 @@ class LakeReader:
         """The commit index's bucket id for a point-lookup literal —
         computed THROUGH Spark's own xxhash64 so it matches the write
         side bit-for-bit (a reimplementation would silently diverge on
-        type widths).  One 1-row local job, memoized per literal."""
+        type widths).  Evaluated over an inline one-row table: Catalyst
+        folds the projection into a LocalRelation, so `first()` runs on
+        the driver and starts no Spark job.  Memoized per literal."""
         key = (repr(value), int(nb), dtype)
         if key not in self._bucket_memo:
             row = (
-                self.spark.range(1)
+                self.spark.sql("VALUES (0)")
                 .select(
                     F.pmod(
                         F.xxhash64(F.lit(value).cast(dtype)), F.lit(int(nb))
@@ -139,13 +143,42 @@ class LakeReader:
     def _apply_renames(df: DataFrame, back: dict) -> DataFrame:
         return df.withColumnsRenamed(back) if back else df
 
+    @staticmethod
+    def _residual(bounds: dict | None, point: dict | None) -> list:
+        """The exact row predicates behind `bounds` and `point` file
+        skipping: skipping is best-effort, these keep results exact."""
+        conds = []
+        for c, (blo, bhi) in (bounds or {}).items():
+            if blo is not None:
+                conds.append(F.col(c) >= blo)
+            if bhi is not None:
+                conds.append(F.col(c) <= bhi)
+        for c, val in (point or {}).items():
+            conds.append(F.col(c) == F.lit(val))
+        return conds
+
+    @staticmethod
+    def _where_all(df: DataFrame, conds: list) -> DataFrame:
+        """ONE `.where` over the conjunction: every `.where` call makes
+        Spark analyse a new DataFrame, so chained calls cost plan time
+        per predicate for the same optimized plan."""
+        return df.where(reduce(operator.and_, conds)) if conds else df
+
+    def _open_cost(self) -> int:
+        """`spark.sql.files.openCostInBytes` as an int, from the
+        session's SQLConf (`spark.conf.get` returns it with a unit
+        suffix, e.g. "4194304b")."""
+        return int(
+            self.spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+        )
+
     def _scan_paths(
         self,
         paths: list[str],
         ts_bounds: tuple[int | None, int | None] | None = None,
         col_bounds: dict[str, tuple] | None = None,
         points: dict | None = None,
-    ) -> DataFrame | None:
+    ) -> tuple[DataFrame | None, int | None]:
         """Snapshot-isolated scan (lake/snapshot.py): a dataset whose
         commit log pins a live file list is read as EXACTLY those files
         — the committed snapshot — never the live directory, so a scan
@@ -164,7 +197,13 @@ class LakeReader:
         generalized per-column stats (writer `stats_cols` /
         `maintenance.recluster`) — pruning happens before any parquet
         footer read, which at 1e5 files is 1e5 saved metadata RPCs.
-        Files without stats are kept, so skipping is always sound."""
+        Files without stats are kept, so skipping is always sound.
+
+        Returns (frame, planned bytes): the commit-recorded `file_bytes`
+        summed over the files left after skipping — known from the log
+        alone, no job and no listing.  None when any planned file has
+        no recorded size or a dataset falls back to the directory
+        scan."""
         from dl_datalake_spark.lake.commitlog import CommitLog
         from dl_datalake_spark.lake.snapshot import resolve_live_files
         from dl_datalake_spark.lake.spec import (
@@ -177,8 +216,10 @@ class LakeReader:
         from dl_datalake_spark.lake import dv as dvmod
 
         if not paths:
-            return None
+            return None, None
         lo, hi = ts_bounds if ts_bounds is not None else (None, None)
+        timed = lo is not None or hi is not None
+        planned: int | None = 0
         cbounds = dict(col_bounds or {})
         # per-PATH, per-SPEC-EPOCH scan groups: each dataset is read
         # under its OWN contract (widened columns, logical names,
@@ -195,11 +236,13 @@ class LakeReader:
             live = resolve_live_files(self.fs, p)
             if live is None:
                 groups.append(([p], None, [], [], None))
+                planned = None  # directory scan: no recorded sizes
                 continue
             log = CommitLog(p, fs=self.fs)
             dv_map = log.dv_at(None) if live else {}
-            if live and (lo is not None or hi is not None or cbounds):
-                stats = log.file_stats() if (lo is not None or hi is not None) else {}
+            # ts stats and sizes come from one walk of the log
+            stats, sizes = log.file_facts() if live else ({}, {})
+            if live and (timed or cbounds):
                 cstats = log.col_stats_many(list(cbounds)) if cbounds else {}
 
                 def _in(s, blo, bhi):
@@ -217,9 +260,7 @@ class LakeReader:
                     )
 
                 def _overlaps(rel: str) -> bool:
-                    if (lo is not None or hi is not None) and not _in(
-                        stats.get(rel), lo, hi
-                    ):
+                    if timed and not _in(stats.get(rel), lo, hi):
                         return False
                     return all(
                         _in(cstats[c].get(rel), blo, bhi)
@@ -246,6 +287,9 @@ class LakeReader:
                     live = [
                         rel for rel in live if rel not in fmap or b in fmap[rel]
                     ]
+            if planned is not None:
+                known = [sizes.get(rel) for rel in live]
+                planned = None if None in known else planned + sum(known)
             for rels in spec_groups(live):
                 # contract per spec group: the partition-column NAMES
                 # in the read DDL come from a representative file path,
@@ -303,12 +347,12 @@ class LakeReader:
                     .parquet(*srcs)
                 )
         if not frames:
-            return None  # pinned-empty or every file skipped by stats
+            return None, planned  # pinned-empty or every file skipped by stats
         frames = [derive_spec_cols(f, derivable) for f in frames]
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f, allowMissingColumns=True)
-        return out
+        return out, planned
 
     # -- public API ---------------------------------------------------------
 
@@ -330,10 +374,18 @@ class LakeReader:
         the residual predicate still pushes into the parquet reader for
         row-group pruning within the files that remain.  `bounds`
         ({col: (lo, hi)}) composes column-stats file skipping + the
-        residual filters on top (see `read_dataset`)."""
+        residual filters on top (see `read_dataset`).
+
+        The result is ordered by ts.  When the commit-recorded bytes of
+        the planned files sum to at most `spark.sql.files.openCostInBytes`
+        (the bytes Spark could scan in the time it takes to open one
+        more file, so splitting such an input cannot pay), it comes back
+        as ONE partition sorted in place — the whole read is one Spark
+        job.  Larger inputs, files without a recorded size and legacy
+        datasets keep the global sort (a sampling job plus a shuffle)."""
         lo = iso_to_epoch_ms(start_date) if start_date is not None else None
         hi = iso_to_epoch_ms(end_date) if end_date is not None else None
-        df = self._scan_paths(
+        df, planned = self._scan_paths(
             self._dataset_paths(
                 exchange.upper(),
                 sanitize_symbol(symbol),
@@ -348,17 +400,12 @@ class LakeReader:
         if df is None:
             return self.spark.createDataFrame([], "ts long")
         ts = F.col("ts").cast("long")
+        conds = []
         if lo is not None:
-            df = df.where(ts >= lo)
+            conds.append(ts >= lo)
         if hi is not None:
-            df = df.where(ts <= hi)
-        for c, (blo, bhi) in (bounds or {}).items():
-            if blo is not None:
-                df = df.where(F.col(c) >= blo)
-            if bhi is not None:
-                df = df.where(F.col(c) <= bhi)
-        for c, val in (point or {}).items():
-            df = df.where(F.col(c) == F.lit(val))
+            conds.append(ts <= hi)
+        conds += self._residual(bounds, point)
         # Catalyst cannot translate a raw ts bound into year=/month=
         # partition predicates, so Hive-layout pruning never fires for
         # time-range reads on its own — derive the month window here
@@ -370,10 +417,13 @@ class LakeReader:
             lin = F.col("year") * 12 + F.col("month")
             if lo is not None:
                 d = datetime.fromtimestamp(lo / 1000, tz=timezone.utc)
-                df = df.where(lin >= d.year * 12 + d.month - 1)
+                conds.append(lin >= d.year * 12 + d.month - 1)
             if hi is not None:
                 d = datetime.fromtimestamp(hi / 1000, tz=timezone.utc)
-                df = df.where(lin <= d.year * 12 + d.month + 1)
+                conds.append(lin <= d.year * 12 + d.month + 1)
+        df = self._where_all(df, conds)
+        if planned is not None and planned <= self._open_cost():
+            return df.coalesce(1).sortWithinPartitions("ts")
         return df.orderBy("ts")
 
     def read_dataset(
@@ -394,21 +444,14 @@ class LakeReader:
         predicates still run, so results are exact whether or not
         stats/buckets exist."""
         k = key.normalized()
-        df = self._scan_paths(
+        df, _ = self._scan_paths(
             self._dataset_paths(k.exchange, k.symbol, k.data_type, k.market, k.period),
             col_bounds=bounds,
             points=point,
         )
         if df is None:
             return self.spark.createDataFrame([], "ts long")
-        for c, (blo, bhi) in (bounds or {}).items():
-            if blo is not None:
-                df = df.where(F.col(c) >= blo)
-            if bhi is not None:
-                df = df.where(F.col(c) <= bhi)
-        for c, val in (point or {}).items():
-            df = df.where(F.col(c) == F.lit(val))
-        return df
+        return self._where_all(df, self._residual(bounds, point))
 
     def read_dataset_at(self, key: DatasetKey, version: int) -> DataFrame:
         """Time travel: the dataset exactly as of commit `version`
@@ -855,7 +898,9 @@ class LakeReader:
             if files is None:
                 # legacy dataset (no pinned commits) or the cut's commit
                 # was pruned: the live directory is the only truth
-                df = self._scan_paths([path] if has_visible_children(self.fs, path) else [])
+                df, _ = self._scan_paths(
+                    [path] if has_visible_children(self.fs, path) else []
+                )
             elif not files:
                 df = None
             else:
@@ -951,7 +996,7 @@ class LakeReader:
             # the full-scan fallback — a full rollup rebuild per dataset
             # at 100 TB for a maintenance op that changed no rows.
             return ChangeSet(None, latest, [], has_delete)
-        df = self._scan_paths(path) if path else None
+        df = self._scan_paths(path)[0]
         if df is None:
             # no data files left (e.g. a delete emptied the dataset) —
             # the change information still matters to delete-aware

@@ -141,6 +141,14 @@ def _column_range(md, j: int) -> list | None:
     return None if lo is None else [lo, hi]
 
 
+def file_sizes(fs: Filesystem, dataset_path: str, rels) -> dict[str, int]:
+    """{rel path: bytes} for freshly written data files — the
+    `file_bytes` every data-adding commit records.  Readers size their
+    planned input from it and streaming sources budget bytes with it,
+    both from the log alone.  One driver-side stat per file."""
+    return {rel: fs.getsize(f"{dataset_path}/{rel}") for rel in rels}
+
+
 def added_file_stats(
     fs: Filesystem,
     added_by_path: dict[str, list[str]],

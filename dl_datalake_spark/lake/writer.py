@@ -36,6 +36,7 @@ from dl_datalake_spark.lake.manifest import ManifestManager
 from dl_datalake_spark.lake.paths import PARTITION_COLS, DatasetKey
 from dl_datalake_spark.lake.snapshot import (
     added_file_stats,
+    file_sizes,
     list_data_files,
     partition_of,
     resolve_live_files,
@@ -666,6 +667,9 @@ class LakeWriter:
                     time_to=s["t1"],
                     partitions=res.partitions,
                     files=new_live[k.symbol],
+                    file_bytes=file_sizes(
+                        self.fs, ds_paths[k.symbol], added_by_symbol[k.symbol]
+                    ),
                 )
                 fstats = stats_by_path.get(ds_paths[k.symbol])
                 if fstats:
@@ -1747,6 +1751,7 @@ class LakeWriter:
                     partitions=[list(p) for p in all_parts],
                     files_add=sorted(added),
                     files_remove=[],
+                    file_bytes=file_sizes(self.fs, path, added),
                     dv=new_map,
                 )
                 fstats, cstats = self._added_file_stats(path, added, "ts")
@@ -2653,6 +2658,7 @@ class LakeWriter:
                     rows=n,
                     partitions=[list(p) for p in parts],
                     files=sorted(added),  # full rewrite: fresh pin only
+                    file_bytes=file_sizes(self.fs, path, added),
                     dv={},  # deletes materialized by the rewrite
                 )
                 fstats, cstats = self._added_file_stats(path, added, "ts")
@@ -3053,7 +3059,7 @@ class LakeWriter:
             fbuckets, bspec = self._added_file_buckets(
                 staging, added, column_map=base_cmap
             )
-            fbytes = {rel: self.fs.getsize(f"{staging}/{rel}") for rel in added}
+            fbytes = file_sizes(self.fs, staging, added)
 
             # ---- claim; validate + MOVE + finalize inside it ----------------
             # The tree mutations happen UNDER the claim: a claim-holding
@@ -3332,7 +3338,7 @@ class LakeWriter:
                 fbuckets, bspec = self._added_file_buckets(
                     staging, added, column_map=base_cmap
                 )
-                fbytes = {rel: self.fs.getsize(f"{staging}/{rel}") for rel in added}
+                fbytes = file_sizes(self.fs, staging, added)
                 removed = [f for f in live if partition_of(f) in r_set]
 
                 if optimistic:
@@ -3626,7 +3632,7 @@ class LakeWriter:
             # per-added-file byte sizes: the streaming sources' BYTE-based
             # admission control budgets a catch-up from the commit log
             # alone — no per-poll file listing
-            file_bytes={rel: self.fs.getsize(f"{ds_path}/{rel}") for rel in added},
+            file_bytes=file_sizes(self.fs, ds_path, added),
             cdf_bytes=cdf_bytes,
         )
         if self.manifest is not None:

@@ -286,10 +286,11 @@ class LakeAppendsStreamReader(DataSourceStreamReader):
                     info = replay.get(v)
                     added = info["added"] if info and info["known"] else []
                     n = len(added)
-                    # byte budget from the commit-logged per-file sizes
-                    # (Delta's maxBytesPerTrigger); commits written
-                    # before size recording contribute 0 bytes — the
-                    # count caps still bound them (documented fallback)
+                    # byte budget from the per-file sizes every
+                    # data-adding commit records in `file_bytes` (Delta's
+                    # maxBytesPerTrigger); a file whose commit predates
+                    # size recording counts 0 bytes, so only the count
+                    # caps bound it
                     fb = by_v[v].get("file_bytes") or {}
                     b = sum(int(fb.get(rel, 0)) for rel in added)
                     over_f = self.max_files > 0 and total_f + n > self.max_files

@@ -242,3 +242,37 @@ def test_appends_max_files_per_batch(tmp_path, spark):
     # commit 0 (1 file) + commit 1 (2 files) would exceed 2 -> commit 0
     # alone; commit 1 fills the next batch; commit 2 the third
     assert batches == [[0], [1], [2]]
+
+
+def test_appends_byte_budget_counts_multi_write_commits(tmp_path, spark):
+    """`max_bytes_per_batch` budgets `write_ohlc_multi` commits by their
+    real file sizes: a budget of exactly the first commit's bytes admits
+    that commit alone (a commit without recorded sizes would count 0
+    bytes and let the whole catch-up through)."""
+    import os
+
+    from dl_datalake_spark.sources.append_source import (
+        LakeAppendsStreamReader,
+        _infer_append_schema,
+    )
+
+    base = str(tmp_path / "lake")
+    w = LakeWriter(spark, base)
+    for i in range(2):
+        w.write_ohlc_multi(
+            spark.createDataFrame(
+                [(sym, T0 + i * 60000, 1.0) for sym in ("AAA", "BBB")],
+                "symbol string, ts long, close double",
+            ),
+            "SIM", mode="append",
+        )
+    key = DatasetKey("SIM", "SPOT", "AAA", "raw", "1m")
+    ds = w.dataset_path(key)
+    first = w.commit_log(key).files_at(0)
+    budget = sum(os.path.getsize(f"{ds}/{rel}") for rel in first)
+    r = LakeAppendsStreamReader(
+        {"path": ds, "max_bytes_per_batch": str(budget)}, _infer_append_schema(ds)
+    )
+    assert r.latestOffset() == {"version": 0}
+    r.commit({"version": 0})
+    assert r.latestOffset() == {"version": 1}
