@@ -154,6 +154,7 @@ def added_file_stats(
     added_by_path: dict[str, list[str]],
     ts_col: str = "ts",
     extra_cols: tuple[str, ...] = (),
+    with_rows: bool = False,
 ):
     """Per-file [min_ts, max_ts] for freshly written files — the
     data-skipping stats a commit records so time-bounded reads can drop
@@ -170,13 +171,20 @@ def added_file_stats(
     shape `CommitLog.col_stats` serves so a scan bounded on a clustered
     column prunes files before any footer RPC.  A (file, column) whose
     footer gives no sound range (`_column_range`) gets no entry: the
-    file is merely scanned, never skipped wrongly."""
+    file is merely scanned, never skipped wrongly.
+
+    `with_rows=True` also returns each file's footer `num_rows`, as a
+    triple (ts_stats, col_stats, {dataset path: {rel path: rows}}):
+    the same footer read then serves the commit's row count, time
+    range and touched months (`footer_facts`)."""
     out: dict[str, dict[str, list]] = {}
     out_cols: dict[str, dict[str, dict[str, list]]] = {}
+    out_rows: dict[str, dict[str, int]] = {}
     cols = tuple(c for c in extra_cols if c != ts_col)
     for p, rels in added_by_path.items():
         for rel in rels:
             md = _footer(fs, f"{p}/{rel}")
+            out_rows.setdefault(p, {})[rel] = int(md.num_rows)
             idx = {md.schema.column(j).path: j for j in range(md.num_columns)}
             if ts_col in idx:
                 r = _column_range(md, idx[ts_col])
@@ -186,7 +194,47 @@ def added_file_stats(
                 r = _column_range(md, idx[c]) if c in idx else None
                 if r is not None:
                     out_cols.setdefault(p, {}).setdefault(c, {})[rel] = r
+    if with_rows:
+        return out, out_cols, out_rows
     return (out, out_cols) if extra_cols else out
+
+
+def footer_facts(
+    added: list[str], num_rows: dict[str, int], ts_stats: dict[str, list]
+) -> tuple[dict, dict] | None:
+    """A commit's facts from the footers of the files it added:
+    ({"t0", "t1", "n"}, {(year, month): rows}) — n is the sum of the
+    files' `num_rows`, [t0, t1] the min/max of their ts ranges, and
+    each file's rows count toward the (year, month) of its Hive dirs
+    (`partition_of`).  A file outside the month layout (null ts, under
+    ``__HIVE_DEFAULT_PARTITION__``) counts toward n but touches no
+    month.  Returns None when a dated file with rows has no sound ts
+    range (`_column_range`): the caller must then aggregate over the
+    added files — a file with no stat must never narrow a recorded
+    range."""
+    n = 0
+    pcounts: dict[tuple[int, int], int] = {}
+    lows: list = []
+    highs: list = []
+    for rel in added:
+        k = int(num_rows[rel])
+        n += k
+        r = ts_stats.get(rel)
+        if r is not None:
+            lows.append(r[0])
+            highs.append(r[1])
+        p = partition_of(rel)
+        if k == 0 or None in p:
+            continue
+        if r is None:
+            return None
+        pcounts[p] = pcounts.get(p, 0) + k
+    stats = {
+        "t0": min(lows) if lows else None,
+        "t1": max(highs) if highs else None,
+        "n": n,
+    }
+    return stats, pcounts
 
 
 def partition_of(rel_path: str) -> tuple[int | None, int | None]:

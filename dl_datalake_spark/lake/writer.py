@@ -37,6 +37,7 @@ from dl_datalake_spark.lake.paths import PARTITION_COLS, DatasetKey
 from dl_datalake_spark.lake.snapshot import (
     added_file_stats,
     file_sizes,
+    footer_facts,
     list_data_files,
     partition_of,
     resolve_live_files,
@@ -1303,7 +1304,7 @@ class LakeWriter:
         return self._refresh_manifest_result(
             k, res.path, res.rows, [tuple(p) for p in res.partitions],
             delta_rows=counts["i"] - counts["d"],
-            batch_bounds=self._stats_bounds(res.file_stats),
+            batch_bounds=(res.time_from, res.time_to),
         )
 
     _UPDATE_FORBIDDEN = ("exchange", "market", "symbol", "data_type", "period", "year", "month")
@@ -1450,7 +1451,7 @@ class LakeWriter:
         # stats) — no dataset rescan
         return self._refresh_manifest_result(
             k, res.path, res.rows, [tuple(p) for p in res.partitions],
-            delta_rows=0, batch_bounds=self._stats_bounds(res.file_stats),
+            delta_rows=0, batch_bounds=(res.time_from, res.time_to),
         )
 
     def _enforce_dml_contract(
@@ -1569,18 +1570,6 @@ class LakeWriter:
             ).withColumn("_change_type", F.lit("delete"))
             out = out.unionByName(moved, allowMissingColumns=True)
         return out
-
-    @staticmethod
-    def _stats_bounds(fstats: dict | None) -> tuple | None:
-        """[min,max] ts across a commit's added-file stats — the free
-        batch bounds the incremental manifest refresh extends with."""
-        if not fstats:
-            return None
-        lows = [v[0] for v in fstats.values() if v and v[0] is not None]
-        highs = [v[1] for v in fstats.values() if v and v[1] is not None]
-        if not lows or not highs:
-            return None
-        return (min(lows), max(highs))
 
     def _refresh_manifest_result(
         self,
@@ -1754,11 +1743,12 @@ class LakeWriter:
                     file_bytes=file_sizes(self.fs, path, added),
                     dv=new_map,
                 )
-                fstats, cstats = self._added_file_stats(path, added, "ts")
+                fstats, cstats, nrows = self._added_file_stats(path, added, "ts")
                 if fstats:
                     meta["file_stats"] = fstats
                 if cstats:
                     meta["col_stats"] = cstats
+                bounds = self._commit_facts(path, added, "ts", fstats, nrows)[0]
         except _NoMatch:
             return WriteResult(path=path, time_from=None, time_to=None, rows=0, partitions=[])
         # incremental catalog refresh: updates keep the row count and
@@ -1766,7 +1756,7 @@ class LakeWriter:
         # stats) — no dataset rescan
         return self._refresh_manifest_result(
             k, path, rows_updated, touched,
-            delta_rows=0, batch_bounds=self._stats_bounds(fstats),
+            delta_rows=0, batch_bounds=(bounds["t0"], bounds["t1"]),
         )
 
     def _dv_probe_frame(self, path: str, live: list[str], dv_map: dict, months):
@@ -2607,7 +2597,6 @@ class LakeWriter:
                     path=path, time_from=None, time_to=None, rows=0, partitions=[]
                 )
             existing = existing.persist()
-            fstats: dict = {}
             try:
                 cast_col = F.col(name).cast(new_type)
                 # round-trip probe: a value whose cast cannot be cast
@@ -2652,16 +2641,16 @@ class LakeWriter:
                 added = [
                     f for f in list_data_files(self.fs, path) if f not in on_disk
                 ]
-                parts = sorted({partition_of(f) for f in added} - {(None, None)})
-                n = rewritten.count()
+                fstats, cstats, nrows = self._added_file_stats(path, added, "ts")
+                facts, pcounts = self._commit_facts(path, added, "ts", fstats, nrows)
+                parts = sorted(pcounts)
                 meta.update(
-                    rows=n,
+                    rows=facts["n"],
                     partitions=[list(p) for p in parts],
                     files=sorted(added),  # full rewrite: fresh pin only
                     file_bytes=file_sizes(self.fs, path, added),
                     dv={},  # deletes materialized by the rewrite
                 )
-                fstats, cstats = self._added_file_stats(path, added, "ts")
                 if fstats:
                     meta["file_stats"] = fstats
                 if cstats:
@@ -2669,8 +2658,8 @@ class LakeWriter:
             finally:
                 existing.unpersist()
         return self._refresh_manifest_result(
-            k, path, n, parts, delta_rows=0,
-            batch_bounds=self._stats_bounds(fstats),
+            k, path, facts["n"], parts, delta_rows=0,
+            batch_bounds=(facts["t0"], facts["t1"]),
         )
 
     def _partitioned(
@@ -3011,7 +3000,12 @@ class LakeWriter:
 
         # ---- the data job, OUTSIDE any claim --------------------------------
         ts_col = _require_ts(df, "ts")
-        batch = self._partitioned(df, key, ts_col, base_spec).persist()
+        batch = self._partitioned(df, key, ts_col, base_spec)
+        # cached only when two jobs evaluate the batch (see _write_locked)
+        needs_counts = self._layout_needs_counts(True)
+        cached = self.emit_cdf or needs_counts
+        if cached:
+            batch = batch.persist()
         token = _uuid.uuid4().hex
         staging = f"{ds_path}/_staging_{token}"
         cdf_staging = f"{ds_path}/{self.CDF_DIR}/_staging_{token}"
@@ -3021,8 +3015,7 @@ class LakeWriter:
         # jobs): a concurrent vacuum must never age this staging out
         stop_beat = self._staging_heartbeat(staging, cdf_staging)
         try:
-            stats, pcounts = self._month_facts(batch, ts_col)
-            touched = sorted(pcounts)
+            pcounts = self._month_facts(batch, ts_col)[1] if needs_counts else None
             out = self._layout_append(batch, ts_col, pcounts)
             (
                 self._rename_frame(out, base_cmap)
@@ -3038,11 +3031,12 @@ class LakeWriter:
                 ).option("compression", "snappy").parquet(cdf_staging)
         except BaseException:
             stop_beat()
-            batch.unpersist()
             self.fs.rmtree(staging)
             self.fs.rmtree(cdf_staging)
             raise
-        batch.unpersist()
+        finally:
+            if cached:
+                batch.unpersist()
         try:
             # Rename IN PLACE to the final token-unique names and compute
             # every stat from the STAGING tree — the footer reads and the
@@ -3053,9 +3047,13 @@ class LakeWriter:
                 dst_rel = f"{d}/{token[:12]}-{name}" if d else f"{token[:12]}-{name}"
                 self.fs.rename(f"{staging}/{rel}", f"{staging}/{dst_rel}")
                 added.append(dst_rel)
-            fstats, cstats = self._added_file_stats(
+            fstats, cstats, nrows = self._added_file_stats(
                 staging, added, ts_col, column_map=base_cmap
             )
+            stats, pcounts = self._commit_facts(
+                staging, added, ts_col, fstats, nrows
+            )
+            touched = sorted(pcounts)
             fbuckets, bspec = self._added_file_buckets(
                 staging, added, column_map=base_cmap
             )
@@ -3332,9 +3330,13 @@ class LakeWriter:
                 write_months = r_set | (
                     {partition_of(f) for f in added} - {(None, None)}
                 )
-                fstats, cstats = self._added_file_stats(
+                fstats, cstats, nrows = self._added_file_stats(
                     staging, added, "ts", column_map=base_cmap
                 )
+                # the post-image's time range, by the formula every
+                # writer shares (`rows` is the plan's: a delete counts
+                # the rows it removed, not the ones it kept)
+                bounds = self._commit_facts(staging, added, "ts", fstats, nrows)[0]
                 fbuckets, bspec = self._added_file_buckets(
                     staging, added, column_map=base_cmap
                 )
@@ -3409,11 +3411,10 @@ class LakeWriter:
                 )
             raise
         stop_beat()
-        bounds = self._stats_bounds(fstats) or (None, None)
         return WriteResult(
             path=ds_path,
-            time_from=bounds[0],
-            time_to=bounds[1],
+            time_from=bounds["t0"],
+            time_to=bounds["t1"],
             rows=int(plan["rows"]),
             partitions=[list(p) for p in sorted(write_months)],
             files=None,
@@ -3531,11 +3532,21 @@ class LakeWriter:
         else:
             raise ValueError(f"unknown write mode: {mode}")
 
-        # Stats must be computed BEFORE the overwrite commits: the merged
-        # plan reads the existing files that the overwrite will replace.
-        # persist() pins the merged rows so the subsequent write does not
-        # re-scan inputs that no longer exist.
-        merged = merged.persist()
+        # The commit's facts (rows, time range, touched months) come
+        # AFTER the write, from the added files' footers, so the merged
+        # rows are normally evaluated exactly once — by the write.  The
+        # pre-state files they read stay on disk under MVCC (the write
+        # only appends), so a single evaluation needs no cache.
+        # persist() remains only where the same rows are evaluated twice
+        # and both evaluations must see the same rows: the CDF write and
+        # the data write (keep-last between same-ts batch rows is a tie
+        # a re-evaluation may break differently, so the feed could
+        # disagree with the data tree), and the layout aggregate that
+        # sizes the output before the write (`_layout_needs_counts`).
+        needs_counts = self._layout_needs_counts(mode == "append")
+        cached = emit_cdf or needs_counts
+        if cached:
+            merged = merged.persist()
         # delete pre-images ride only the CDF, never the data tree or the
         # commit's row/time stats
         data_rows = (
@@ -3545,18 +3556,11 @@ class LakeWriter:
             if emit_cdf
             else merged
         )
-        # the written rows' (year, month) set = the batch's = the
-        # partitions this commit replaces: upsert and overwrite emit rows
-        # only in the batch's months (dynamic overwrite touches nothing
-        # else); bounded driver state, same cardinality the overwrite
-        # commit enumerates
-        stats, pcounts = self._month_facts(data_rows, ts_col)
-        touched = sorted(pcounts)
+        pcounts = self._month_facts(data_rows, ts_col)[1] if needs_counts else None
 
         if emit_cdf:
             # the changed subset rides the same persisted merge; written
-            # BEFORE the data overwrite so its plan can still read the
-            # pre-state files (and a failed data write just leaves an
+            # BEFORE the data write (a failed data write just leaves an
             # uncommitted-version _cdf dir the feed reader never serves)
             changed = merged.where(F.col("_change_type").isNotNull())
             cdf_bytes = self._write_cdf(key, cdf_version, changed)
@@ -3564,7 +3568,9 @@ class LakeWriter:
         out = (
             self._layout_append(data_rows, ts_col, pcounts)
             if mode == "append"
-            else self._cluster_output(data_rows, ts_col, ["year", "month"], len(touched))
+            else self._cluster_output(
+                data_rows, ts_col, ["year", "month"], len(pcounts or ())
+            )
         )
         if emit_cdf:
             out = out.drop("_change_type")
@@ -3600,8 +3606,18 @@ class LakeWriter:
         try:
             writer.mode("append").parquet(ds_path)
         finally:
-            merged.unpersist()
+            if cached:
+                merged.unpersist()
         added = [f for f in list_data_files(self.fs, ds_path) if f not in on_disk]
+        fstats, cstats, nrows = self._added_file_stats(
+            ds_path, added, ts_col, column_map=column_map
+        )
+        # the written rows' (year, month) set = the batch's = the
+        # partitions this commit replaces: upsert and overwrite emit rows
+        # only in the batch's months (dynamic overwrite touches nothing
+        # else), so the added files' months name them exactly
+        stats, pcounts = self._commit_facts(ds_path, added, ts_col, fstats, nrows)
+        touched = sorted(pcounts)
         # legacy bootstrap: no pinned list yet → the live list IS the
         # pre-write disk state (no tombstones can exist before the first
         # pinned commit, so the two agree)
@@ -3614,9 +3630,6 @@ class LakeWriter:
             t_set = {(y, m) for y, m in touched}
             kept = [f for f in base_live if partition_of(f) not in t_set]
             new_live = sorted(set(kept).union(added))
-        fstats, cstats = self._added_file_stats(
-            ds_path, added, ts_col, column_map=column_map
-        )
         fbuckets, bspec = self._added_file_buckets(ds_path, added)
         result = WriteResult(
             path=ds_path,
@@ -3648,13 +3661,23 @@ class LakeWriter:
             )
         return result
 
+    def _layout_needs_counts(self, append: bool) -> bool:
+        """Whether the output layout needs the per-month row counts
+        BEFORE the write: `optimize_write` sizes an append's files from
+        them, and `bucket_by` / `cluster_by` scale their task count with
+        the month count.  Every other write learns its months from the
+        files it wrote (`_commit_facts`) and runs no pre-write job."""
+        return bool(self.bucket_by or self.cluster_by or (append and self.optimize_write))
+
     @staticmethod
     def _month_facts(rows: DataFrame, ts_col: str) -> tuple[dict, dict]:
-        """One grouped aggregate over the rows a commit writes:
-        ({"t0", "t1", "n"} over ALL rows, {(year, month): rows} over the
-        dated ones) — the commit's time range, row count and per-month
-        counts from a single job on the persisted rows.  A null-month
-        group (null ts) counts toward n but touches no partition."""
+        """One grouped aggregate over `rows`: ({"t0", "t1", "n"} over
+        ALL rows, {(year, month): rows} over the dated ones) in a single
+        job.  A null-month group (null ts) counts toward n but touches
+        no partition.  Two uses only: the pre-write counts a layout
+        needs (`_layout_needs_counts`), and the fallback of
+        `_commit_facts` over a commit's added files when a footer has no
+        sound ts range — commit facts otherwise come from the footers."""
         groups = (
             rows.groupBy("year", "month")
             .agg(
@@ -3678,13 +3701,15 @@ class LakeWriter:
         return stats, pcounts
 
     def _layout_append(
-        self, rows: DataFrame, ts_col: str, pcounts: dict
+        self, rows: DataFrame, ts_col: str, pcounts: dict | None
     ) -> DataFrame:
         """Append layout: with `optimize_write` (and no explicit
         cluster/bucket layout), range-partition on (year, month, ts)
         into sum(ceil(rows_p / target_file_rows)) tasks — one file per
         touched partition for small batches, ts-split files for big
-        ones, never one-file-per-upstream-task small-file spray."""
+        ones, never one-file-per-upstream-task small-file spray.
+        `pcounts` is None when the layout needs no counts
+        (`_layout_needs_counts`)."""
         if self.optimize_write and not self.bucket_by and not self.cluster_by:
             n = sum(
                 max(1, -(-c // self.target_file_rows)) for c in pcounts.values()
@@ -3692,7 +3717,9 @@ class LakeWriter:
             return rows.repartitionByRange(
                 max(1, min(n, 4096)), "year", "month", ts_col
             ).sortWithinPartitions(ts_col)
-        return self._cluster_output(rows, ts_col, ["year", "month"], len(pcounts))
+        return self._cluster_output(
+            rows, ts_col, ["year", "month"], len(pcounts or ())
+        )
 
     def _cluster_output(
         self, rows: DataFrame, ts_col: str, prefix_cols: list[str], n_groups: int
@@ -3925,7 +3952,7 @@ class LakeWriter:
     def _added_file_stats(
         self, ds_path: str, added: list[str], ts_col: str,
         column_map: dict | None = None,
-    ) -> tuple[dict[str, list[int]], dict[str, dict[str, list]]]:
+    ) -> tuple[dict[str, list[int]], dict[str, dict[str, list]], dict[str, int]]:
         """Per-added-file [min_ts, max_ts] (plus, when `stats_cols` is
         configured, per-column [min, max]) for reader-side FILE SKIPPING
         (Delta's data-skipping stats, rel-path-keyed in the commit
@@ -3936,7 +3963,9 @@ class LakeWriter:
         scan even starts (`LakeReader.read_range` / column bounds);
         files without stats (legacy, or a footer without a sound range)
         are simply scanned, so skipping is always sound.  Returns
-        (ts_stats, col_stats).
+        (ts_stats, col_stats, num_rows); the footers' row counts feed
+        the commit's own facts (`_commit_facts`), so one footer read
+        per file serves both.
 
         Column mapping: `stats_cols` are LOGICAL names; post-rename the
         files carry PHYSICAL ones, so the footer lookup translates
@@ -3951,13 +3980,33 @@ class LakeWriter:
             else CommitLog(ds_path, fs=self.fs).column_map_at(None)
         )
         phys_cols = tuple(cmap.get(c, c) for c in self.stats_cols)
-        got = added_file_stats(self.fs, {ds_path: added}, ts_col, phys_cols)
-        f, c = got if phys_cols else (got, {})
+        f, c, n = added_file_stats(
+            self.fs, {ds_path: added}, ts_col, phys_cols, with_rows=True
+        )
         back = {p: l for l, p in cmap.items()}
         cstats = {
             back.get(col, col): v for col, v in (c.get(ds_path) or {}).items()
         }
-        return f.get(ds_path, {}), cstats
+        return f.get(ds_path, {}), cstats, n.get(ds_path, {})
+
+    def _commit_facts(
+        self, root: str, added: list[str], ts_col: str,
+        fstats: dict, num_rows: dict,
+    ) -> tuple[dict, dict]:
+        """A commit's ({"t0", "t1", "n"}, {(year, month): rows}) from
+        the files it added (`snapshot.footer_facts`: footer row counts,
+        footer ts ranges, Hive dirs) — no Spark job, and the one formula
+        every writer shares, whatever produced the rows.  When a dated
+        file's footer has no sound ts range, the same facts come from
+        one aggregate over the ADDED files under `root` (never over the
+        source, never a guess)."""
+        facts = footer_facts(added, num_rows, fstats)
+        if facts is not None:
+            return facts
+        rows = self.spark.read.option("basePath", root).parquet(
+            *[f"{root}/{f}" for f in added]
+        )
+        return self._month_facts(rows, ts_col)
 
     def _merge_keep_last(
         self, batch: DataFrame, key: DatasetKey, ts_col: str, tag_changes: bool = False

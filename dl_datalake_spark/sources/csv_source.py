@@ -19,26 +19,37 @@ class CsvIngestError(ValueError):
 
 
 def read_ohlcv_csv(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.csv(path, header=True, inferSchema=True)
+    """OHLCV CSV in the canonical schema: epoch-ms long `ts` plus
+    double prices and volume (the CCXT ingest schema,
+    exchange_connector.py:323-327).
+
+    The fields are read as strings and cast straight to those types,
+    so the read costs one Spark job (the header line), not the two of
+    a schema-inference pass whose types the casts would replace
+    anyway.  ts goes through decimal(38,6), so `1000`, `1000.0` and
+    `1.7e12` all load; a malformed value still raises under ANSI.
+    Columns beyond OHLCV keep inferred types: only then is inference
+    paid for."""
+    df = spark.read.csv(path, header=True)
     if set(OHLCV_COLS) <= set(df.columns):
         out = df
+        if len(df.columns) > len(OHLCV_COLS):
+            out = spark.read.csv(path, header=True, inferSchema=True)
     elif len(df.columns) == 6:
         # headerless file: first row was consumed as a header — re-read
         # without header and apply the canonical schema
-        out = spark.read.csv(path, header=False, inferSchema=True).toDF(*OHLCV_COLS)
+        out = spark.read.csv(path, header=False).toDF(*OHLCV_COLS)
     else:
         raise CsvIngestError(
             f"CSV must contain columns {OHLCV_COLS} or be headerless with exactly 6 columns; "
             f"got {df.columns}"
         )
-    # canonical schema: epoch-ms long + doubles (the CCXT ingest schema,
-    # exchange_connector.py:323-327). Without the cast, integer-looking
-    # CSVs infer LongType and later conflict with double-typed datasets
-    # at schema-merge time.
-    out = out.withColumn("ts", F.col("ts").cast("long"))
-    for c in OHLCV_COLS[1:]:
-        out = out.withColumn(c, F.col(c).cast("double"))
-    return out
+    return out.withColumns(
+        {
+            "ts": F.col("ts").cast("decimal(38,6)").cast("long"),
+            **{c: F.col(c).cast("double") for c in OHLCV_COLS[1:]},
+        }
+    )
 
 
 def read_ticks_csv(spark: SparkSession, path: str) -> DataFrame:

@@ -94,9 +94,14 @@ def main() -> None:
     print(f"# wrote {out_json}")
     print(f"suite: c{CPUS_HIGH}={hi['value']}s c{CPUS_LOW}={lo['value']}s "
           f"ratio={result['suite_low_over_high']}")
-    for name, row in sorted(per_query.items(), key=lambda kv: -kv[1]["low_over_high"]):
+    # a query timed at 0 s on the high-core run has no ratio: list it last
+    for name, row in sorted(
+        per_query.items(),
+        key=lambda kv: (kv[1]["low_over_high"] is None, -(kv[1]["low_over_high"] or 0)),
+    ):
+        ratio = row["low_over_high"]
         print(f"{name:32s} {row[f'c{CPUS_HIGH}_s']:7.3f} {row[f'c{CPUS_LOW}_s']:7.3f} "
-              f"{row['low_over_high']:5.2f}")
+              f"{'n/a' if ratio is None else f'{ratio:5.2f}':>5s}")
 
 
 if __name__ == "__main__":

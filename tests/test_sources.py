@@ -26,22 +26,78 @@ def _write(tmp_path, name, lines):
     return str(p)
 
 
+def _jobs_in(spark, fn):
+    """Spark jobs `fn` starts, counted per job group through the status
+    tracker after the listener bus drains."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"csv-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# ts as an integer, a decimal and in scientific notation; an empty field
+TS_FORMS = ["1000,1,2,0.5,1.5,10", "1000.0,1.5,2.5,1,2,", "1.7e12,1,2,0.5,1.5,12"]
+CANONICAL = [
+    ("ts", "bigint"), ("open", "double"), ("high", "double"),
+    ("low", "double"), ("close", "double"), ("volume", "double"),
+]
+
+
+def _check_ts_forms(df):
+    assert df.dtypes == CANONICAL
+    rows = df.collect()
+    assert [r["ts"] for r in rows] == [1000, 1000, 1_700_000_000_000]
+    assert [r["volume"] for r in rows] == [10.0, None, 12.0]
+
+
 def test_csv_with_header(spark, tmp_path):
-    path = _write(
-        tmp_path,
-        "ok.csv",
-        ["ts,open,high,low,close,volume", "1000,1,2,0.5,1.5,10", "61000,1.5,2.5,1,2,11"],
-    )
-    df = read_ohlcv_csv(spark, path)
-    assert df.count() == 2
+    path = _write(tmp_path, "ok.csv", ["ts,open,high,low,close,volume", *TS_FORMS])
+    got = {}
+    # no inference pass: the read only takes the header line
+    assert _jobs_in(spark, lambda: got.update(df=read_ohlcv_csv(spark, path))) == 1
+    df = got["df"]
+    assert df.count() == 3
     assert df.schema["ts"].dataType.typeName() == "long"
+    _check_ts_forms(df)
 
 
 def test_csv_headerless_six_columns(spark, tmp_path):
-    path = _write(tmp_path, "nohdr.csv", ["1000,1,2,0.5,1.5,10", "61000,1.5,2.5,1,2,11"])
-    df = read_ohlcv_csv(spark, path)
+    path = _write(tmp_path, "nohdr.csv", TS_FORMS)
+    got = {}
+    # the header line is read twice: as a header, then as data
+    assert _jobs_in(spark, lambda: got.update(df=read_ohlcv_csv(spark, path))) == 2
+    df = got["df"]
     assert df.columns == ["ts", "open", "high", "low", "close", "volume"]
-    assert df.count() == 2
+    assert df.count() == 3
+    _check_ts_forms(df)
+
+
+@pytest.mark.parametrize("bad", ["10x0,1,2,0.5,1.5,10", "1000,abc,2,0.5,1.5,10"])
+def test_csv_malformed_value_raises_under_ansi(spark, tmp_path, bad):
+    path = _write(tmp_path, "bad.csv", ["ts,open,high,low,close,volume", bad])
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+            read_ohlcv_csv(spark, path).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_csv_extra_columns_keep_inferred_types(spark, tmp_path):
+    path = _write(
+        tmp_path, "extra.csv",
+        ["ts,open,high,low,close,volume,note,qty", "1000,1,2,0.5,1.5,10,x,3"],
+    )
+    df = read_ohlcv_csv(spark, path)
+    assert df.dtypes == CANONICAL + [("note", "string"), ("qty", "int")]
 
 
 def test_csv_invalid_columns_rejected(spark, tmp_path):
