@@ -595,7 +595,7 @@ def recluster(
     {"files_before": n, "files_after": m}."""
     from dl_datalake_spark.lake.clustering import zorder_key
     from dl_datalake_spark.lake.commitlog import CommitLog
-    from dl_datalake_spark.lake.snapshot import added_file_stats
+    from dl_datalake_spark.lake.writer import LakeWriter
 
     fs = fs if fs is not None else get_fs(dataset_path, spark)
     ds = dataset_path.rstrip("/")
@@ -612,7 +612,6 @@ def recluster(
         if not live:
             meta.update(partitions=[], files=[])
             return {"files_before": 0, "files_after": 0}
-        on_disk = set(list_data_files(fs, ds))
         # contracted datasets scan through the recorded write-time
         # schema (lake/schema.py): a merge_schema-widened dataset holds
         # mixed INT32/INT64 files mergeSchema cannot read
@@ -693,27 +692,20 @@ def recluster(
         )
         if to_physical:
             out_df = out_df.withColumnsRenamed(to_physical)
-        (
-            out_df.write.partitionBy(*spec)
+        # the writer's one staging path: stage, stat under the PHYSICAL
+        # names while recording the LOGICAL keys reader bounds look up,
+        # and land under this claim
+        staged = LakeWriter(spark, base_path or ds, fs=fs, stats_cols=cols).land_rewrite(
+            ds,
+            meta,
+            lambda d: out_df.write.partitionBy(*spec)
             .mode("append")
             .option("compression", "snappy")
-            .parquet(ds)
+            .parquet(d),
+            to_physical,
         )
-        added = sorted(f for f in list_data_files(fs, ds) if f not in on_disk)
-        # stat the files under their PHYSICAL names, record the index
-        # under the LOGICAL keys reader bounds look up (the same
-        # translation LakeWriter._added_file_stats applies)
-        phys_cols = tuple(to_physical.get(c, c) for c in cols)
-        fstats, cstats = added_file_stats(fs, {ds: added}, "ts", extra_cols=phys_cols)
-        meta.update(partitions=[], files=added, file_bytes=file_sizes(fs, ds, added))
-        if fstats.get(ds):
-            meta["file_stats"] = fstats[ds]
-        if cstats.get(ds):
-            meta["col_stats"] = {
-                to_logical.get(col, col): v
-                for col, v in cstats[ds].items()
-            }
-    return {"files_before": len(live), "files_after": len(added)}
+        meta["partitions"] = []
+    return {"files_before": len(live), "files_after": len(staged.added)}
 
 
 def vacuum_tombstones(
@@ -782,8 +774,37 @@ def vacuum_tombstones(
                 cur.add(rel)
         return out
 
+    def _sweep_dirs(root: str, ttl: float, prefix=None) -> None:
+        """Reclaim the child dirs of `root` (those whose name starts
+        with `prefix`, or all) whose mtime age reaches `ttl`."""
+        try:
+            names = fs.listdir(root)
+        except OSError:
+            return
+        for name in names:
+            if prefix is not None and not name.startswith(prefix):
+                continue
+            d = f"{root}/{name}"
+            try:
+                age = now - fs.getmtime(d)
+            except OSError:
+                continue  # raced with another sweep
+            if age < ttl:
+                retained.append(d)
+                continue
+            if not dry_run:
+                fs.rmtree(d)
+            removed.append(d)
+
     fs = fs if fs is not None else get_fs(base_path, spark)
     base = base_path.rstrip("/")
+    # Staging dirs have no commit-derived clock, and a LIVE writer may
+    # wait on a contended claim with its finished staging sitting idle
+    # (the heartbeat refreshes it, LakeWriter._staging_heartbeat) — so
+    # their sweep age is floored at `staging_ttl_s` (default 6 h, far
+    # above any commit_timeout_s) whatever `retention_s` is; lower it
+    # explicitly only when no writers can be in flight.
+    s_ttl = max(retention_s, staging_ttl_s)
     datasets = sorted(
         {
             root[: -len("/" + LOG_DIR)]
@@ -869,56 +890,18 @@ def vacuum_tombstones(
                 if not dry_run:
                     fs.rmtree(dvdir)
                 removed.append(dvdir)
-        # crashed OPTIMISTIC-append staging (`_staging_<token>` under
-        # the dataset and `_cdf/_staging_<token>`): a writer that died
-        # before its claim leaves only these hidden dirs — invisible to
-        # every scan, but disk they hold forever without a sweep.
-        # Unlike data tombstones there is no commit-derived clock here,
-        # and a LIVE writer may be waiting on a contended claim with
-        # its finished staging dir sitting idle — so the sweep age is
-        # floored at `staging_ttl_s` (default 6 h, far above any
-        # commit_timeout_s) independent of an aggressive `retention_s`;
-        # lower it explicitly only when no writers can be in flight.
-        s_ttl = max(retention_s, staging_ttl_s)
+        # crashed writers' staging (`_staging_<token>` under the
+        # dataset; `_cdf/_staging_<token>` from earlier versions): a
+        # writer that died before its files landed leaves only these
+        # hidden dirs — invisible to every scan, but disk they hold
+        # forever without a sweep.
         for sroot in (ds, f"{ds}/_cdf"):
-            try:
-                names = fs.listdir(sroot)
-            except OSError:
-                continue
-            for name in names:
-                if not name.startswith("_staging_"):
-                    continue
-                sdir = f"{sroot}/{name}"
-                try:
-                    age = now - fs.getmtime(sdir)
-                except OSError:
-                    continue
-                if age < s_ttl:
-                    retained.append(sdir)
-                    continue
-                if not dry_run:
-                    fs.rmtree(sdir)
-                removed.append(sdir)
+            _sweep_dirs(sroot, s_ttl, "_staging_")
         # quarantine retention rides the same horizon: violator splits
         # (writer expectations, `_quarantine/<uuid>` dirs) are kept for
         # inspection for `retention_s`, then reclaimed — without this
         # they accumulate forever on a constraint-violating feed
-        qroot = f"{ds}/_quarantine"
-        try:
-            for qname in fs.listdir(qroot):
-                qdir = f"{qroot}/{qname}"
-                try:
-                    age = now - fs.getmtime(qdir)
-                except OSError:
-                    continue
-                if age < retention_s:
-                    retained.append(qdir)
-                    continue
-                if not dry_run:
-                    fs.rmtree(qdir)
-                removed.append(qdir)
-        except OSError:
-            pass  # no quarantine dir
+        _sweep_dirs(f"{ds}/_quarantine", retention_s)
         if dry_run:
             continue
         # prune partition dirs the sweep emptied (visible-children test:
@@ -941,24 +924,14 @@ def vacuum_tombstones(
                     fs.rmtree(ydir)
         except OSError:
             pass
+    if base not in datasets:
+        # lake-level multi-write staging (`_staging_<token>`; earlier
+        # versions named it `_staging_multi_<txid>` and
+        # `_cdf_staging_<txid>`)
+        _sweep_dirs(base, s_ttl, ("_staging_", "_cdf_staging_"))
     # lake-level multi-write quarantine (_quarantine_multi/<txid>) ages
     # under the same horizon
-    mq = f"{base}/_quarantine_multi"
-    try:
-        for qname in fs.listdir(mq):
-            qdir = f"{mq}/{qname}"
-            try:
-                age = now - fs.getmtime(qdir)
-            except OSError:
-                continue
-            if age < retention_s:
-                retained.append(qdir)
-                continue
-            if not dry_run:
-                fs.rmtree(qdir)
-            removed.append(qdir)
-    except OSError:
-        pass
+    _sweep_dirs(f"{base}/_quarantine_multi", retention_s)
     return {"removed": removed, "retained": retained}
 
 

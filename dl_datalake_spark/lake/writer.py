@@ -25,7 +25,7 @@ row-group min/max pruning.
 from __future__ import annotations
 
 from contextlib import ExitStack, contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -72,6 +72,47 @@ class WriteResult:
     # handle LakeReader.read_datasets_at replays the whole cut from
 
 
+@dataclass
+class _Staged:
+    """The files staged under one root (a directory that mirrors the
+    dataset's layout) and every fact a commit records about them, all
+    read from those files (`LakeWriter._stage_facts`)."""
+
+    root: str
+    added: list[str]  # rel paths, identical under the root and the dataset
+    file_stats: dict
+    col_stats: dict
+    facts: dict  # {"t0", "t1", "n"}
+    pcounts: dict  # {(year, month): rows}; null-ts files touch no month
+    file_buckets: dict
+    bucket_spec: dict
+    file_bytes: dict
+
+    def commit_facts(self) -> dict:
+        """Rows, time range and touched months — what a write that
+        commits exactly the rows it staged records."""
+        return {
+            "rows": int(self.facts["n"]),
+            "time_from": self.facts["t0"],
+            "time_to": self.facts["t1"],
+            "partitions": [list(p) for p in sorted(self.pcounts)],
+        }
+
+
+@dataclass
+class _Staging:
+    """One data write's private `_staging_<token>` dir (data files,
+    change feed under `cdf`) and what landed from it so far: one
+    (dataset path, claimed version, rel paths moved in) per `_land`."""
+
+    dir: str
+    landed: list[tuple[str, int, list[str]]] = field(default_factory=list)
+
+    @property
+    def cdf(self) -> str:
+        return f"{self.dir}/{LakeWriter.CDF_DIR}"
+
+
 @contextmanager
 def dynamic_partition_overwrite(spark: SparkSession):
     """Pin ``partitionOverwriteMode=dynamic`` for the duration, restoring
@@ -90,6 +131,11 @@ def dynamic_partition_overwrite(spark: SparkSession):
         yield
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+
+#: the most (symbol, year, month) triples a multi-dataset upsert prunes
+#: its read-back by; wider batches prune by month alone
+_MULTI_PRUNE_TRIPLES = 1024
 
 
 def _require_ts(df: DataFrame, ts_col: str) -> str:
@@ -234,8 +280,8 @@ class LakeWriter:
         # so they keep the standard layout and post-hoc `compact`).
         self.optimize_write = bool(optimize_write)
         self.target_file_rows = int(target_file_rows)
-        # optimistic writers touch their `_staging_<token>` dirs on this
-        # cadence while the pre-claim Spark job runs, so a concurrent
+        # every data write touches its `_staging_<token>` dir on this
+        # cadence while its Spark jobs run (`_staging`), so a concurrent
         # `vacuum_tombstones` (which sweeps staging dirs by mtime age,
         # maintenance.py) sees a LIVE job's staging as fresh no matter
         # how long the job takes — the same liveness signal the commit
@@ -399,16 +445,15 @@ class LakeWriter:
                     ).option("compression", "snappy").parquet(qdir)
                     batch = good
                     exp_meta = {"expectations": counts}
+        # null-ts rows carry a null (year, month): they land under
+        # __HIVE_DEFAULT_PARTITION__ as in write_ohlc and prune nothing
         triples = [
-            (r["symbol"], int(r["year"]), int(r["month"]))
+            (r["symbol"], r["year"], r["month"])
             for r in batch.select("symbol", "year", "month").distinct().collect()
         ]
         symbols = sorted({t[0] for t in triples})
         if not symbols:
             return {}
-        parts_by_symbol: dict[str, list[list[int]]] = {}
-        for sym, y, m in sorted(triples):
-            parts_by_symbol.setdefault(sym, []).append([y, m])
         keys = [DatasetKey(ex, mk, s, data_type, period) for s in symbols]
 
         from dl_datalake_spark.lake.multilog import MultiCommitLog
@@ -419,6 +464,10 @@ class LakeWriter:
 
         def _run(stack: "ExitStack") -> dict[str, WriteResult]:
             nonlocal intent_written, batch
+            # ONE staging dir for every dataset's files: each dataset's
+            # share `<staging>/<dataset_rel_path>` mirrors its directory,
+            # so the facts and land steps run per dataset unchanged
+            st = stack.enter_context(self._staging(self.base_path))
             metas = [
                 stack.enter_context(
                     self.commit_log(k).transaction(
@@ -518,28 +567,11 @@ class LakeWriter:
             else:
                 raise ValueError(f"unknown write mode: {mode}")
 
-            merged = merged.persist()
-            # per-dataset pre-write snapshots for the pinned-list MVCC
-            # protocol (one subtree listing per dataset — the same
-            # cardinality as the manifest rows this commit writes)
-            ds_paths = {k.symbol: self.dataset_path(k) for k in keys}
-            pre_live = {
-                s: resolve_live_files(self.fs, p) for s, p in ds_paths.items()
-            }
-            on_disk = {
-                s: set(list_data_files(self.fs, p)) for s, p in ds_paths.items()
-            }
+            # the CDF write and the data write must see the same rows
+            # (see _write_locked); every other fact comes from the files
+            if emit_cdf:
+                merged = merged.persist()
             try:
-                stats = {
-                    r["symbol"]: r
-                    for r in merged.groupBy("symbol")
-                    .agg(
-                        F.min(ts_col).alias("t0"),
-                        F.max(ts_col).alias("t1"),
-                        F.count(F.lit(1)).alias("n"),
-                    )
-                    .collect()
-                }
                 out = merged.drop("_change_type") if emit_cdf else merged
                 n_groups = (
                     out.select("symbol", "year", "month").distinct().count()
@@ -550,93 +582,27 @@ class LakeWriter:
                     out, ts_col, ["symbol", "year", "month"], n_groups
                 )
                 # ONE append job for every dataset; visibility switches
-                # per dataset when its pinned list finalizes below.
-                # The job stages under a PER-TXID directory and the files
-                # are then moved into their final partition dirs — two
-                # multi-writes on disjoint symbol sets never share a
-                # `_temporary/0/` tree, so neither's FileOutputCommitter
-                # cleanup can clobber the other's in-flight staging (the
-                # same fix the single-dataset path and the CDF split
-                # already use; overlapping multi-writes still serialize
-                # on their shared commit logs). A crash between move and
-                # finalize leaves invisible files (absent from every
-                # pinned list) that vacuum reclaims — identical exposure
-                # to a crashed direct append.
-                staging_data = f"{self.base_path}/_staging_multi_{txid}"
+                # per dataset when its pinned list finalizes below
                 (
                     out.write.partitionBy(*PARTITION_COLS)
                     .option("compression", "snappy")
                     .mode("append")
-                    .parquet(staging_data)
+                    .parquet(st.dir)
                 )
-                for s_root, s_name in list(self.fs.walk_files(staging_data)):
-                    if not s_name.endswith(".parquet"):
-                        continue
-                    rel_dir = s_root[len(staging_data):].strip("/")
-                    dst_dir = (
-                        f"{self.base_path}/{rel_dir}" if rel_dir else self.base_path
-                    )
-                    self.fs.makedirs(dst_dir)
-                    self.fs.rename(f"{s_root}/{s_name}", f"{dst_dir}/{s_name}")
-                self.fs.rmtree(staging_data)
                 if emit_cdf:
-                    # ONE staging job for every dataset's changed rows
-                    # (symbol preserved as a data column; `_sym` is the
-                    # split key the per-dataset renames consume below)
+                    # ONE job for every dataset's changed rows (symbol
+                    # stays a data column; `_sym` splits the datasets)
                     (
                         merged.where(F.col("_change_type").isNotNull())
                         .withColumn("_sym", F.col("symbol"))
                         .write.mode("overwrite")
                         .option("compression", "snappy")
                         .partitionBy("_sym")
-                        .parquet(f"{self.base_path}/_cdf_staging_{txid}")
+                        .parquet(st.cdf)
                     )
             finally:
-                merged.unpersist()
-            cdf_ok: set[str] = set()
-            if emit_cdf:
-                staging = f"{self.base_path}/_cdf_staging_{txid}"
-                for k, meta in zip(keys, metas):
-                    src = f"{staging}/_sym={k.symbol}"
-                    if not self.fs.exists(src):
-                        continue  # no changed rows for this dataset
-                    parent = self.cdf_path(k)
-                    self.fs.makedirs(parent)
-                    dst = f"{parent}/commit_version={meta['version']}"
-                    if self.fs.exists(dst):
-                        self.fs.rmtree(dst)  # version re-claimed after an abort
-                    self.fs.rename(src, dst)
-                    cdf_ok.add(k.symbol)
-                self.fs.rmtree(staging)
-            new_live: dict[str, list[str]] = {}
-            added_by_symbol: dict[str, list[str]] = {}
-            for k in keys:
-                s = k.symbol
-                added = [
-                    f
-                    for f in list_data_files(self.fs, ds_paths[s])
-                    if f not in on_disk[s]
-                ]
-                added_by_symbol[s] = added
-                base_live = (
-                    pre_live[s] if pre_live[s] is not None else sorted(on_disk[s])
-                )
-                if mode == "append":
-                    new_live[s] = sorted(set(base_live).union(added))
-                else:
-                    t_set = {(y, m) for y, m in parts_by_symbol.get(s, [])}
-                    kept = [f for f in base_live if partition_of(f) not in t_set]
-                    new_live[s] = sorted(set(kept).union(added))
-            # per-file ts (+ stats_cols) stats for reader file skipping,
-            # from the added files' footers — no Spark job per dataset
-            got = added_file_stats(
-                self.fs,
-                {ds_paths[s]: a for s, a in added_by_symbol.items() if a},
-                ts_col,
-                tuple(self.stats_cols),
-            )
-            stats_by_path, cstats_by_path = got if self.stats_cols else (got, {})
-
+                if emit_cdf:
+                    merged.unpersist()
             # Manifest registration happens while the dataset locks are
             # still held — same data-then-manifest ordering contract as
             # _write_locked.  Registering after lock release would let a
@@ -645,55 +611,20 @@ class LakeWriter:
             # stale rows/metadata.
             results: dict[str, WriteResult] = {}
             manifest_rows = []
-            for k, meta in zip(keys, metas):
-                s = stats.get(k.symbol)
-                if s is None:
-                    # no rows for this dataset: commit a zero-partition
-                    # entry that still carries the (unchanged) pinned
-                    # list — a files-less data commit would force later
-                    # readers into the legacy dir fallback, where
-                    # tombstones resurrect
-                    meta.update(partitions=[], files=new_live[k.symbol])
-                    continue
-                res = WriteResult(
-                    path=self.dataset_path(k),
-                    time_from=s["t0"],
-                    time_to=s["t1"],
-                    rows=s["n"],
-                    partitions=parts_by_symbol.get(k.symbol),
+            shares = self._stage_facts(
+                [f"{st.dir}/{dataset_rel_path(k)}" for k in keys], ts_col, {}
+            )
+            for k, meta, staged in zip(keys, metas, shares):
+                ds_path = self.dataset_path(k)
+                cdf = f"{st.cdf}/_sym={k.symbol}"
+                self._land(
+                    st, staged, ds_path, meta, self._base_listing(ds_path),
+                    drop=set(staged.pcounts) if mode != "append" else (),
+                    cdf=cdf if emit_cdf and self.fs.exists(cdf) else None,
                 )
-                meta.update(
-                    rows=s["n"],
-                    time_from=s["t0"],
-                    time_to=s["t1"],
-                    partitions=res.partitions,
-                    files=new_live[k.symbol],
-                    file_bytes=file_sizes(
-                        self.fs, ds_paths[k.symbol], added_by_symbol[k.symbol]
-                    ),
-                )
-                fstats = stats_by_path.get(ds_paths[k.symbol])
-                if fstats:
-                    meta["file_stats"] = fstats
-                cstats = cstats_by_path.get(ds_paths[k.symbol])
-                if cstats:
-                    meta["col_stats"] = cstats
-                if k.symbol in cdf_ok:
-                    meta["cdf"] = True  # read_change_feed's no-gap marker
-                res.files = new_live[k.symbol]
-                results[k.symbol] = res
-                manifest_rows.append(
-                    {
-                        "exchange": k.exchange,
-                        "market": k.market,
-                        "symbol": k.symbol,
-                        "path": res.path,
-                        "data_type": k.data_type,
-                        "time_from": res.time_from,
-                        "time_to": res.time_to,
-                        "metadata": {"timeframe": k.period, "rows": res.rows},
-                    }
-                )
+                meta.update(staged.commit_facts())
+                results[k.symbol], row = self._landed_result(k, ds_path, meta)
+                manifest_rows.append(row)
             if self.manifest is not None:
                 self.manifest.add_entries(manifest_rows)
             # all claims still held, nothing finalized yet: record the
@@ -1658,7 +1589,9 @@ class LakeWriter:
         path = self.dataset_path(k)
         ds_rel = path[len(self.base_path.rstrip("/")) + 1 :]
         try:
-            with log.transaction(timeout=self.commit_timeout_s, payload=payload) as meta:
+            with self._staging(path) as st, log.transaction(
+                timeout=self.commit_timeout_s, payload=payload
+            ) as meta:
                 live = resolve_live_files(self.fs, path)
                 if live is None:
                     raise ValueError(
@@ -1704,51 +1637,39 @@ class LakeWriter:
                                 sets["ts"].cast("long") != F.col("ts").cast("long")
                             ).withColumn("_change_type", F.lit("delete"))
                             feed = feed.unionByName(moved, allowMissingColumns=True)
-                        meta["cdf_bytes"] = self._write_cdf(
-                            k, meta["version"], feed
-                        )
-                        meta["cdf"] = True
+                        feed.write.mode("overwrite").option(
+                            "compression", "snappy"
+                        ).parquet(st.cdf)
                     # deletion vector over the OLD copies
                     dv_rel, hit_rels = self._write_dv_sidecar(
                         path, ds_rel, probe, dv_map, rows_updated
                     )
-                    # append the post-images as fresh files
-                    on_disk = set(list_data_files(self.fs, path))
+                    # the post-images as fresh files
+                    cmap = log.column_map_at(None)
                     (
-                        self._with_spec_cols(self._to_physical(post, log), spec)
+                        self._with_spec_cols(self._rename_frame(post, cmap), spec)
                         .sortWithinPartitions("ts")
                         .drop("exchange", "market", "symbol", "data_type", "period")
                         .write.partitionBy(*spec)
                         .option("compression", "snappy")
                         .mode("append")
-                        .parquet(path)
+                        .parquet(st.dir)
                     )
-                    added = [
-                        f for f in list_data_files(self.fs, path) if f not in on_disk
-                    ]
                 finally:
                     probe.unpersist()
+                (staged,) = self._stage_facts([st.dir], "ts", cmap)
                 hit_set = set(hit_rels)
                 new_map = {r: d for r, d in dv_map.items() if r not in hit_set}
                 for r in hit_rels:
                     new_map[r] = dv_rel
-                all_parts = sorted(
-                    set(touched) | ({partition_of(f) for f in added} - {(None, None)})
+                self._land(
+                    st, staged, path, meta, [], delta=True,
+                    cdf=st.cdf if self.emit_cdf else None,
                 )
+                parts = sorted(set(touched) | set(staged.pcounts))
                 meta.update(
-                    rows=rows_updated,
-                    partitions=[list(p) for p in all_parts],
-                    files_add=sorted(added),
-                    files_remove=[],
-                    file_bytes=file_sizes(self.fs, path, added),
-                    dv=new_map,
+                    rows=rows_updated, partitions=[list(p) for p in parts], dv=new_map
                 )
-                fstats, cstats, nrows = self._added_file_stats(path, added, "ts")
-                if fstats:
-                    meta["file_stats"] = fstats
-                if cstats:
-                    meta["col_stats"] = cstats
-                bounds = self._commit_facts(path, added, "ts", fstats, nrows)[0]
         except _NoMatch:
             return WriteResult(path=path, time_from=None, time_to=None, rows=0, partitions=[])
         # incremental catalog refresh: updates keep the row count and
@@ -1756,7 +1677,7 @@ class LakeWriter:
         # stats) — no dataset rescan
         return self._refresh_manifest_result(
             k, path, rows_updated, touched,
-            delta_rows=0, batch_bounds=(bounds["t0"], bounds["t1"]),
+            delta_rows=0, batch_bounds=(staged.facts["t0"], staged.facts["t1"]),
         )
 
     def _dv_probe_frame(self, path: str, live: list[str], dv_map: dict, months):
@@ -2381,11 +2302,6 @@ class LakeWriter:
             return df
         return df.withColumnsRenamed(todo)
 
-    def _to_physical(self, df: DataFrame, log: CommitLog) -> DataFrame:
-        """Logical -> physical column names just before a data-file
-        write (lake/schema.py column mapping)."""
-        return self._rename_frame(df, log.column_map_at(None))
-
     def _to_logical(self, df: DataFrame, log: CommitLog) -> DataFrame:
         """Physical -> logical column names right after a data-file
         read, so every internal frame (and every predicate/assignment
@@ -2575,7 +2491,7 @@ class LakeWriter:
         log = self.commit_log(k)
         path = self.dataset_path(k)
         payload = {"mode": "alter-type", "altered": {"column": name, "to": new_type}}
-        with log.transaction(
+        with self._staging(path) as st, log.transaction(
             timeout=self.commit_timeout_s, payload=payload
         ) as meta:
             schema = log.schema_at(None)
@@ -2619,47 +2535,38 @@ class LakeWriter:
                     # (ts unchanged, so keep-last folding reproduces the
                     # rewritten state) — without this, a CDF consumer
                     # would hit the loud-gap error on this commit forever
-                    meta["cdf_bytes"] = self._write_cdf(
-                        k,
-                        meta["version"],
-                        rewritten.withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        ),
-                    )
-                    meta["cdf"] = True
-                on_disk = set(list_data_files(self.fs, path))
+                    rewritten.withColumn(
+                        "_change_type", F.lit("update_postimage")
+                    ).write.mode("overwrite").option(
+                        "compression", "snappy"
+                    ).parquet(st.cdf)
                 spec = log.partition_spec_at(None)
+                cmap = log.column_map_at(None)
                 (
-                    self._with_spec_cols(self._to_physical(rewritten, log), spec)
+                    self._with_spec_cols(self._rename_frame(rewritten, cmap), spec)
                     .sortWithinPartitions("ts")
                     .drop("exchange", "market", "symbol", "data_type", "period")
                     .write.partitionBy(*spec)
                     .option("compression", "snappy")
                     .mode("append")
-                    .parquet(path)
+                    .parquet(st.dir)
                 )
-                added = [
-                    f for f in list_data_files(self.fs, path) if f not in on_disk
-                ]
-                fstats, cstats, nrows = self._added_file_stats(path, added, "ts")
-                facts, pcounts = self._commit_facts(path, added, "ts", fstats, nrows)
-                parts = sorted(pcounts)
-                meta.update(
-                    rows=facts["n"],
-                    partitions=[list(p) for p in parts],
-                    files=sorted(added),  # full rewrite: fresh pin only
-                    file_bytes=file_sizes(self.fs, path, added),
-                    dv={},  # deletes materialized by the rewrite
-                )
-                if fstats:
-                    meta["file_stats"] = fstats
-                if cstats:
-                    meta["col_stats"] = cstats
             finally:
                 existing.unpersist()
+            (staged,) = self._stage_facts([st.dir], "ts", cmap)
+            # full rewrite: the fresh files are the whole pin
+            self._land(
+                st, staged, path, meta, [], cdf=st.cdf if self.emit_cdf else None
+            )
+            facts = staged.commit_facts()
+            meta.update(
+                rows=facts["rows"],
+                partitions=facts["partitions"],
+                dv={},  # deletes materialized by the rewrite
+            )
         return self._refresh_manifest_result(
-            k, path, facts["n"], parts, delta_rows=0,
-            batch_bounds=(facts["t0"], facts["t1"]),
+            k, path, facts["rows"], facts["partitions"], delta_rows=0,
+            batch_bounds=(facts["time_from"], facts["time_to"]),
         )
 
     def _partitioned(
@@ -2728,7 +2635,7 @@ class LakeWriter:
         if txn is not None:
             payload["txn"] = {"app": txn[0], "version": int(txn[1])}
         try:
-            with log.transaction(
+            with self._staging(self.dataset_path(key)) as st, log.transaction(
                 timeout=self.commit_timeout_s, payload=payload
             ) as meta:
                 if txn is not None and log.last_txn_version(txn[0]) >= int(txn[1]):
@@ -2767,7 +2674,7 @@ class LakeWriter:
                         },
                     }
                 res = self._write_locked(
-                    df, key, mode, cdf_version=meta["version"],
+                    df, key, mode, st, meta,
                     # effective map INCLUDING any fresh physical names the
                     # contract assigned this very commit (re-added columns)
                     column_map=meta.get("column_map")
@@ -2775,30 +2682,6 @@ class LakeWriter:
                     else head[1],
                     spec=spec,
                 )
-                # touched partitions in the commit record = the CDC surface:
-                # an incremental consumer (reader.read_changes_since) re-reads
-                # exactly these partitions, never the dataset
-                meta.update(
-                    rows=res.rows,
-                    time_from=res.time_from,
-                    time_to=res.time_to,
-                    partitions=res.partitions,
-                    files=res.files,  # the commit IS the snapshot definition
-                )
-                if res.file_stats:
-                    meta["file_stats"] = res.file_stats
-                if res.col_stats:
-                    meta["col_stats"] = res.col_stats
-                if res.file_buckets:
-                    meta["file_buckets"] = res.file_buckets
-                if res.bucket_spec:
-                    meta["bucket_by"] = res.bucket_spec
-                if res.file_bytes:
-                    meta["file_bytes"] = res.file_bytes
-                if self.emit_cdf:
-                    meta["cdf"] = True  # read_change_feed's no-gap marker
-                    if res.cdf_bytes is not None:
-                        meta["cdf_bytes"] = res.cdf_bytes
         except _ReplayedTxn:
             return WriteResult(
                 path=self.dataset_path(key), time_from=None, time_to=None,
@@ -2818,12 +2701,13 @@ class LakeWriter:
     # milliseconds and disjoint appenders scale.
     #
     # Mechanics that make an append commutable:
-    # - data files are staged under `<dataset>/_staging_<token>/` (one
-    #   private dir per write: exact attribution, no shared Hadoop
-    #   `_temporary/0/` for concurrent same-dataset jobs to destroy) and
-    #   MOVED into the tree with token-unique names; uncommitted files
-    #   are invisible by construction (readers resolve the pinned
-    #   listing, never the directory);
+    # - data files are staged under `<dataset>/_staging_<token>/` like
+    #   every data write's (`_staging`: one private dir per write, so
+    #   the write knows exactly which files it added and no shared
+    #   Hadoop `_temporary/0/` exists for concurrent jobs to destroy)
+    #   and MOVED into the tree under the claim; uncommitted files are
+    #   invisible by construction (readers resolve the pinned listing,
+    #   never the directory);
     # - the commit payload carries `files_add` ONLY — a delta composes
     #   with whatever head it lands on, so there is nothing to rebase;
     #   the finalize expands it to a full checkpoint on schedule;
@@ -2851,7 +2735,7 @@ class LakeWriter:
         - ``"none"`` (blind append): we read nothing — concurrent
           appends commute anywhere, file-scoped rewrites
           (``rewrite_partitions``: optimistic compaction, byte-identical
-          rows under new token-named files) commute anywhere (our files
+          rows under new file names) commute anywhere (our files
           are new, never in their remove set);
         - ``"files"`` (compaction): we read and REMOVE the snapshot's
           files of `touched` — appends commute (their files are new),
@@ -2918,15 +2802,16 @@ class LakeWriter:
             "snapshot"
         )
 
-    def _staging_heartbeat(self, *paths: str):
-        """Daemon thread refreshing the mtime of this writer's private
-        staging dirs while its pre-claim Spark job runs.  A staging dir
-        is invisible to every reader, so the ONLY liveness signal
+    def _staging_heartbeat(self, path: str):
+        """Daemon thread refreshing the mtime of a staging dir for as
+        long as the write that owns it runs (`_staging` starts one for
+        every staged write, claimed or not).  A staging dir is
+        invisible to every reader, so the ONLY liveness signal
         `vacuum_tombstones` has for it is mtime age — without a
-        heartbeat, an optimistic write whose job legitimately outlives
+        heartbeat, a write whose Spark job legitimately outlives
         `staging_ttl_s` (plausible at 100 TB) gets its staging swept
-        mid-job by a concurrent vacuum.  Paths that don't exist yet are
-        skipped (the data job creates them); a vanished path is left to
+        mid-job by a concurrent vacuum.  A path that doesn't exist yet
+        is skipped (the data job creates it); a vanished one is left to
         the job's own failure surface.  Returns a stop callable."""
         import threading
 
@@ -2935,11 +2820,10 @@ class LakeWriter:
 
         def beat():
             while not stop.wait(interval):
-                for p in paths:
-                    try:
-                        self.fs.touch(p)
-                    except OSError:
-                        pass  # not created yet / already moved: next tick
+                try:
+                    self.fs.touch(path)
+                except OSError:
+                    pass  # not created yet / already removed: next tick
 
         t = threading.Thread(target=beat, name="staging-heartbeat", daemon=True)
         t.start()
@@ -2950,6 +2834,179 @@ class LakeWriter:
 
         return stopper
 
+    @contextmanager
+    def _staging(self, root: str):
+        """The one owner of a data write's staging: a private
+        `<root>/_staging_<token>` dir for the data files and the change
+        feed (`_Staging.cdf`), kept fresh for `vacuum_tombstones` by the
+        heartbeat while the write runs.  On any exception — conflict,
+        timeout, crash, no match, replay — the files already landed in
+        the tree (`_Staging.landed`) are removed unless a finalized
+        commit pins them: a multi-write's datasets finalize one by one,
+        so one that committed before a later finalize failed owns its
+        files, and readers are already served them.  The staging dir
+        goes either way.  Every data write stages here, so no writer
+        ever learns which files it wrote from a directory listing."""
+        import uuid as _uuid
+
+        st = _Staging(f"{root}/_staging_{_uuid.uuid4().hex}")
+        stop_beat = self._staging_heartbeat(st.dir)
+        try:
+            yield st
+        except BaseException:
+            for ds_path, version, rels in st.landed:
+                e = rels and CommitLog(ds_path, fs=self.fs).committed_entry(version)
+                if e and rels[0] in {*(e.get("files") or ()), *(e.get("files_add") or ())}:
+                    continue
+                for rel in rels:
+                    try:
+                        self.fs.remove(f"{ds_path}/{rel}")
+                    except OSError:
+                        pass
+            raise
+        finally:
+            stop_beat()
+            self.fs.rmtree(st.dir)
+
+    def land_rewrite(
+        self, ds_path: str, meta: dict, write, column_map: dict
+    ) -> _Staged:
+        """A full rewrite's files through the one staging path, from
+        inside a claim the caller holds (`maintenance.recluster`):
+        `write(dir)` writes them under a private staging dir laid out
+        like the dataset, their facts are read from them (`stats_cols`
+        under the LOGICAL names `column_map` maps to the files'
+        physical ones), and they land as the dataset's whole listing in
+        the claim's `meta`."""
+        with self._staging(ds_path) as st:
+            write(st.dir)
+            (staged,) = self._stage_facts([st.dir], "ts", column_map)
+            self._land(st, staged, ds_path, meta, [])
+        return staged
+
+    def _stage_facts(
+        self, roots: list[str], ts_col: str, column_map: dict
+    ) -> list[_Staged]:
+        """The one facts step: for each staged root, the files staged
+        under it and what the commit records about them, read from
+        those files.  Footer reads (`snapshot.added_file_stats`, no
+        Spark job) give per-file [min_ts, max_ts] and `stats_cols`
+        ranges for reader file skipping, plus row counts;
+        `snapshot.footer_facts` turns them into the commit's rows, time
+        range and per-month counts.  When a dated file's footer has no
+        sound ts range, those facts come from one aggregate over the
+        root's staged files instead (never the source, never a guess).
+        `bucket_by` adds ONE bucket-set job for all roots; sizes are one
+        stat per file.
+
+        Column mapping: `stats_cols` and `bucket_by` are LOGICAL names;
+        the files carry PHYSICAL ones (`column_map`, logical ->
+        physical, including names assigned by this very commit), so the
+        lookups translate and the recorded facts stay keyed by the
+        logical names reader bounds use."""
+        added = {root: list_data_files(self.fs, root) for root in roots}
+        phys_cols = tuple(column_map.get(c, c) for c in self.stats_cols)
+        f, c, n = added_file_stats(self.fs, added, ts_col, phys_cols, with_rows=True)
+        fbuckets, bspec = self._added_file_buckets(added, column_map)
+        back = {p: lg for lg, p in column_map.items()}
+        out = []
+        for root, rels in added.items():
+            fstats = f.get(root, {})
+            facts = footer_facts(rels, n.get(root, {}), fstats)
+            if facts is None:
+                facts = self._month_facts(
+                    self.spark.read.option("basePath", root).parquet(
+                        *[f"{root}/{rel}" for rel in rels]
+                    ),
+                    ts_col,
+                )
+            cstats = {back.get(k, k): v for k, v in (c.get(root) or {}).items()}
+            out.append(_Staged(
+                root, rels, fstats, cstats, *facts, fbuckets.get(root, {}),
+                bspec if root in fbuckets else {}, file_sizes(self.fs, root, rels),
+            ))
+        return out
+
+    def _land(
+        self, st: _Staging, staged: _Staged, ds_path: str, meta: dict,
+        base: list[str], drop=(), delta: bool = False, cdf: str | None = None,
+    ) -> None:
+        """The one land step, run under the held claim: move the staged
+        files into the dataset at the same relative paths (Spark names
+        every part file after its write job's UUID, so a staged path is
+        already unique and final), move the change feed `cdf` to
+        `_cdf/commit_version=<v>`, and record the listing and the
+        per-file facts in the commit payload.  The listing is `base`
+        minus its files in a `drop` month (an upsert or overwrite
+        replaces those months) plus the staged files — as
+        `files_add`/`files_remove` when `delta` (a rebasable optimistic
+        commit), else in full.  Files enter the tree only here, under
+        the claim: the feed's directory is named by the claimed version,
+        a conflict found by validation leaves the tree untouched, an
+        abort removes what moved (`_staging`), and a legacy dataset's
+        bootstrap listing (`_base_listing`, taken under its own claim)
+        can never pin another writer's uncommitted files."""
+        moved: list[str] = []
+        st.landed.append((ds_path, meta["version"], moved))
+        for rel in staged.added:
+            d = rel.rpartition("/")[0]
+            if d:
+                self.fs.makedirs(f"{ds_path}/{d}")
+            self.fs.rename(f"{staged.root}/{rel}", f"{ds_path}/{rel}")
+            moved.append(rel)
+        if cdf is not None:
+            self.fs.makedirs(f"{ds_path}/{self.CDF_DIR}")
+            dst = f"{ds_path}/{self.CDF_DIR}/commit_version={meta['version']}"
+            self.fs.rmtree(dst)  # orphan from an aborted claim
+            self.fs.rename(cdf, dst)
+            meta.update(cdf=True, cdf_bytes=self._dir_bytes(dst))
+        removed = [f for f in base if partition_of(f) in drop]
+        if delta:
+            meta.update(files_add=staged.added, files_remove=removed)
+        else:
+            meta["files"] = sorted(set(base).difference(removed).union(staged.added))
+        meta["file_bytes"] = staged.file_bytes
+        for name, v in (
+            ("file_stats", staged.file_stats), ("col_stats", staged.col_stats),
+            ("file_buckets", staged.file_buckets), ("bucket_by", staged.bucket_spec),
+        ):
+            if v:
+                meta[name] = v
+
+    def _base_listing(self, ds_path: str) -> list[str]:
+        """The listing a claimed write lands onto: the pinned one, or —
+        a legacy dataset's bootstrap, the one directory listing any
+        write still makes — the files on disk (no tombstones can exist
+        before the first pinned commit, so the two agree)."""
+        live = resolve_live_files(self.fs, ds_path)
+        return list_data_files(self.fs, ds_path) if live is None else live
+
+    @staticmethod
+    def _landed_result(k: DatasetKey, ds_path: str, meta: dict) -> tuple:
+        """(WriteResult, manifest row) of a commit that recorded its
+        staged files' facts (`_Staged.commit_facts` + `_land`)."""
+        res = WriteResult(
+            path=ds_path,
+            time_from=meta["time_from"],
+            time_to=meta["time_to"],
+            rows=meta["rows"],
+            partitions=meta["partitions"],
+            files=meta.get("files"),
+            file_stats=meta.get("file_stats"),
+            col_stats=meta.get("col_stats"),
+            file_buckets=meta.get("file_buckets"),
+            bucket_spec=meta.get("bucket_by"),
+            file_bytes=meta.get("file_bytes"),
+            cdf_bytes=meta.get("cdf_bytes"),
+        )
+        row = {
+            "exchange": k.exchange, "market": k.market, "symbol": k.symbol,
+            "path": ds_path, "data_type": k.data_type,
+            "time_from": res.time_from, "time_to": res.time_to,
+            "metadata": {"timeframe": k.period, "rows": res.rows},
+        }
+        return res, row
+
     def _write_optimistic_append(
         self,
         df: DataFrame,
@@ -2957,8 +3014,6 @@ class LakeWriter:
         commit_meta: dict | None = None,
         txn: tuple[str, int] | None = None,
     ) -> WriteResult:
-        import uuid as _uuid
-
         from dl_datalake_spark.lake import schema as _sc
 
         key = key.normalized()
@@ -2998,170 +3053,68 @@ class LakeWriter:
         df = _sc.apply_upcasts(df, upcasts)
         df, exp_meta = self._enforce_expectations(df, key)
 
-        # ---- the data job, OUTSIDE any claim --------------------------------
         ts_col = _require_ts(df, "ts")
         batch = self._partitioned(df, key, ts_col, base_spec)
         # cached only when two jobs evaluate the batch (see _write_locked)
         needs_counts = self._layout_needs_counts(True)
         cached = self.emit_cdf or needs_counts
-        if cached:
-            batch = batch.persist()
-        token = _uuid.uuid4().hex
-        staging = f"{ds_path}/_staging_{token}"
-        cdf_staging = f"{ds_path}/{self.CDF_DIR}/_staging_{token}"
-        added: list[str] = []
-        moved: list[str] = []
-        # liveness for the whole pre-claim window (data job + stats
-        # jobs): a concurrent vacuum must never age this staging out
-        stop_beat = self._staging_heartbeat(staging, cdf_staging)
+        payload = {"mode": "append", "optimistic": True, **exp_meta,
+                   **(commit_meta or {})}
+        if txn is not None:
+            payload["txn"] = {"app": txn[0], "version": int(txn[1])}
         try:
-            pcounts = self._month_facts(batch, ts_col)[1] if needs_counts else None
-            out = self._layout_append(batch, ts_col, pcounts)
-            (
-                self._rename_frame(out, base_cmap)
-                .drop("exchange", "market", "symbol", "data_type", "period")
-                .write.partitionBy(*base_spec)
-                .option("compression", "snappy")
-                .mode("append")
-                .parquet(staging)
-            )
-            if self.emit_cdf:
-                batch.withColumn("_change_type", F.lit("insert")).write.mode(
-                    "overwrite"
-                ).option("compression", "snappy").parquet(cdf_staging)
-        except BaseException:
-            stop_beat()
-            self.fs.rmtree(staging)
-            self.fs.rmtree(cdf_staging)
-            raise
-        finally:
-            if cached:
-                batch.unpersist()
-        try:
-            # Rename IN PLACE to the final token-unique names and compute
-            # every stat from the STAGING tree — the footer reads and the
-            # bucket-set job run pre-claim, and the rel paths already
-            # equal what the commit will pin.
-            for rel in list_data_files(self.fs, staging):
-                d, _, name = rel.rpartition("/")
-                dst_rel = f"{d}/{token[:12]}-{name}" if d else f"{token[:12]}-{name}"
-                self.fs.rename(f"{staging}/{rel}", f"{staging}/{dst_rel}")
-                added.append(dst_rel)
-            fstats, cstats, nrows = self._added_file_stats(
-                staging, added, ts_col, column_map=base_cmap
-            )
-            stats, pcounts = self._commit_facts(
-                staging, added, ts_col, fstats, nrows
-            )
-            touched = sorted(pcounts)
-            fbuckets, bspec = self._added_file_buckets(
-                staging, added, column_map=base_cmap
-            )
-            fbytes = file_sizes(self.fs, staging, added)
-
-            # ---- claim; validate + MOVE + finalize inside it ----------------
-            # The tree mutations happen UNDER the claim: a claim-holding
-            # writer attributes its own added files by directory diff, so
-            # an optimistic mover interleaving mid-job would get its
-            # uncommitted files pinned by the OTHER writer's commit (and a
-            # later conflict cleanup would then delete pinned files).
-            # Holding the claim for the N renames (not the Spark job)
-            # keeps the window at milliseconds while making tree mutation
-            # mutually exclusive with every claimed write.
-            payload = {"mode": "append", "optimistic": True, **exp_meta,
-                       **(commit_meta or {})}
-            if txn is not None:
-                payload["txn"] = {"app": txn[0], "version": int(txn[1])}
-            with log.transaction(
-                timeout=self.commit_timeout_s, payload=payload
-            ) as meta:
-                if txn is not None and log.last_txn_version(txn[0]) >= int(txn[1]):
-                    raise _ReplayedTxn()
-                v = meta["version"]
-                touched_set = set(touched)
-                for iv in range(rv + 1, v):
-                    e = log.committed_entry(iv)
-                    if e is None:
-                        continue  # rolled-aside claim: no effects to conflict
-                    self._validate_concurrent(
-                        e, base_contract, touched_set, iv, ds_path
-                    )
-                for rel in added:
-                    d = rel.rpartition("/")[0]
-                    if d:
-                        self.fs.makedirs(f"{ds_path}/{d}")
-                    self.fs.rename(f"{staging}/{rel}", f"{ds_path}/{rel}")
-                    moved.append(rel)
-                self.fs.rmtree(staging)
-                if self.emit_cdf:
-                    cdf_dst = f"{ds_path}/{self.CDF_DIR}/commit_version={v}"
-                    self.fs.rmtree(cdf_dst)  # orphan from an aborted claim
-                    self.fs.rename(cdf_staging, cdf_dst)
-                    meta["cdf"] = True
-                    meta["cdf_bytes"] = self._dir_bytes(cdf_dst)
-                meta.update(
-                    rows=int(stats["n"]),
-                    time_from=stats["t0"],
-                    time_to=stats["t1"],
-                    partitions=[list(p) for p in touched],
-                    files_add=added,
-                    files_remove=[],
-                    file_bytes=fbytes,
-                )
-                if fstats:
-                    meta["file_stats"] = fstats
-                if cstats:
-                    meta["col_stats"] = cstats
-                if fbuckets:
-                    meta["file_buckets"] = fbuckets
-                if bspec:
-                    meta["bucket_by"] = bspec
-        except _ReplayedTxn:
-            stop_beat()
-            for rel in moved:
+            with self._staging(ds_path) as st:
+                # ---- the data job and the facts, OUTSIDE any claim ------
+                if cached:
+                    batch = batch.persist()
                 try:
-                    self.fs.remove(f"{ds_path}/{rel}")
-                except OSError:
-                    pass
-            self.fs.rmtree(staging)
-            self.fs.rmtree(cdf_staging)
+                    pcounts = (
+                        self._month_facts(batch, ts_col)[1] if needs_counts else None
+                    )
+                    (
+                        self._rename_frame(
+                            self._layout_append(batch, ts_col, pcounts), base_cmap
+                        )
+                        .drop("exchange", "market", "symbol", "data_type", "period")
+                        .write.partitionBy(*base_spec)
+                        .option("compression", "snappy")
+                        .mode("append")
+                        .parquet(st.dir)
+                    )
+                    if self.emit_cdf:
+                        batch.withColumn("_change_type", F.lit("insert")).write.mode(
+                            "overwrite"
+                        ).option("compression", "snappy").parquet(st.cdf)
+                finally:
+                    if cached:
+                        batch.unpersist()
+                (staged,) = self._stage_facts([st.dir], ts_col, base_cmap)
+                # ---- claim; validate + land inside it -------------------
+                with log.transaction(
+                    timeout=self.commit_timeout_s, payload=payload
+                ) as meta:
+                    if txn is not None and log.last_txn_version(txn[0]) >= int(txn[1]):
+                        raise _ReplayedTxn()
+                    v = meta["version"]
+                    for iv in range(rv + 1, v):
+                        e = log.committed_entry(iv)
+                        if e is None:
+                            continue  # rolled-aside claim: no effects to conflict
+                        self._validate_concurrent(
+                            e, base_contract, set(staged.pcounts), iv, ds_path
+                        )
+                    self._land(
+                        st, staged, ds_path, meta, [], delta=True,
+                        cdf=st.cdf if self.emit_cdf else None,
+                    )
+                    meta.update(staged.commit_facts())
+        except _ReplayedTxn:
             return WriteResult(
                 path=ds_path, time_from=None, time_to=None, rows=0, partitions=[]
             )
-        except BaseException:
-            # conflict/timeout/crash: whatever reached the tree is
-            # uncommitted (invisible) — remove it; the staging leftovers
-            # go with it.  A crash before the claim leaves only the
-            # hidden _staging_* dir (swept by vacuum retention).
-            stop_beat()
-            for rel in moved:
-                try:
-                    self.fs.remove(f"{ds_path}/{rel}")
-                except OSError:
-                    pass
-            self.fs.rmtree(staging)
-            self.fs.rmtree(cdf_staging)
-            raise
-        stop_beat()
-        result = WriteResult(
-            path=ds_path,
-            time_from=stats["t0"],
-            time_to=stats["t1"],
-            rows=int(stats["n"]),
-            partitions=[list(p) for p in touched],
-            files=None,
-            file_stats=fstats,
-            col_stats=cstats or None,
-            file_buckets=fbuckets or None,
-            bucket_spec=bspec or None,
-        )
+        result, row = self._landed_result(key, ds_path, meta)
         if self.manifest is not None:
-            self.manifest.add_entry(
-                exchange=key.exchange, market=key.market, symbol=key.symbol,
-                path=ds_path, data_type=key.data_type,
-                time_from=result.time_from, time_to=result.time_to,
-                metadata={"timeframe": key.period, "rows": result.rows},
-            )
+            self.manifest.add_entries([row])
         return result
 
     def _read_pinned_at(
@@ -3205,9 +3158,8 @@ class LakeWriter:
     ) -> WriteResult:
         """The one COPY-ON-WRITE DML pipeline (delete/update/merge/
         compact): read a snapshot, stage the post-image and change feed
-        under `_staging_<token>` / `_cdf/_staging_<token>` (token-unique
-        final names, heartbeat-touched), move them in under the claim
-        and commit add/remove actions (Delta's protocol).  The two
+        (`_staging`, `_stage_facts`), move them in under the claim
+        (`_land`) and commit add/remove actions (Delta's protocol).  The two
         schedules differ only in WHEN the claim is taken:
 
         - optimistic (`optimistic=True`): capture the snapshot (rv,
@@ -3246,8 +3198,6 @@ class LakeWriter:
         Returns the WriteResult; a no-match commits nothing (any claim
         is released) and returns rows=0, partitions=[].
         """
-        import uuid as _uuid
-
         k = key.normalized()
         log = self.commit_log(k)
         ds_path = self.dataset_path(k)
@@ -3256,19 +3206,13 @@ class LakeWriter:
             live = log.files_at(rv) if rv >= 0 else None
             # a legacy dataset has no pinned listing to rebase against
             optimistic = live is not None
-        token = _uuid.uuid4().hex
-        staging = f"{ds_path}/_staging_{token}"
-        cdf_staging = f"{ds_path}/{self.CDF_DIR}/_staging_{token}"
         payload = {
             "mode": mode,
             **({"optimistic": True} if optimistic else {}),
             **(commit_meta or {}),
         }
-        added: list[str] = []
-        moved: list[str] = []
-        stop_beat = self._staging_heartbeat(staging, cdf_staging)
         try:
-            with ExitStack() as claim:
+            with self._staging(ds_path) as st, ExitStack() as claim:
                 if not optimistic:
                     meta = claim.enter_context(
                         log.transaction(timeout=self.commit_timeout_s, payload=payload)
@@ -3310,38 +3254,18 @@ class LakeWriter:
                         .write.partitionBy(*base_spec)
                         .option("compression", "snappy")
                         .mode("append")
-                        .parquet(staging)
+                        .parquet(st.dir)
                     )
                 cdf = plan.get("cdf") if self.emit_cdf else None
                 if cdf is not None:
                     cdf.write.mode("overwrite").option(
                         "compression", "snappy"
-                    ).parquet(cdf_staging)
-                # final token-unique names while still in staging: the
-                # footer stats and bucket sets below are keyed by rel
-                # paths that already equal what the commit will pin
-                for rel in list_data_files(self.fs, staging):
-                    d, _, name = rel.rpartition("/")
-                    dst_rel = (
-                        f"{d}/{token[:12]}-{name}" if d else f"{token[:12]}-{name}"
-                    )
-                    self.fs.rename(f"{staging}/{rel}", f"{staging}/{dst_rel}")
-                    added.append(dst_rel)
-                write_months = r_set | (
-                    {partition_of(f) for f in added} - {(None, None)}
-                )
-                fstats, cstats, nrows = self._added_file_stats(
-                    staging, added, "ts", column_map=base_cmap
-                )
+                    ).parquet(st.cdf)
                 # the post-image's time range, by the formula every
                 # writer shares (`rows` is the plan's: a delete counts
                 # the rows it removed, not the ones it kept)
-                bounds = self._commit_facts(staging, added, "ts", fstats, nrows)[0]
-                fbuckets, bspec = self._added_file_buckets(
-                    staging, added, column_map=base_cmap
-                )
-                fbytes = file_sizes(self.fs, staging, added)
-                removed = [f for f in live if partition_of(f) in r_set]
+                (staged,) = self._stage_facts([st.dir], "ts", base_cmap)
+                write_months = r_set | set(staged.pcounts)
 
                 if optimistic:
                     meta = claim.enter_context(
@@ -3356,19 +3280,10 @@ class LakeWriter:
                         e, base_contract, r_set, iv, ds_path,
                         read_set=read_set,
                     )
-                for rel in added:
-                    d = rel.rpartition("/")[0]
-                    if d:
-                        self.fs.makedirs(f"{ds_path}/{d}")
-                    self.fs.rename(f"{staging}/{rel}", f"{ds_path}/{rel}")
-                    moved.append(rel)
-                self.fs.rmtree(staging)
-                if cdf is not None:
-                    cdf_dst = f"{ds_path}/{self.CDF_DIR}/commit_version={v}"
-                    self.fs.rmtree(cdf_dst)  # orphan from an aborted claim
-                    self.fs.rename(cdf_staging, cdf_dst)
-                    meta["cdf"] = True
-                    meta["cdf_bytes"] = self._dir_bytes(cdf_dst)
+                self._land(
+                    st, staged, ds_path, meta, live, drop=r_set,
+                    delta=optimistic, cdf=st.cdf if cdf is not None else None,
+                )
                 cdc_parts = plan.get("cdc_partitions")
                 for mk, mv in (plan.get("extra_meta") or {}).items():
                     meta.setdefault(mk, mv)  # commit_meta keys win
@@ -3380,46 +3295,20 @@ class LakeWriter:
                             write_months if cdc_parts is None else cdc_parts
                         )
                     ],
-                    file_bytes=fbytes,
                 )
-                if optimistic:
-                    meta.update(files_add=added, files_remove=removed)
-                else:
-                    meta["files"] = sorted(set(live).difference(removed).union(added))
-                if fstats:
-                    meta["file_stats"] = fstats
-                if cstats:
-                    meta["col_stats"] = cstats
-                if fbuckets:
-                    meta["file_buckets"] = fbuckets
-                if bspec:
-                    meta["bucket_by"] = bspec
-        except BaseException as exc:
-            # conflict/timeout/crash/no match: whatever reached the tree
-            # is uncommitted (invisible) — remove it with the staging
-            stop_beat()
-            for rel in moved:
-                try:
-                    self.fs.remove(f"{ds_path}/{rel}")
-                except OSError:
-                    pass
-            self.fs.rmtree(staging)
-            self.fs.rmtree(cdf_staging)
-            if isinstance(exc, _NoMatch):
-                return WriteResult(
-                    path=ds_path, time_from=None, time_to=None, rows=0, partitions=[]
-                )
-            raise
-        stop_beat()
+        except _NoMatch:
+            return WriteResult(
+                path=ds_path, time_from=None, time_to=None, rows=0, partitions=[]
+            )
         return WriteResult(
             path=ds_path,
-            time_from=bounds["t0"],
-            time_to=bounds["t1"],
+            time_from=staged.facts["t0"],
+            time_to=staged.facts["t1"],
             rows=int(plan["rows"]),
             partitions=[list(p) for p in sorted(write_months)],
             files=None,
-            file_stats=fstats or None,
-            col_stats=cstats or None,
+            file_stats=staged.file_stats or None,
+            col_stats=staged.col_stats or None,
         )
 
     def compact_partitions(
@@ -3433,7 +3322,7 @@ class LakeWriter:
         """OPTIMISTIC small-file compaction of one dataset's month
         partitions (Delta's ``OPTIMIZE ... WHERE``): each fragmented
         month's live files are rewritten into fresh ts-sorted
-        token-named files, staged and validated through the optimistic
+        files, staged and validated through the optimistic
         schedule of `_cow_dml` — the rewrite job never holds the commit
         claim, so concurrent APPENDS keep landing at full rate (their
         files are new and provably commute; `read_set="files"`), while
@@ -3503,15 +3392,12 @@ class LakeWriter:
         )
 
     def _write_locked(
-        self, df: DataFrame, key: DatasetKey, mode: str, cdf_version: int | None = None,
-        column_map: dict | None = None, spec: tuple | None = None,
+        self, df: DataFrame, key: DatasetKey, mode: str, st: _Staging, meta: dict,
+        column_map: dict, spec: tuple,
     ) -> WriteResult:
         ts_col = _require_ts(df, "ts")
-        if spec is None:
-            spec = self.commit_log(key).partition_spec_at(None)
         batch = self._partitioned(df, key, ts_col, spec)
-        emit_cdf = self.emit_cdf and cdf_version is not None
-        cdf_bytes = None
+        emit_cdf = self.emit_cdf
 
         if mode == "upsert":
             merged = self._merge_keep_last(batch, key, ts_col, tag_changes=emit_cdf)
@@ -3533,10 +3419,10 @@ class LakeWriter:
             raise ValueError(f"unknown write mode: {mode}")
 
         # The commit's facts (rows, time range, touched months) come
-        # AFTER the write, from the added files' footers, so the merged
+        # AFTER the write, from the staged files' footers, so the merged
         # rows are normally evaluated exactly once — by the write.  The
         # pre-state files they read stay on disk under MVCC (the write
-        # only appends), so a single evaluation needs no cache.
+        # only adds files), so a single evaluation needs no cache.
         # persist() remains only where the same rows are evaluated twice
         # and both evaluations must see the same rows: the CDF write and
         # the data write (keep-last between same-ts batch rows is a tie
@@ -3556,109 +3442,65 @@ class LakeWriter:
             if emit_cdf
             else merged
         )
-        pcounts = self._month_facts(data_rows, ts_col)[1] if needs_counts else None
-
-        if emit_cdf:
-            # the changed subset rides the same persisted merge; written
-            # BEFORE the data write (a failed data write just leaves an
-            # uncommitted-version _cdf dir the feed reader never serves)
-            changed = merged.where(F.col("_change_type").isNotNull())
-            cdf_bytes = self._write_cdf(key, cdf_version, changed)
-
-        out = (
-            self._layout_append(data_rows, ts_col, pcounts)
-            if mode == "append"
-            else self._cluster_output(
-                data_rows, ts_col, ["year", "month"], len(pcounts or ())
-            )
-        )
-        if emit_cdf:
-            out = out.drop("_change_type")
-        # Write INTO the dataset directory (year/month partitioning only;
-        # the dataset coordinates are already encoded by the directory
-        # itself and are re-inferred by every basePath read).  Writing to
-        # base_path would put every concurrent job's staging under ONE
-        # shared `<base>/_temporary/0/` — Hadoop's FileOutputCommitter
-        # deletes that tree when the first job commits, killing any other
-        # in-flight writer (observed: concurrent two-symbol ingest).
-        # Per-dataset staging makes concurrent writes to DIFFERENT
-        # datasets collision-free; same-dataset writers already serialize
-        # through the commit log.
-        writer = (
-            self._with_spec_cols(
-                self._rename_frame(out, column_map or {}),  # logical -> physical
-                spec, ts_col,
-            )
-            .drop("exchange", "market", "symbol", "data_type", "period")
-            .write.partitionBy(*spec)
-            .option("compression", "snappy")
-        )
-        # MVCC write protocol (lake/snapshot.py): ALWAYS append — data
-        # files are immutable, uniquely named, never replaced in place.
-        # The commit's pinned `files` list defines visibility: upsert/
-        # overwrite "replace" a partition by dropping its old files from
-        # the list, not from disk. A concurrent reader pinned to the
-        # previous commit keeps every file its plan references; vacuum
-        # reclaims superseded files past a retention horizon.
-        ds_path = self.dataset_path(key)
-        pre_live = resolve_live_files(self.fs, ds_path)
-        on_disk = set(list_data_files(self.fs, ds_path))
         try:
-            writer.mode("append").parquet(ds_path)
+            pcounts = self._month_facts(data_rows, ts_col)[1] if needs_counts else None
+            if emit_cdf:
+                # the changed subset rides the same persisted merge
+                merged.where(F.col("_change_type").isNotNull()).write.mode(
+                    "overwrite"
+                ).option("compression", "snappy").parquet(st.cdf)
+            out = (
+                self._layout_append(data_rows, ts_col, pcounts)
+                if mode == "append"
+                else self._cluster_output(
+                    data_rows, ts_col, ["year", "month"], len(pcounts or ())
+                )
+            )
+            if emit_cdf:
+                out = out.drop("_change_type")
+            # MVCC write protocol (lake/snapshot.py): data files are
+            # immutable, uniquely named, never replaced in place.  The
+            # commit's pinned `files` list defines visibility: upsert/
+            # overwrite "replace" a partition by dropping its old files
+            # from the list, not from disk.  A concurrent reader pinned
+            # to the previous commit keeps every file its plan
+            # references; vacuum reclaims superseded files past a
+            # retention horizon.  Dataset coordinates are encoded by the
+            # directory itself, so only the spec's columns partition.
+            (
+                self._with_spec_cols(
+                    self._rename_frame(out, column_map),  # logical -> physical
+                    spec, ts_col,
+                )
+                .drop("exchange", "market", "symbol", "data_type", "period")
+                .write.partitionBy(*spec)
+                .option("compression", "snappy")
+                .mode("append")
+                .parquet(st.dir)
+            )
         finally:
             if cached:
                 merged.unpersist()
-        added = [f for f in list_data_files(self.fs, ds_path) if f not in on_disk]
-        fstats, cstats, nrows = self._added_file_stats(
-            ds_path, added, ts_col, column_map=column_map
+        (staged,) = self._stage_facts([st.dir], ts_col, column_map)
+        ds_path = self.dataset_path(key)
+        # upsert and overwrite emit rows only in the batch's months and
+        # rewrite each of them wholesale, so the staged files' months
+        # name exactly the partitions whose old files leave the listing
+        self._land(
+            st, staged, ds_path, meta, self._base_listing(ds_path),
+            drop=set(staged.pcounts) if mode != "append" else (),
+            cdf=st.cdf if emit_cdf else None,
         )
-        # the written rows' (year, month) set = the batch's = the
-        # partitions this commit replaces: upsert and overwrite emit rows
-        # only in the batch's months (dynamic overwrite touches nothing
-        # else), so the added files' months name them exactly
-        stats, pcounts = self._commit_facts(ds_path, added, ts_col, fstats, nrows)
-        touched = sorted(pcounts)
-        # legacy bootstrap: no pinned list yet → the live list IS the
-        # pre-write disk state (no tombstones can exist before the first
-        # pinned commit, so the two agree)
-        base_live = pre_live if pre_live is not None else sorted(on_disk)
-        if mode == "append":
-            new_live = sorted(set(base_live).union(added))
-        else:
-            # upsert/overwrite rewrote the touched months wholesale: the
-            # old files of those partitions leave the snapshot
-            t_set = {(y, m) for y, m in touched}
-            kept = [f for f in base_live if partition_of(f) not in t_set]
-            new_live = sorted(set(kept).union(added))
-        fbuckets, bspec = self._added_file_buckets(ds_path, added)
-        result = WriteResult(
-            path=ds_path,
-            time_from=stats["t0"],
-            time_to=stats["t1"],
-            rows=stats["n"],
-            partitions=[list(p) for p in touched],
-            files=new_live,
-            file_stats=fstats,
-            col_stats=cstats or None,
-            file_buckets=fbuckets or None,
-            bucket_spec=bspec or None,
-            # per-added-file byte sizes: the streaming sources' BYTE-based
-            # admission control budgets a catch-up from the commit log
-            # alone — no per-poll file listing
-            file_bytes=file_sizes(self.fs, ds_path, added),
-            cdf_bytes=cdf_bytes,
-        )
+        # touched partitions in the commit record = the CDC surface: an
+        # incremental consumer (reader.read_changes_since) re-reads
+        # exactly these partitions, never the dataset
+        meta.update(staged.commit_facts())
+        result, row = self._landed_result(key, ds_path, meta)
         if self.manifest is not None:
-            self.manifest.add_entry(
-                exchange=key.exchange,
-                market=key.market,
-                symbol=key.symbol,
-                path=result.path,
-                data_type=key.data_type,
-                time_from=result.time_from,
-                time_to=result.time_to,
-                metadata={"timeframe": key.period, "rows": result.rows},
-            )
+            # registered while the claim is held: a concurrent writer
+            # cannot commit data + manifest in between and have its row
+            # clobbered by this older commit's
+            self.manifest.add_entries([row])
         return result
 
     def _layout_needs_counts(self, append: bool) -> bool:
@@ -3666,7 +3508,7 @@ class LakeWriter:
         BEFORE the write: `optimize_write` sizes an append's files from
         them, and `bucket_by` / `cluster_by` scale their task count with
         the month count.  Every other write learns its months from the
-        files it wrote (`_commit_facts`) and runs no pre-write job."""
+        files it wrote (`_stage_facts`) and runs no pre-write job."""
         return bool(self.bucket_by or self.cluster_by or (append and self.optimize_write))
 
     @staticmethod
@@ -3676,7 +3518,7 @@ class LakeWriter:
         job.  A null-month group (null ts) counts toward n but touches
         no partition.  Two uses only: the pre-write counts a layout
         needs (`_layout_needs_counts`), and the fallback of
-        `_commit_facts` over a commit's added files when a footer has no
+        `_stage_facts` over a commit's staged files when a footer has no
         sound ts range — commit facts otherwise come from the footers."""
         groups = (
             rows.groupBy("year", "month")
@@ -3903,26 +3745,21 @@ class LakeWriter:
         )
 
     def _added_file_buckets(
-        self, ds_path: str, added: list[str], column_map: dict | None = None
+        self, added: dict[str, list[str]], cmap: dict
     ) -> tuple[dict, dict]:
         """Per-added-file bucket-id sets for the point-lookup skip index
-        (see `bucket_by`): one bucket-columns-only scan of JUST the
-        files this commit added, aggregating
-        ``collect_set(pmod(xxhash64(col), n))`` per file.  Returns
-        ({col: {rel: [ids]}}, {col: [n_buckets, dtype]}).
-
-        Column mapping: `bucket_by` keys are LOGICAL; the files carry
-        PHYSICAL names post-rename, so the scan renames back first and
-        the index stays keyed by the logical name the reader's
-        `point=` lookup uses (same contract as `_added_file_stats`)."""
-        if not self.bucket_by or not added:
+        (see `bucket_by`): ONE bucket-columns-only scan of just the
+        files `added` ({root: [rel]}) names, however many roots,
+        aggregating ``collect_set(pmod(xxhash64(col), n))`` per file.
+        Returns ({root: {col: {rel: [ids]}}}, {col: [n_buckets, dtype]}),
+        keyed by the LOGICAL names the reader's `point=` lookup uses
+        (`cmap` maps them to the files' physical names)."""
+        paths = {
+            f"{root}/{rel}": (root, rel) for root, rels in added.items() for rel in rels
+        }
+        if not self.bucket_by or not paths:
             return {}, {}
-        df = self.spark.read.parquet(*[f"{ds_path}/{f}" for f in added])
-        cmap = (
-            column_map
-            if column_map is not None
-            else CommitLog(ds_path, fs=self.fs).column_map_at(None)
-        )
+        df = self.spark.read.parquet(*paths)
         phys = {c: cmap.get(c, c) for c in self.bucket_by}
         cols = [c for c in self.bucket_by if phys[c] in df.columns]
         if not cols:
@@ -3934,97 +3771,38 @@ class LakeWriter:
             for i, c in enumerate(cols)
         ]
         rows = df.groupBy(F.col("_metadata.file_path").alias("fp")).agg(*aggs).collect()
-        out: dict = {c: {} for c in cols}
+        # `_metadata.file_path` is a qualified URI: match it by suffix,
+        # among the files of the same name
+        by_name: dict[str, list[str]] = {}
+        for p in paths:
+            by_name.setdefault(p.rpartition("/")[2], []).append(p)
+        out: dict = {}
         for r in rows:
-            rel = next(
-                (f for f in added if r["fp"].endswith(f"{ds_path}/{f}")), None
+            p = next(
+                (p for p in by_name.get(r["fp"].rpartition("/")[2], ())
+                 if r["fp"].endswith(p)),
+                None,
             )
-            if rel is None:
+            if p is None:
                 continue
+            root, rel = paths[p]
             for i, c in enumerate(cols):
-                out[c][rel] = sorted(int(x) for x in r[f"b{i}"] if x is not None)
+                out.setdefault(root, {}).setdefault(c, {})[rel] = sorted(
+                    int(x) for x in r[f"b{i}"] if x is not None
+                )
         spec = {
             c: [int(self.bucket_by[c]), df.schema[phys[c]].dataType.simpleString()]
             for c in cols
         }
         return out, spec
 
-    def _added_file_stats(
-        self, ds_path: str, added: list[str], ts_col: str,
-        column_map: dict | None = None,
-    ) -> tuple[dict[str, list[int]], dict[str, dict[str, list]], dict[str, int]]:
-        """Per-added-file [min_ts, max_ts] (plus, when `stats_cols` is
-        configured, per-column [min, max]) for reader-side FILE SKIPPING
-        (Delta's data-skipping stats, rel-path-keyed in the commit
-        payload).  Read from the Parquet footers of JUST the files this
-        commit added (`snapshot.added_file_stats`): driver-side tail
-        reads, no Spark job, cost proportional to the batch, never the
-        dataset.  A bounded read drops non-overlapping files before the
-        scan even starts (`LakeReader.read_range` / column bounds);
-        files without stats (legacy, or a footer without a sound range)
-        are simply scanned, so skipping is always sound.  Returns
-        (ts_stats, col_stats, num_rows); the footers' row counts feed
-        the commit's own facts (`_commit_facts`), so one footer read
-        per file serves both.
-
-        Column mapping: `stats_cols` are LOGICAL names; post-rename the
-        files carry PHYSICAL ones, so the footer lookup translates
-        through the dataset's map and the recorded stats stay keyed
-        logical (what reader bounds look up).  `column_map` overrides
-        the committed map — the commit that ASSIGNS a fresh physical
-        name (re-added column) must stat the files it just wrote under
-        that name, which is not committed yet."""
-        cmap = (
-            column_map
-            if column_map is not None
-            else CommitLog(ds_path, fs=self.fs).column_map_at(None)
-        )
-        phys_cols = tuple(cmap.get(c, c) for c in self.stats_cols)
-        f, c, n = added_file_stats(
-            self.fs, {ds_path: added}, ts_col, phys_cols, with_rows=True
-        )
-        back = {p: l for l, p in cmap.items()}
-        cstats = {
-            back.get(col, col): v for col, v in (c.get(ds_path) or {}).items()
-        }
-        return f.get(ds_path, {}), cstats, n.get(ds_path, {})
-
-    def _commit_facts(
-        self, root: str, added: list[str], ts_col: str,
-        fstats: dict, num_rows: dict,
-    ) -> tuple[dict, dict]:
-        """A commit's ({"t0", "t1", "n"}, {(year, month): rows}) from
-        the files it added (`snapshot.footer_facts`: footer row counts,
-        footer ts ranges, Hive dirs) — no Spark job, and the one formula
-        every writer shares, whatever produced the rows.  When a dated
-        file's footer has no sound ts range, the same facts come from
-        one aggregate over the ADDED files under `root` (never over the
-        source, never a guess)."""
-        facts = footer_facts(added, num_rows, fstats)
-        if facts is not None:
-            return facts
-        rows = self.spark.read.option("basePath", root).parquet(
-            *[f"{root}/{f}" for f in added]
-        )
-        return self._month_facts(rows, ts_col)
-
     def _merge_keep_last(
         self, batch: DataFrame, key: DatasetKey, ts_col: str, tag_changes: bool = False
     ) -> DataFrame:
-        """Union existing+new for the touched months, keep-last per ts.
-
-        Precedence is explicit: _src=1 (new) beats _src=0 (existing).
-        Only the year/month partitions present in the incoming batch are
-        read back — partition-pruned, so upsert cost is O(batch months),
-        not O(dataset) even on a 100 TB lake.
-
-        `tag_changes=True` (the CDF path) adds a `_change_type` column:
-        a winning batch row whose ts already existed is an
-        "update_postimage", a new ts an "insert", an unchanged existing
-        row NULL.  The existence test is one extra aggregate over the
-        SAME window partitioning the keep-last rank uses — no additional
-        shuffle.
-        """
+        """Union existing+new for the touched months, keep-last per ts
+        (`_keep_last`).  Only the year/month partitions present in the
+        incoming batch are read back — partition-pruned, so upsert cost
+        is O(batch months), not O(dataset) even on a 100 TB lake."""
         existing = self._read_existing(key)
         if existing is None:
             if tag_changes:
@@ -4038,26 +3816,42 @@ class LakeWriter:
         month_pred = F.lit(False)
         for y, m in months:
             month_pred = month_pred | ((F.col("year") == y) & (F.col("month") == m))
-        existing = existing.where(month_pred)
+        return self._keep_last(existing.where(month_pred), batch, ts_col, tag_changes)
 
+    @staticmethod
+    def _keep_last(
+        existing: DataFrame, batch: DataFrame, ts_col: str, tag_changes: bool
+    ) -> DataFrame:
+        """The keep-last merge both upserts share: per row key (symbol,
+        data_type, period, ts) a batch row (_src=1) beats an existing
+        row (_src=0), by one window.  A null ts is no key: it matches
+        nothing — as in a SQL or Delta ``MERGE ... ON`` — so every
+        null-ts batch row is kept (and tagged an insert).
+
+        `tag_changes=True` (the CDF path) adds `_change_type`: a winning
+        batch row whose ts already existed is an "update_postimage", a
+        new ts an "insert", an unchanged existing row NULL.  The
+        existence test is one extra aggregate over the SAME window
+        partitioning the keep-last rank uses — no additional shuffle."""
         old = existing.withColumn("_src", F.lit(0))
         new = batch.withColumn("_src", F.lit(1))
         unioned = old.unionByName(new, allowMissingColumns=True)
-        w = Window.partitionBy("symbol", "data_type", "period", ts_col).orderBy(F.desc("_src"))
-        ranked = unioned.withColumn("_rn", F.row_number().over(w))
+        wf = Window.partitionBy("symbol", "data_type", "period", ts_col)
+        ranked = unioned.withColumn(
+            "_rn", F.row_number().over(wf.orderBy(F.desc("_src")))
+        )
         if tag_changes:
-            wf = Window.partitionBy("symbol", "data_type", "period", ts_col)
+            had_old = F.max(F.when(F.col("_src") == 0, 1).otherwise(0)).over(wf)
             ranked = ranked.withColumn(
-                "_had_old", F.max(F.when(F.col("_src") == 0, 1).otherwise(0)).over(wf)
-            ).withColumn(
                 "_change_type",
                 F.when(
-                    (F.col("_src") == 1) & (F.col("_had_old") == 1),
+                    (F.col("_src") == 1) & F.col(ts_col).isNotNull() & (had_old == 1),
                     F.lit("update_postimage"),
                 ).when(F.col("_src") == 1, F.lit("insert")),
             )
-            return ranked.where(F.col("_rn") == 1).drop("_rn", "_src", "_had_old")
-        return ranked.where(F.col("_rn") == 1).drop("_rn", "_src")
+        return ranked.where(
+            (F.col("_rn") == 1) | F.col(ts_col).isNull()
+        ).drop("_rn", "_src")
 
     def _overwrite_tag_changes(
         self, batch: DataFrame, key: DatasetKey, ts_col: str
@@ -4166,7 +3960,7 @@ class LakeWriter:
         batch: DataFrame,
         keys: list[DatasetKey],
         ts_col: str,
-        triples: list[tuple[str, int, int]] | None = None,
+        triples: list[tuple],
         tag_changes: bool = False,
     ) -> DataFrame:
         """Multi-dataset keep-last merge: ONE read-back over every
@@ -4175,10 +3969,9 @@ class LakeWriter:
         window partitions by symbol as well, so per-symbol precedence
         is identical to N separate _merge_keep_last calls.
 
-        `tag_changes=True` (the CDF path) adds `_change_type` with the
-        same single-extra-aggregate mechanic as `_merge_keep_last` —
-        the window already partitions by symbol, so the tags are
-        per-dataset correct."""
+        `tag_changes=True` (the CDF path) adds `_change_type` through the
+        same `_keep_last` — the window already partitions by symbol, so
+        the tags are per-dataset correct."""
         # per-dataset snapshot resolution: a pinned dataset contributes
         # exactly its live files (a raw subtree scan would merge in
         # tombstones and resurrect replaced/deleted rows); legacy
@@ -4225,15 +4018,12 @@ class LakeWriter:
         # partition overwrite only replaces partitions present in the
         # output).  Bounded driver state: symbols x months, the same
         # cardinality the dynamic-overwrite commit enumerates anyway.
-        if triples is None:  # caller usually already collected these
-            triples = [
-                (r["symbol"], r["year"], r["month"])
-                for r in batch.select("symbol", "year", "month").distinct().collect()
-            ]
+        # a null month (null-ts rows) matches no existing row
+        triples = [t for t in triples if t[1] is not None]
         if not triples:
             return _all_inserts(batch)
-        if len(triples) <= 1024:
-            pred = F.lit(False)
+        pred = F.lit(False)
+        if len(triples) <= _MULTI_PRUNE_TRIPLES:
             for s, y, m in triples:
                 pred = pred | (
                     (F.col("symbol") == s) & (F.col("year") == y) & (F.col("month") == m)
@@ -4242,7 +4032,10 @@ class LakeWriter:
             # Predicate-size fallback for very wide batches: static
             # per-month pruning (correct, coarser — bounded read
             # amplification instead of a 10k-term Catalyst expression).
-            pred = F.lit(False)
+            # It reads back, and so rewrites, whole months of symbols
+            # the batch did not touch there; the commit drops the old
+            # files of every month the staged files hold, so those rows
+            # are replaced, never duplicated.
             for y, m in {(y, m) for _, y, m in triples}:
                 pred = pred | ((F.col("year") == y) & (F.col("month") == m))
         existing = None
@@ -4258,27 +4051,7 @@ class LakeWriter:
                 if existing is None
                 else existing.unionByName(part, allowMissingColumns=True)
             )
-        existing = existing.where(pred)
-        old = existing.withColumn("_src", F.lit(0))
-        new = batch.withColumn("_src", F.lit(1))
-        unioned = old.unionByName(new, allowMissingColumns=True)
-        w = Window.partitionBy("symbol", "data_type", "period", ts_col).orderBy(
-            F.desc("_src")
-        )
-        ranked = unioned.withColumn("_rn", F.row_number().over(w))
-        if tag_changes:
-            wf = Window.partitionBy("symbol", "data_type", "period", ts_col)
-            ranked = ranked.withColumn(
-                "_had_old", F.max(F.when(F.col("_src") == 0, 1).otherwise(0)).over(wf)
-            ).withColumn(
-                "_change_type",
-                F.when(
-                    (F.col("_src") == 1) & (F.col("_had_old") == 1),
-                    F.lit("update_postimage"),
-                ).when(F.col("_src") == 1, F.lit("insert")),
-            )
-            return ranked.where(F.col("_rn") == 1).drop("_rn", "_src", "_had_old")
-        return ranked.where(F.col("_rn") == 1).drop("_rn", "_src")
+        return self._keep_last(existing.where(pred), batch, ts_col, tag_changes)
 
     def _read_existing(self, key: DatasetKey) -> DataFrame | None:
         """Scan ONLY this dataset's subtree: no whole-lake listing, no

@@ -428,7 +428,7 @@ def test_concurrent_multi_writes_disjoint_symbols_no_staging_collision(lake, spa
         os.path.join(r, d)
         for r, dirs, _ in os.walk(writer.base_path)
         for d in dirs
-        if d == "_temporary" or d.startswith("_staging_multi_")
+        if d == "_temporary" or d.startswith("_staging_")
     ]
     assert leftovers == [], leftovers
 

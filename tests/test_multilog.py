@@ -678,7 +678,7 @@ def test_multi_write_over_scheme_prefixed_base(spark, tmp_path):
         d
         for r, dirs, _ in _os.walk(local_root)
         for d in dirs
-        if d == "_temporary" or d.startswith(("_staging_multi_", "_cdf_staging_"))
+        if d == "_temporary" or d.startswith("_staging_")
     ]
     assert leftovers == [], leftovers
 
