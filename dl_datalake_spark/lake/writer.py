@@ -320,20 +320,12 @@ class LakeWriter:
 
         `optimistic=True` (mode='append' only) runs the data job
         OUTSIDE the commit claim and validates under a milliseconds
-        claim window (`_write_optimistic_append`) — concurrent
+        claim window (`_write`'s optimistic schedule) — concurrent
         appenders to one dataset scale instead of serializing their
         Spark jobs; a true conflict raises ConcurrentWriteConflict."""
-        if optimistic:
-            if mode != "append":
-                raise ValueError(
-                    "optimistic=True is append-only: upsert/overwrite are "
-                    "read-modify-write and must hold the claim across the job"
-                )
-            return self._write_optimistic_append(
-                df, key.normalized(), commit_meta=commit_meta, txn=txn
-            )
         return self._write(
-            df, key.normalized(), mode=mode, commit_meta=commit_meta, txn=txn
+            df, key.normalized(), mode=mode, commit_meta=commit_meta, txn=txn,
+            optimistic=optimistic,
         )
 
     def write_ticks(
@@ -351,11 +343,7 @@ class LakeWriter:
         k = key.normalized()
         if k.data_type == "raw":
             k = DatasetKey(k.exchange, k.market, k.symbol, "ticks", k.period)
-        if optimistic:
-            if mode != "append":
-                raise ValueError("optimistic=True is append-only")
-            return self._write_optimistic_append(df, k, txn=txn)
-        return self._write(df, k, mode=mode, txn=txn)
+        return self._write(df, k, mode=mode, txn=txn, optimistic=optimistic)
 
     def write_ohlc_multi(
         self,
@@ -416,10 +404,10 @@ class LakeWriter:
         import uuid
 
         # Cross-dataset visibility (lake/multilog.py): every per-dataset
-        # commit carries this txid; the intent record written just before
-        # the finalizes (end of the ExitStack body) lets a concurrent
-        # `read_datasets` exclude the half-finalized window. Generated
-        # up-front so the quarantine dir below can share it.
+        # commit carries this txid and `_multi_commit` records the intent
+        # before any finalize, so a concurrent `read_datasets` excludes
+        # the half-finalized window. Generated up-front so the
+        # quarantine dir below can share it.
         txid = uuid.uuid4().hex
         exp_meta: dict = {}
         if self.expectations:
@@ -456,27 +444,14 @@ class LakeWriter:
             return {}
         keys = [DatasetKey(ex, mk, s, data_type, period) for s in symbols]
 
-        from dl_datalake_spark.lake.multilog import MultiCommitLog
         from dl_datalake_spark.lake.paths import dataset_rel_path
 
-        multilog = MultiCommitLog(self.base_path, fs=self.fs)
-        intent_written = False
-
-        def _run(stack: "ExitStack") -> dict[str, WriteResult]:
-            nonlocal intent_written, batch
-            # ONE staging dir for every dataset's files: each dataset's
-            # share `<staging>/<dataset_rel_path>` mirrors its directory,
-            # so the facts and land steps run per dataset unchanged
-            st = stack.enter_context(self._staging(self.base_path))
-            metas = [
-                stack.enter_context(
-                    self.commit_log(k).transaction(
-                        timeout=self.commit_timeout_s,
-                        payload={"mode": mode, "multi": True, "txid": txid, **exp_meta},
-                    )
-                )
-                for k in keys  # sorted symbol order: deadlock-free
-            ]
+        # ONE staging dir for every dataset's files: each dataset's share
+        # `<staging>/<dataset_rel_path>` mirrors its directory, so the
+        # facts and land steps run per dataset unchanged
+        with self._staging(self.base_path) as st, self._multi_commit(
+            keys, [{"mode": mode, **exp_meta}] * len(keys), txid
+        ) as metas:
             # Write-time schema contract per dataset, ONE shared batch
             # (lake/schema.py): gather every dataset's lossless up-casts
             # first and apply the WIDEST (the single write job produces
@@ -568,7 +543,7 @@ class LakeWriter:
                 raise ValueError(f"unknown write mode: {mode}")
 
             # the CDF write and the data write must see the same rows
-            # (see _write_locked); every other fact comes from the files
+            # (see _stage_write); every other fact comes from the files
             if emit_cdf:
                 merged = merged.persist()
             try:
@@ -603,12 +578,11 @@ class LakeWriter:
             finally:
                 if emit_cdf:
                     merged.unpersist()
-            # Manifest registration happens while the dataset locks are
-            # still held — same data-then-manifest ordering contract as
-            # _write_locked.  Registering after lock release would let a
-            # concurrent writer commit data+manifest in the gap and then
-            # have its manifest row clobbered by this (older) commit's
-            # stale rows/metadata.
+            # Manifest registration happens while the dataset claims are
+            # still held — the same data-then-manifest ordering as
+            # `_write`: registering after release would let a concurrent
+            # writer commit data+manifest in the gap and then have its
+            # manifest row clobbered by this (older) commit's.
             results: dict[str, WriteResult] = {}
             manifest_rows = []
             shares = self._stage_facts(
@@ -627,29 +601,9 @@ class LakeWriter:
                 manifest_rows.append(row)
             if self.manifest is not None:
                 self.manifest.add_entries(manifest_rows)
-            # all claims still held, nothing finalized yet: record the
-            # intent so readers can refuse the mixed-epoch window
-            multilog.begin(
-                {
-                    dataset_rel_path(k): meta["version"]
-                    for k, meta in zip(keys, metas)
-                },
-                txid=txid,
-            )
-            intent_written = True
-            return results
-
-        try:
-            with ExitStack() as stack:
-                out = _run(stack)  # finalizes run at stack exit
-        except BaseException:
-            if intent_written:
-                self._abort_intent_if_unfinalized(multilog, txid)
-            raise
-        multilog.commit(txid)
-        for res in out.values():
+        for res in results.values():
             res.txid = txid
-        return out
+        return results
 
     # -- row-level delete ---------------------------------------------------
 
@@ -892,62 +846,36 @@ class LakeWriter:
         Returns {dataset rel path: WriteResult} with the shared `txid`."""
         import uuid as _uuid
 
-        from dl_datalake_spark.lake.multilog import MultiCommitLog
         from dl_datalake_spark.lake.paths import dataset_rel_path
 
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         norm = [k.normalized() for k in keys]
-        rels = sorted(dataset_rel_path(k) for k in norm)
         by_rel = {dataset_rel_path(k): k for k in norm}
         if len(by_rel) != len(norm):
             raise ValueError("delete_where_multi: duplicate dataset keys")
-        ml = MultiCommitLog(self.base_path, fs=self.fs)
+        rels = sorted(by_rel)  # sorted claim order: deadlock-free
         txid = _uuid.uuid4().hex
-        intent_written = False
-        counts: dict[str, tuple[int, list]] = {}
-
-        def _run(stack: "ExitStack") -> dict[str, WriteResult]:
-            nonlocal intent_written
-            metas = {
-                r: stack.enter_context(
-                    self.commit_log(by_rel[r]).transaction(
-                        timeout=self.commit_timeout_s,
-                        payload={"mode": "delete-dv", "multi": True, "txid": txid},
-                    )
-                )
-                for r in rels  # sorted order: deadlock-free
-            }
-            results: dict[str, WriteResult] = {}
-            for r in rels:
+        out: dict[str, WriteResult] = {}
+        with self._multi_commit(
+            [by_rel[r] for r in rels], [{"mode": "delete-dv"}] * len(rels), txid
+        ) as metas:
+            for r, meta in zip(rels, metas):
                 k = by_rel[r]
-                log = self.commit_log(k)
-                n, touched = self._delete_dv_into(k, log, pred, months, metas[r])
-                counts[r] = (n, touched)
-                results[r] = WriteResult(
+                n, touched = self._delete_dv_into(
+                    k, self.commit_log(k), pred, months, meta
+                )
+                out[r] = WriteResult(
                     path=self.dataset_path(k), time_from=None, time_to=None,
                     rows=n, partitions=[list(p) for p in touched], txid=txid,
                 )
-            ml.begin({r: metas[r]["version"] for r in rels}, txid=txid)
-            intent_written = True
-            return results
-
-        try:
-            with ExitStack() as stack:
-                out = _run(stack)  # finalizes run at stack exit
-        except BaseException:
-            if intent_written:
-                self._abort_intent_if_unfinalized(ml, txid)
-            raise
-        ml.commit(txid)
         # manifest AFTER the flip (committed-or-invisible to the catalog
         # too); incremental — no dataset rescan
         if self.manifest is not None:
-            for r in rels:
-                n, touched = counts[r]
-                if n > 0:
+            for r, res in out.items():
+                if res.rows > 0:
                     self._refresh_manifest_result(
-                        by_rel[r], self.dataset_path(by_rel[r]), n, touched,
-                        delta_rows=-n,
+                        by_rel[r], res.path, res.rows,
+                        [tuple(p) for p in res.partitions], delta_rows=-res.rows,
                     )
         return out
 
@@ -1548,15 +1476,9 @@ class LakeWriter:
                     t0 = min(lows) if lows else None
                     t1 = max(highs) if highs else None
                 result.time_from, result.time_to = t0, t1
-                self.manifest.add_entry(
-                    exchange=k.exchange, market=k.market, symbol=k.symbol,
-                    path=path, data_type=k.data_type,
-                    time_from=t0, time_to=t1,
-                    metadata={
-                        "timeframe": k.period,
-                        "rows": max(0, prior_rows + int(delta_rows)),
-                    },
-                )
+                self.manifest.add_entries([self._manifest_row(
+                    k, path, t0, t1, max(0, prior_rows + int(delta_rows))
+                )])
                 return result
         remaining = self._read_existing(k)
         if remaining is not None:
@@ -1565,11 +1487,8 @@ class LakeWriter:
                 F.count(F.lit(1)).alias("n"),
             ).collect()[0]
             result.time_from, result.time_to = s["t0"], s["t1"]
-            self.manifest.add_entry(
-                exchange=k.exchange, market=k.market, symbol=k.symbol,
-                path=path, data_type=k.data_type,
-                time_from=s["t0"], time_to=s["t1"],
-                metadata={"timeframe": k.period, "rows": s["n"]},
+            self.manifest.add_entries(
+                [self._manifest_row(k, path, s["t0"], s["t1"], s["n"])]
             )
         return result
 
@@ -1794,12 +1713,9 @@ class LakeWriter:
         ) as meta:
             result = self._restore_into(k, log, int(version), meta)
         if self.manifest is not None and result.rows > 0:
-            self.manifest.add_entry(
-                exchange=k.exchange, market=k.market, symbol=k.symbol,
-                path=result.path, data_type=k.data_type,
-                time_from=result.time_from, time_to=result.time_to,
-                metadata={"timeframe": k.period, "rows": result.rows},
-            )
+            self.manifest.add_entries([self._manifest_row(
+                k, result.path, result.time_from, result.time_to, result.rows
+            )])
         return result
 
     def _restore_into(
@@ -2060,11 +1976,9 @@ class LakeWriter:
         advertising an invisible restore."""
         import uuid as _uuid
 
-        from dl_datalake_spark.lake.multilog import MultiCommitLog
         from dl_datalake_spark.lake.paths import dataset_rel_path, key_from_rel_path
 
-        ml = MultiCommitLog(self.base_path, fs=self.fs)
-        rec = ml.record(txid)
+        rec = self._multilog().record(txid)
         if rec is None:
             raise ValueError(
                 f"multi-commit {txid!r} is unknown under {self.base_path} — "
@@ -2083,90 +1997,91 @@ class LakeWriter:
                         "unfinalized or usurped) — there is no atomic state "
                         "to restore to"
                     )
-        rels = sorted(claimed)
-        keys = {r: key_from_rel_path(r).normalized() for r in rels}
+        rels = sorted(claimed)  # sorted claim order: deadlock-free
+        keys = [key_from_rel_path(r).normalized() for r in rels]
         new_txid = _uuid.uuid4().hex
-        intent_written = False
-
-        def _run(stack: "ExitStack") -> dict[str, WriteResult]:
-            nonlocal intent_written
-            metas = {
-                r: stack.enter_context(
-                    self.commit_log(keys[r]).transaction(
-                        timeout=self.commit_timeout_s,
-                        payload={
-                            "mode": "restore",
-                            "restored_to": claimed[r],
-                            "multi": True,
-                            "txid": new_txid,
-                            "restore_of": txid,
-                        },
-                    )
-                )
-                for r in rels  # sorted order: deadlock-free
-            }
-            results: dict[str, WriteResult] = {}
-            for r in rels:
-                k = keys[r]
-                res = self._restore_into(
-                    k, self.commit_log(k), claimed[r], metas[r]
-                )
+        out: dict[str, WriteResult] = {}
+        with self._multi_commit(
+            keys,
+            [
+                {"mode": "restore", "restored_to": claimed[r], "restore_of": txid}
+                for r in rels
+            ],
+            new_txid,
+        ) as metas:
+            for r, k, meta in zip(rels, keys, metas):
+                res = self._restore_into(k, self.commit_log(k), claimed[r], meta)
                 res.txid = new_txid
-                results[dataset_rel_path(k)] = res
-            # all claims held, nothing finalized: record the restore's
-            # intent so readers can refuse the mixed-epoch window
-            ml.begin(
-                {dataset_rel_path(keys[r]): metas[r]["version"] for r in rels},
-                txid=new_txid,
-            )
-            intent_written = True
-            return results
-
-        try:
-            with ExitStack() as stack:
-                out = _run(stack)  # finalizes run at stack exit
-        except BaseException:
-            if intent_written:
-                self._abort_intent_if_unfinalized(ml, new_txid)
-            raise
-        ml.commit(new_txid)
+                out[dataset_rel_path(k)] = res
         # manifest AFTER the restore committed (same ordering as
         # restore_dataset): a torn crash above leaves the catalog as it
         # was, never advertising a restore no reader can see
         if self.manifest is not None:
-            manifest_rows = [
-                {
-                    "exchange": keys[r].exchange, "market": keys[r].market,
-                    "symbol": keys[r].symbol, "path": res.path,
-                    "data_type": keys[r].data_type,
-                    "time_from": res.time_from, "time_to": res.time_to,
-                    "metadata": {"timeframe": keys[r].period, "rows": res.rows},
-                }
-                for r, res in out.items()
+            self.manifest.add_entries([
+                self._manifest_row(k, res.path, res.time_from, res.time_to, res.rows)
+                for k, res in zip(keys, out.values())
                 if res.rows > 0
-            ]
-            if manifest_rows:
-                self.manifest.add_entries(manifest_rows)
+            ])
         return out
 
-    def _abort_intent_if_unfinalized(self, ml, txid: str) -> None:
-        """Failure path of a multi-commit: flip its intent record to
-        `aborted` ONLY when no claimed slot finalized — aborted records
-        stop constraining reader cuts, so aborting after a PARTIAL
-        finalize (an exception mid-unwind, after some transactions
-        already committed) would immediately serve the torn epoch.
-        Left in-progress instead: readers exclude the partial window
-        while the record is fresh, and past stale_timeout_s it becomes
-        the documented permanent-partial (Delta multi-table parity)."""
-        rec = ml.record(txid)
-        if rec:
-            for r, v in rec.get("datasets", {}).items():
-                e = CommitLog(
-                    f"{self.base_path}/{r.strip('/')}", fs=self.fs
-                ).committed_entry(int(v))
-                if e is not None and e.get("txid") == txid:
-                    return  # partial finalize: must stay constraining
-        ml.abort(txid)
+    def _multilog(self):
+        """The lake's multi-commit intent log (lake/multilog.py)."""
+        from dl_datalake_spark.lake.multilog import MultiCommitLog
+
+        return MultiCommitLog(self.base_path, fs=self.fs)
+
+    @contextmanager
+    def _multi_commit(
+        self, keys: list[DatasetKey], payloads: list[dict], txid: str
+    ):
+        """The one multi-dataset commit (`write_ohlc_multi`,
+        `delete_where_multi`, `restore_lake_to`): claim every dataset's
+        log in the given order (callers sort it: deadlock-free), each
+        with its payload plus ``multi`` and the shared `txid`, and yield
+        the claims' metas in that order.  When the body returns, every
+        claim is still held and nothing is finalized: the lake-level
+        intent (lake/multilog.py) is recorded then, so readers can
+        refuse the mixed-epoch window while the claims finalize one by
+        one; the record flips committed after the last one.
+
+        On failure the intent is aborted ONLY when no claimed slot
+        finalized under `txid` — aborted records stop constraining
+        reader cuts, so aborting after a PARTIAL finalize (an exception
+        mid-unwind, after some transactions already committed) would
+        serve the torn epoch at once.  Left in-progress instead: readers
+        exclude the partial window while the record is fresh, and past
+        stale_timeout_s it becomes the documented permanent partial
+        (Delta multi-table parity)."""
+        from dl_datalake_spark.lake.paths import dataset_rel_path
+
+        ml = self._multilog()
+        intent_written = False
+        try:
+            with ExitStack() as stack:
+                metas = [
+                    stack.enter_context(
+                        self.commit_log(k).transaction(
+                            timeout=self.commit_timeout_s,
+                            payload={**p, "multi": True, "txid": txid},
+                        )
+                    )
+                    for k, p in zip(keys, payloads)
+                ]
+                yield metas
+                ml.begin(
+                    {dataset_rel_path(k): m["version"] for k, m in zip(keys, metas)},
+                    txid=txid,
+                )
+                intent_written = True
+        except BaseException:
+            if intent_written and not any(
+                (self.commit_log(k).committed_entry(m["version"]) or {}).get("txid")
+                == txid
+                for k, m in zip(keys, metas)
+            ):
+                ml.abort(txid)
+            raise
+        ml.commit(txid)
 
     def delete_range(
         self,
@@ -2611,113 +2526,187 @@ class LakeWriter:
         mode: str,
         commit_meta: dict | None = None,
         txn: tuple[str, int] | None = None,
+        optimistic: bool = False,
     ) -> WriteResult:
-        # Serialize same-dataset upserts: the merge is read-modify-write
-        # over the dataset's partitions, so two concurrent writers to one
-        # dataset would each read the pre-state and the last overwrite
-        # would drop the other's rows.  Serialization is the dataset's
-        # OPTIMISTIC COMMIT LOG (lake/commitlog.py): claim the next
-        # numbered commit slot, run the merge+overwrite exclusively,
-        # finalize; a lost claim means another writer committed after our
-        # read, so the transaction re-reads and retries.  Multi-process
-        # and multi-host safe on shared storage — the log lives inside
-        # the dataset directory.  Writes to different datasets stay
-        # fully parallel (per-dataset logs).
-        log = self.commit_log(key)
-        if txn is not None and log.last_txn_version(txn[0]) >= int(txn[1]):
-            # replayed micro-batch (fast path, no quarantine side effects)
-            return WriteResult(
-                path=self.dataset_path(key), time_from=None, time_to=None,
-                rows=0, partitions=[],
+        """The one write of a batch into one dataset: stage its files
+        (`_stage_write`), land them under the dataset's commit claim
+        (`_land`) and register the manifest row while the claim is held
+        — a concurrent writer cannot then commit data + manifest in
+        between and have its row clobbered by this older commit's.  The
+        two schedules differ only in WHEN the claim is taken (the shape
+        of `_cow_dml`):
+
+        - claimed: claim -> schema contract -> stage -> land.  Upsert and
+          overwrite are read-modify-write over the batch's months, so
+          two writers reading one pre-state would each drop the other's
+          rows; the dataset's commit log (lake/commitlog.py) serializes
+          them, multi-process and multi-host safe on shared storage,
+          while writes to different datasets stay fully parallel.
+        - optimistic (`optimistic=True`, append only): capture the
+          snapshot and its contract (`_optimistic_base`) -> stage ->
+          claim -> `_validate_concurrent` -> land a rebasable
+          `files_add` delta.  The Spark job runs outside the claim.  An
+          append with no recorded contract, no pinned listing or a
+          schema to evolve takes the claimed schedule instead.
+
+        A `txn` replay is checked before any work and again right after
+        the claim (a concurrent replay may commit in between); either
+        way the write returns rows=0 with the dataset untouched."""
+        if optimistic and mode != "append":
+            raise ValueError(
+                "optimistic=True is append-only: upsert/overwrite are "
+                "read-modify-write and must hold the claim across the job"
             )
+        log = self.commit_log(key)
+        ds_path = self.dataset_path(key)
+        skipped = WriteResult(
+            path=ds_path, time_from=None, time_to=None, rows=0, partitions=[]
+        )
+        if txn is not None and log.last_txn_version(txn[0]) >= int(txn[1]):
+            return skipped  # replayed micro-batch (no quarantine side effects)
+        snap = self._optimistic_base(df, key, log, ds_path) if optimistic else None
+        if snap is not None:
+            df, rv, head = snap
         df, exp_meta = self._enforce_expectations(df, key)
-        payload = {"mode": mode, **exp_meta, **(commit_meta or {})}
+        payload = {
+            "mode": mode,
+            **({"optimistic": True} if snap is not None else {}),
+            **exp_meta,
+            **(commit_meta or {}),
+        }
         if txn is not None:
             payload["txn"] = {"app": txn[0], "version": int(txn[1])}
         try:
-            with self._staging(self.dataset_path(key)) as st, log.transaction(
-                timeout=self.commit_timeout_s, payload=payload
-            ) as meta:
-                if txn is not None and log.last_txn_version(txn[0]) >= int(txn[1]):
-                    # a concurrent replay committed between the fast path
-                    # and our claim: abort this transaction, dataset
-                    # untouched
-                    raise _ReplayedTxn()
-                # write-time schema contract (lake/schema.py): checked
-                # under the claim so concurrent evolutions serialize; a
-                # violation aborts here with the dataset untouched
-                df, meta["schema"], head = self._schema_contract(
-                    df, log, self.dataset_path(key), f"write {key.symbol}",
-                    meta=meta,
-                )
-                # head partition spec under the claim (lake/spec.py):
-                # the layout this write and its commit facts target —
-                # from the gate's own contract read, no extra listing
-                spec = head[4]
-                if "partition_types" not in meta and "ts" in df.columns:
-                    # (ts-less batches fall through to _require_ts's
-                    # loud ValueError instead of failing the probe)
-                    # the batch reaches the gate pre-partitioning: probe
-                    # the layout's true partition types (analysis only,
-                    # limit(0) — no job) and record them as facts
-                    from dl_datalake_spark.lake import schema as _sc
+            with self._staging(ds_path) as st, ExitStack() as claim:
 
-                    pfp = _sc.fingerprint(
-                        self._partitioned(df.limit(0), key, "ts", spec)
+                def take_claim() -> dict:
+                    meta = claim.enter_context(
+                        log.transaction(timeout=self.commit_timeout_s, payload=payload)
                     )
-                    meta["partition_types"] = {
-                        **head[3],
-                        **{
-                            c: pfp[c]
-                            for c in (*PARTITION_COLS, *spec)
-                            if c in pfp
-                        },
-                    }
-                res = self._write_locked(
-                    df, key, mode, st, meta,
+                    if txn is not None and log.last_txn_version(txn[0]) >= int(txn[1]):
+                        raise _ReplayedTxn()
+                    return meta
+
+                if snap is None:
+                    meta = take_claim()
+                    # write-time schema contract (lake/schema.py): checked
+                    # under the claim so concurrent evolutions serialize; a
+                    # violation aborts here with the dataset untouched
+                    df, meta["schema"], head = self._schema_contract(
+                        df, log, ds_path, f"write {key.symbol}", meta=meta
+                    )
+                    if "partition_types" not in meta and "ts" in df.columns:
+                        # (ts-less batches fall through to _require_ts's
+                        # loud ValueError instead of failing the probe)
+                        # the batch reaches the gate pre-partitioning: probe
+                        # the layout's true partition types (analysis only,
+                        # limit(0) — no job) and record them as facts
+                        from dl_datalake_spark.lake import schema as _sc
+
+                        pfp = _sc.fingerprint(
+                            self._partitioned(df.limit(0), key, "ts", head[4])
+                        )
+                        meta["partition_types"] = {
+                            **head[3],
+                            **{
+                                c: pfp[c]
+                                for c in (*PARTITION_COLS, *head[4])
+                                if c in pfp
+                            },
+                        }
                     # effective map INCLUDING any fresh physical names the
                     # contract assigned this very commit (re-added columns)
-                    column_map=meta.get("column_map")
-                    if meta.get("column_map") is not None
-                    else head[1],
-                    spec=spec,
+                    cmap = meta.get("column_map", head[1])
+                else:
+                    cmap = head[1]
+                staged = self._stage_write(df, key, mode, st, cmap, tuple(head[4]))
+                if snap is None:
+                    # upsert and overwrite emit rows only in the batch's
+                    # months and rewrite each of them wholesale, so the
+                    # staged files' months name exactly the partitions
+                    # whose old files leave the listing
+                    base = self._base_listing(ds_path)
+                    drop = set(staged.pcounts) if mode != "append" else ()
+                else:
+                    meta = take_claim()
+                    self._validate_concurrent(
+                        log, rv, meta["version"], head, set(staged.pcounts), ds_path
+                    )
+                    base, drop = [], ()
+                self._land(
+                    st, staged, ds_path, meta, base, drop=drop,
+                    delta=snap is not None, cdf=st.cdf if self.emit_cdf else None,
                 )
+                # touched partitions in the commit record = the CDC surface:
+                # an incremental consumer (reader.read_changes_since)
+                # re-reads exactly these partitions, never the dataset
+                meta.update(staged.commit_facts())
+                result, row = self._landed_result(key, ds_path, meta)
+                if self.manifest is not None:
+                    self.manifest.add_entries([row])
         except _ReplayedTxn:
-            return WriteResult(
-                path=self.dataset_path(key), time_from=None, time_to=None,
-                rows=0, partitions=[],
+            return skipped
+        return result
+
+    def _optimistic_base(
+        self, df: DataFrame, key: DatasetKey, log: CommitLog, ds_path: str
+    ) -> tuple | None:
+        """The snapshot an optimistic append validates against: (batch
+        with lossless up-casts to the contract, rv, `contract_at(rv)`),
+        or None when the append must take the claimed schedule — a first
+        write (no recorded contract), a legacy dataset (no pinned listing
+        to compose a delta onto) or a batch that evolves the schema under
+        `merge_schema` (the contract CHANGES, so it serializes).  rv is
+        captured FIRST and the contract read AT it: the other order
+        leaves a window where a commit lands between the two reads, sits
+        inside rv and never reaches `_validate_concurrent`, yet the batch
+        was resolved against a contract that postdates it."""
+        from dl_datalake_spark.lake import schema as _sc
+
+        rv = log.latest_version()
+        head = log.contract_at(rv)
+        if head[0] is None or resolve_live_files(self.fs, ds_path) is None:
+            return None
+        fp = _sc.fingerprint(df)
+        for c in (*PARTITION_COLS, *head[4]):
+            fp.pop(c, None)
+        try:
+            _resolved, upcasts = _sc.resolve_append(
+                head[0], fp, False, f"write {key.symbol}"
             )
-        return res
+        except _sc.SchemaContractError:
+            if self.merge_schema:
+                return None
+            raise
+        return _sc.apply_upcasts(df, upcasts), rv, head
 
     # -- partition-disjoint optimistic concurrency (Delta's commit model) ----
     #
-    # `_write` holds the dataset's commit claim ACROSS the Spark job —
-    # required for read-modify-write (upsert/overwrite), but it caps one
-    # dataset at ~1/job-time commits/s no matter how many appenders pile
-    # on (round-9 contention bench: flat ~1.15 commits/s, PLANS.md).
-    # Blind APPENDS have no read dependency, so they can run the job
-    # FIRST and take the claim only to validate + finalize (Delta's
+    # A claimed write holds the dataset's commit claim ACROSS its Spark
+    # job — required for read-modify-write (upsert/overwrite), but it
+    # caps one dataset at ~1/job-time commits/s no matter how many
+    # appenders pile on (round-9 contention bench: flat ~1.15 commits/s,
+    # PLANS.md).  The optimistic schedules — `_write`'s for blind
+    # appends, `_cow_dml`'s for DML and compaction — run the job FIRST
+    # and take the claim only to validate + land (Delta's
     # OptimisticTransaction): the claim window shrinks from the job to
-    # milliseconds and disjoint appenders scale.
+    # milliseconds and disjoint writers scale.
     #
-    # Mechanics that make an append commutable:
-    # - data files are staged under `<dataset>/_staging_<token>/` like
-    #   every data write's (`_staging`: one private dir per write, so
-    #   the write knows exactly which files it added and no shared
-    #   Hadoop `_temporary/0/` exists for concurrent jobs to destroy)
-    #   and MOVED into the tree under the claim; uncommitted files are
-    #   invisible by construction (readers resolve the pinned listing,
-    #   never the directory);
-    # - the commit payload carries `files_add` ONLY — a delta composes
-    #   with whatever head it lands on, so there is nothing to rebase;
-    #   the finalize expands it to a full checkpoint on schedule;
+    # Mechanics that make such a write commutable:
+    # - its files are staged in a private `_staging_<token>` dir like
+    #   every data write's (`_staging`) and MOVED into the tree under the
+    #   claim (`_land`); uncommitted files are invisible by construction
+    #   (readers resolve the pinned listing, never the directory);
+    # - the commit payload carries `files_add`/`files_remove` — a delta
+    #   composes with whatever head it lands on, so there is nothing to
+    #   rebase; the finalize expands it to a full checkpoint on schedule;
     # - validation under the claim replays every commit between the
-    #   snapshot read and the claimed slot: other APPENDS always pass
-    #   (blind inserts commute), partition-scoped rewrites pass iff
-    #   DISJOINT from ours, and anything that moved the schema contract
-    #   or rewrote the tree (compact, rename/drop) conflicts loudly
-    #   (ConcurrentWriteConflict) with our files removed — nothing half
-    #   lands.
+    #   snapshot read (rv) and the claimed slot (`_validate_concurrent`,
+    #   by what the write READ): other appends commute with a blind
+    #   append, partition-scoped rewrites pass iff DISJOINT from the
+    #   write's months, and anything that moved the schema contract or
+    #   rewrote the tree conflicts loudly (ConcurrentWriteConflict) with
+    #   the tree untouched — nothing half lands.
 
     _OPTIMISTIC_DISJOINT_OK = frozenset(
         {"upsert", "overwrite", "delete", "delete-dv", "update",
@@ -2725,12 +2714,14 @@ class LakeWriter:
     )
 
     def _validate_concurrent(
-        self, entry: dict, base_contract: tuple, touched: set, version: int,
-        ds_path: str, read_set: str = "none",
+        self, log: CommitLog, rv: int, v: int, base_contract: tuple,
+        touched: set, ds_path: str, read_set: str = "none",
     ) -> None:
-        """Raise ConcurrentWriteConflict unless `entry` (a commit that
-        landed between our snapshot and our claim) provably commutes
-        with our optimistic write, given what our write READ:
+        """Raise ConcurrentWriteConflict unless every commit that landed
+        between our snapshot (rv) and our claimed slot `v` provably
+        commutes with our optimistic write, given what our write READ
+        (a rolled-aside claim in the window has no effects; a claimed
+        schedule's window, rv = v - 1, is empty):
 
         - ``"none"`` (blind append): we read nothing — concurrent
           appends commute anywhere, file-scoped rewrites
@@ -2755,52 +2746,56 @@ class LakeWriter:
         from dl_datalake_spark.lake.spec import spec_of
 
         prev_schema, prev_cmap, prev_ret, _prev_pt, prev_spec = base_contract
-        sch = entry.get("schema")
-        if sch is not None and (
-            dict(sch) != (prev_schema or {})
-            or dict(entry.get("column_map") or {}) != prev_cmap
-            or list(entry.get("retired_cols") or []) != list(prev_ret)
-            # a partition-spec move conflicts too: this write's files
-            # were STAGED under the snapshot's directory layout
-            or spec_of(entry.get("partition_spec")) != tuple(prev_spec)
-        ):
-            raise ConcurrentWriteConflict(
-                f"commit {version} of {ds_path} moved the schema contract "
-                "after this write's snapshot read — retry from a fresh "
-                "snapshot (the batch was resolved against the old contract)"
+        for version in range(rv + 1, v):
+            entry = log.committed_entry(version)
+            if entry is None:
+                continue  # rolled-aside claim: no effects to conflict
+            sch = entry.get("schema")
+            if sch is not None and (
+                dict(sch) != (prev_schema or {})
+                or dict(entry.get("column_map") or {}) != prev_cmap
+                or list(entry.get("retired_cols") or []) != list(prev_ret)
+                # a partition-spec move conflicts too: this write's files
+                # were STAGED under the snapshot's directory layout
+                or spec_of(entry.get("partition_spec")) != tuple(prev_spec)
+            ):
+                raise ConcurrentWriteConflict(
+                    f"commit {version} of {ds_path} moved the schema contract "
+                    "after this write's snapshot read — retry from a fresh "
+                    "snapshot (the batch was resolved against the old contract)"
+                )
+            mode_e = entry.get("mode")
+            rew = entry.get("rewrite_partitions")
+            parts = entry.get("partitions")
+            if mode_e == "append" and rew is None and read_set in ("none", "files"):
+                continue  # blind inserts commute with anything that read no rows
+            if rew is not None and read_set == "none":
+                continue  # file-scoped rewrite: our new files are untouchable
+            eff = {(int(y), int(m)) for y, m in (parts or [])} | {
+                (int(y), int(m)) for y, m in (rew or [])
+            }
+            commutable = (
+                mode_e == "append"  # disjoint-only under read_set="rows"
+                or mode_e in self._OPTIMISTIC_DISJOINT_OK
+                or (rew is not None and mode_e == "compact")
             )
-        mode_e = entry.get("mode")
-        rew = entry.get("rewrite_partitions")
-        parts = entry.get("partitions")
-        if mode_e == "append" and rew is None and read_set in ("none", "files"):
-            return  # blind inserts commute with anything that read no rows
-        if rew is not None and read_set == "none":
-            return  # file-scoped rewrite: our new files are untouchable
-        eff = {(int(y), int(m)) for y, m in (parts or [])} | {
-            (int(y), int(m)) for y, m in (rew or [])
-        }
-        commutable = (
-            mode_e == "append"  # disjoint-only under read_set="rows"
-            or mode_e in self._OPTIMISTIC_DISJOINT_OK
-            or (rew is not None and mode_e == "compact")
-        )
-        if (
-            commutable
-            and (parts is not None or rew is not None)
-            and not (eff & touched)
-        ):
-            # disjoint partition-scoped effect, or a recorded no-op
-            # (e.g. delete matching nothing); a legacy tree-swap compact
-            # records partitions=[] WITHOUT rewrite_partitions and a
-            # non-commutable mode, so it still conflicts below
-            return
-        raise ConcurrentWriteConflict(
-            f"commit {version} (mode={mode_e}, partitions={parts}, "
-            f"rewrite_partitions={rew}) of {ds_path} overlaps this write's "
-            f"months {sorted(touched)} or rewrote the tree — the snapshot "
-            "this write validated against is stale; retry from a fresh "
-            "snapshot"
-        )
+            if (
+                commutable
+                and (parts is not None or rew is not None)
+                and not (eff & touched)
+            ):
+                # disjoint partition-scoped effect, or a recorded no-op
+                # (e.g. delete matching nothing); a legacy tree-swap compact
+                # records partitions=[] WITHOUT rewrite_partitions and a
+                # non-commutable mode, so it still conflicts below
+                continue
+            raise ConcurrentWriteConflict(
+                f"commit {version} (mode={mode_e}, partitions={parts}, "
+                f"rewrite_partitions={rew}) of {ds_path} overlaps this write's "
+                f"months {sorted(touched)} or rewrote the tree — the snapshot "
+                "this write validated against is stale; retry from a fresh "
+                "snapshot"
+            )
 
     def _staging_heartbeat(self, path: str):
         """Daemon thread refreshing the mtime of a staging dir for as
@@ -2999,123 +2994,19 @@ class LakeWriter:
             file_bytes=meta.get("file_bytes"),
             cdf_bytes=meta.get("cdf_bytes"),
         )
-        row = {
+        return res, LakeWriter._manifest_row(
+            k, ds_path, res.time_from, res.time_to, res.rows
+        )
+
+    @staticmethod
+    def _manifest_row(k: DatasetKey, path: str, t0, t1, rows: int) -> dict:
+        """The catalog row of dataset `k` (`ManifestManager.add_entries`)."""
+        return {
             "exchange": k.exchange, "market": k.market, "symbol": k.symbol,
-            "path": ds_path, "data_type": k.data_type,
-            "time_from": res.time_from, "time_to": res.time_to,
-            "metadata": {"timeframe": k.period, "rows": res.rows},
+            "path": path, "data_type": k.data_type,
+            "time_from": t0, "time_to": t1,
+            "metadata": {"timeframe": k.period, "rows": rows},
         }
-        return res, row
-
-    def _write_optimistic_append(
-        self,
-        df: DataFrame,
-        key: DatasetKey,
-        commit_meta: dict | None = None,
-        txn: tuple[str, int] | None = None,
-    ) -> WriteResult:
-        from dl_datalake_spark.lake import schema as _sc
-
-        key = key.normalized()
-        log = self.commit_log(key)
-        ds_path = self.dataset_path(key)
-        if txn is not None and log.last_txn_version(txn[0]) >= int(txn[1]):
-            return WriteResult(
-                path=ds_path, time_from=None, time_to=None, rows=0, partitions=[]
-            )
-        # Preconditions for commuting: a recorded contract to validate
-        # against and a trusted pinned listing to compose deltas onto.
-        # First writes, schema evolutions, and legacy datasets take the
-        # claimed path — correctness first, the fast path is earned.
-        # The snapshot version is captured FIRST and the contract read
-        # AT that version: reading them the other way around leaves a
-        # window where a commit lands between the two reads, sits
-        # inside rv, and never reaches _validate_concurrent — yet the
-        # batch was resolved against a contract that postdates it.
-        rv = log.latest_version()
-        base_contract = log.contract_at(rv)
-        prev_schema, base_cmap = base_contract[0], base_contract[1]
-        if prev_schema is None or resolve_live_files(self.fs, ds_path) is None:
-            return self._write(df, key, "append", commit_meta, txn)
-        base_spec = tuple(base_contract[4])
-        fp = _sc.fingerprint(df)
-        for c in (*PARTITION_COLS, *base_spec):
-            fp.pop(c, None)
-        try:
-            _resolved, upcasts = _sc.resolve_append(
-                prev_schema, fp, False, f"write {key.symbol}"
-            )
-        except _sc.SchemaContractError:
-            if self.merge_schema:
-                # evolving append: the contract CHANGES — serialize it
-                return self._write(df, key, "append", commit_meta, txn)
-            raise
-        df = _sc.apply_upcasts(df, upcasts)
-        df, exp_meta = self._enforce_expectations(df, key)
-
-        ts_col = _require_ts(df, "ts")
-        batch = self._partitioned(df, key, ts_col, base_spec)
-        # cached only when two jobs evaluate the batch (see _write_locked)
-        needs_counts = self._layout_needs_counts(True)
-        cached = self.emit_cdf or needs_counts
-        payload = {"mode": "append", "optimistic": True, **exp_meta,
-                   **(commit_meta or {})}
-        if txn is not None:
-            payload["txn"] = {"app": txn[0], "version": int(txn[1])}
-        try:
-            with self._staging(ds_path) as st:
-                # ---- the data job and the facts, OUTSIDE any claim ------
-                if cached:
-                    batch = batch.persist()
-                try:
-                    pcounts = (
-                        self._month_facts(batch, ts_col)[1] if needs_counts else None
-                    )
-                    (
-                        self._rename_frame(
-                            self._layout_append(batch, ts_col, pcounts), base_cmap
-                        )
-                        .drop("exchange", "market", "symbol", "data_type", "period")
-                        .write.partitionBy(*base_spec)
-                        .option("compression", "snappy")
-                        .mode("append")
-                        .parquet(st.dir)
-                    )
-                    if self.emit_cdf:
-                        batch.withColumn("_change_type", F.lit("insert")).write.mode(
-                            "overwrite"
-                        ).option("compression", "snappy").parquet(st.cdf)
-                finally:
-                    if cached:
-                        batch.unpersist()
-                (staged,) = self._stage_facts([st.dir], ts_col, base_cmap)
-                # ---- claim; validate + land inside it -------------------
-                with log.transaction(
-                    timeout=self.commit_timeout_s, payload=payload
-                ) as meta:
-                    if txn is not None and log.last_txn_version(txn[0]) >= int(txn[1]):
-                        raise _ReplayedTxn()
-                    v = meta["version"]
-                    for iv in range(rv + 1, v):
-                        e = log.committed_entry(iv)
-                        if e is None:
-                            continue  # rolled-aside claim: no effects to conflict
-                        self._validate_concurrent(
-                            e, base_contract, set(staged.pcounts), iv, ds_path
-                        )
-                    self._land(
-                        st, staged, ds_path, meta, [], delta=True,
-                        cdf=st.cdf if self.emit_cdf else None,
-                    )
-                    meta.update(staged.commit_facts())
-        except _ReplayedTxn:
-            return WriteResult(
-                path=ds_path, time_from=None, time_to=None, rows=0, partitions=[]
-            )
-        result, row = self._landed_result(key, ds_path, meta)
-        if self.manifest is not None:
-            self.manifest.add_entries([row])
-        return result
 
     def _read_pinned_at(
         self, key: DatasetKey, log: CommitLog, rv: int, live: list[str],
@@ -3128,7 +3019,7 @@ class LakeWriter:
         `_cow_dml`'s compute phase reads — on the optimistic schedule,
         resolving any of the three at head instead would let a commit
         that lands mid-job slip past `_validate_concurrent` (the same capture
-        discipline `_write_optimistic_append` documents for rv/contract).
+        discipline `_optimistic_base` documents for rv/contract).
         Tombstone retention keeps the listed files on disk for the whole
         job (vacuum_tombstones' horizon), exactly as it does for any
         pinned reader.
@@ -3271,15 +3162,10 @@ class LakeWriter:
                     meta = claim.enter_context(
                         log.transaction(timeout=self.commit_timeout_s, payload=payload)
                     )
-                v = meta["version"]
-                for iv in range(rv + 1, v):
-                    e = log.committed_entry(iv)
-                    if e is None:
-                        continue  # rolled-aside claim: no effects
-                    self._validate_concurrent(
-                        e, base_contract, r_set, iv, ds_path,
-                        read_set=read_set,
-                    )
+                self._validate_concurrent(
+                    log, rv, meta["version"], base_contract, r_set, ds_path,
+                    read_set=read_set,
+                )
                 self._land(
                     st, staged, ds_path, meta, live, drop=r_set,
                     delta=optimistic, cdf=st.cdf if cdf is not None else None,
@@ -3391,10 +3277,14 @@ class LakeWriter:
             read_set="files", physical=True,
         )
 
-    def _write_locked(
-        self, df: DataFrame, key: DatasetKey, mode: str, st: _Staging, meta: dict,
+    def _stage_write(
+        self, df: DataFrame, key: DatasetKey, mode: str, st: _Staging,
         column_map: dict, spec: tuple,
-    ) -> WriteResult:
+    ) -> _Staged:
+        """The staging half of `_write`, the same for both schedules:
+        the batch's rows (keep-last merged with the touched months for
+        an upsert), laid out and written under `st` with their change
+        feed, and the facts read back from the staged files."""
         ts_col = _require_ts(df, "ts")
         batch = self._partitioned(df, key, ts_col, spec)
         emit_cdf = self.emit_cdf
@@ -3482,26 +3372,7 @@ class LakeWriter:
             if cached:
                 merged.unpersist()
         (staged,) = self._stage_facts([st.dir], ts_col, column_map)
-        ds_path = self.dataset_path(key)
-        # upsert and overwrite emit rows only in the batch's months and
-        # rewrite each of them wholesale, so the staged files' months
-        # name exactly the partitions whose old files leave the listing
-        self._land(
-            st, staged, ds_path, meta, self._base_listing(ds_path),
-            drop=set(staged.pcounts) if mode != "append" else (),
-            cdf=st.cdf if emit_cdf else None,
-        )
-        # touched partitions in the commit record = the CDC surface: an
-        # incremental consumer (reader.read_changes_since) re-reads
-        # exactly these partitions, never the dataset
-        meta.update(staged.commit_facts())
-        result, row = self._landed_result(key, ds_path, meta)
-        if self.manifest is not None:
-            # registered while the claim is held: a concurrent writer
-            # cannot commit data + manifest in between and have its row
-            # clobbered by this older commit's
-            self.manifest.add_entries([row])
-        return result
+        return staged
 
     def _layout_needs_counts(self, append: bool) -> bool:
         """Whether the output layout needs the per-month row counts
@@ -3802,29 +3673,30 @@ class LakeWriter:
         """Union existing+new for the touched months, keep-last per ts
         (`_keep_last`).  Only the year/month partitions present in the
         incoming batch are read back — partition-pruned, so upsert cost
-        is O(batch months), not O(dataset) even on a 100 TB lake."""
+        is O(batch months), not O(dataset) even on a 100 TB lake.  A
+        first write reads nothing back, but its batch is still
+        keep-last per ts, as a repeat of the same upsert would be."""
         existing = self._read_existing(key)
-        if existing is None:
-            if tag_changes:
-                return batch.withColumn("_change_type", F.lit("insert"))
-            return batch
-        months = [(r["year"], r["month"]) for r in batch.select("year", "month").distinct().collect()]
-        if not months:
-            if tag_changes:
-                return batch.withColumn("_change_type", F.lit("insert"))
-            return batch
-        month_pred = F.lit(False)
-        for y, m in months:
-            month_pred = month_pred | ((F.col("year") == y) & (F.col("month") == m))
-        return self._keep_last(existing.where(month_pred), batch, ts_col, tag_changes)
+        if existing is not None:
+            # a null month (null-ts rows) matches no existing row
+            months = [
+                (r["year"], r["month"])
+                for r in batch.select("year", "month").distinct().collect()
+                if r["year"] is not None
+            ]
+            existing = existing.where(self._month_pred(months)) if months else None
+        return self._keep_last(existing, batch, ts_col, tag_changes)
 
     @staticmethod
     def _keep_last(
-        existing: DataFrame, batch: DataFrame, ts_col: str, tag_changes: bool
+        existing: DataFrame | None, batch: DataFrame, ts_col: str, tag_changes: bool
     ) -> DataFrame:
         """The keep-last merge both upserts share: per row key (symbol,
         data_type, period, ts) a batch row (_src=1) beats an existing
-        row (_src=0), by one window.  A null ts is no key: it matches
+        row (_src=0), and one batch row wins among batch rows sharing a
+        key (the reference's ``unique(subset=[ts], keep="last")``), by
+        one window; with `existing` None (nothing to read back) only the
+        batch rows are ranked.  A null ts is no key: it matches
         nothing — as in a SQL or Delta ``MERGE ... ON`` — so every
         null-ts batch row is kept (and tagged an insert).
 
@@ -3833,9 +3705,11 @@ class LakeWriter:
         new ts an "insert", an unchanged existing row NULL.  The
         existence test is one extra aggregate over the SAME window
         partitioning the keep-last rank uses — no additional shuffle."""
-        old = existing.withColumn("_src", F.lit(0))
-        new = batch.withColumn("_src", F.lit(1))
-        unioned = old.unionByName(new, allowMissingColumns=True)
+        unioned = batch.withColumn("_src", F.lit(1))
+        if existing is not None:
+            unioned = existing.withColumn("_src", F.lit(0)).unionByName(
+                unioned, allowMissingColumns=True
+            )
         wf = Window.partitionBy("symbol", "data_type", "period", ts_col)
         ranked = unioned.withColumn(
             "_rn", F.row_number().over(wf.orderBy(F.desc("_src")))
@@ -3869,7 +3743,7 @@ class LakeWriter:
         Same month-pruned union + single window shuffle as
         _merge_keep_last — O(touched months), not O(dataset). Returned
         rows: every batch row (tagged) plus the delete pre-images;
-        _write_locked routes deletes to the feed only.
+        _stage_write routes deletes to the feed only.
         """
         existing = self._read_existing(key)
         if existing is None:
@@ -3974,40 +3848,45 @@ class LakeWriter:
         the tags are per-dataset correct."""
         # per-dataset snapshot resolution: a pinned dataset contributes
         # exactly its live files (a raw subtree scan would merge in
-        # tombstones and resurrect replaced/deleted rows); legacy
-        # datasets contribute their directory.  Contracted datasets
-        # scan through their recorded schema (lake/schema.py) — a
-        # merge_schema-widened dataset holds mixed INT32/INT64 files
+        # tombstones and resurrect replaced/deleted rows) through its
+        # deletion vectors (a DV-deleted row must not come back when its
+        # month is rewritten — the anti-join `grouped_scan` applies);
+        # legacy datasets contribute their directory.  Contracted
+        # datasets scan through their recorded schema (lake/schema.py) —
+        # a merge_schema-widened dataset holds mixed INT32/INT64 files
         # that a mergeSchema footer merge CANNOT read
         # (CANNOT_MERGE_SCHEMAS); grouped by DDL so same-contract
         # datasets still share one scan relation.  write_ohlc_multi
         # refuses column-mapped datasets up front, so physical names
         # ARE logical names here.
+        from dl_datalake_spark.lake import dv as dvmod
         from dl_datalake_spark.lake.schema import contract_read
 
-        by_ddl: dict[str | None, list[str]] = {}
+        # {ddl: (scan paths, DV file keys, DV dirs)}
+        by_ddl: dict[str | None, tuple[list, list, list]] = {}
         for k in keys:
             p = self.dataset_path(k)
             live = resolve_live_files(self.fs, p)
             if live is None:
                 if has_visible_children(self.fs, p):
-                    by_ddl.setdefault(None, []).append(p)
+                    by_ddl.setdefault(None, ([], [], []))[0].append(p)
             elif live:
-                contract = contract_read(
-                    CommitLog(p, fs=self.fs), self.base_path, p, live[0]
+                log = CommitLog(p, fs=self.fs)
+                contract = contract_read(log, self.base_path, p, live[0])
+                group = by_ddl.setdefault(
+                    contract[0] if contract is not None else None, ([], [], [])
                 )
-                ddl = contract[0] if contract is not None else None
-                by_ddl.setdefault(ddl, []).extend(f"{p}/{rel}" for rel in live)
-        srcs = [s for group in by_ddl.values() for s in group]
-
-        def _all_inserts(b: DataFrame) -> DataFrame:
-            # nothing to merge against: every batch row is an insert
-            return (
-                b.withColumn("_change_type", F.lit("insert")) if tag_changes else b
-            )
-
-        if not srcs:
-            return _all_inserts(batch)
+                group[0].extend(f"{p}/{rel}" for rel in live)
+                dv_map = log.dv_at(None)
+                if dv_map:
+                    dv_keys, dv_dirs = dvmod.plan_dv(p, self.base_path, live, dv_map)
+                    group[1].extend(dv_keys)
+                    group[2].extend(dv_dirs)
+        # a null month (null-ts rows) matches no existing row
+        triples = [t for t in triples if t[1] is not None]
+        if not by_ddl or not triples:
+            # nothing to merge against: keep-last within the batch only
+            return self._keep_last(None, batch, ts_col, tag_changes)
         # Prune PER SYMBOL, not by the global month union: with a skewed
         # batch (one symbol touching many months, others one), a global
         # month predicate reads back and identically rewrites partitions
@@ -4018,10 +3897,6 @@ class LakeWriter:
         # partition overwrite only replaces partitions present in the
         # output).  Bounded driver state: symbols x months, the same
         # cardinality the dynamic-overwrite commit enumerates anyway.
-        # a null month (null-ts rows) matches no existing row
-        triples = [t for t in triples if t[1] is not None]
-        if not triples:
-            return _all_inserts(batch)
         pred = F.lit(False)
         if len(triples) <= _MULTI_PRUNE_TRIPLES:
             for s, y, m in triples:
@@ -4036,16 +3911,14 @@ class LakeWriter:
             # the batch did not touch there; the commit drops the old
             # files of every month the staged files hold, so those rows
             # are replaced, never duplicated.
-            for y, m in {(y, m) for _, y, m in triples}:
-                pred = pred | ((F.col("year") == y) & (F.col("month") == m))
+            pred = self._month_pred({(y, m) for _, y, m in triples})
         existing = None
-        for ddl, group in by_ddl.items():
-            rd = (
-                self.spark.read.schema(ddl)
-                if ddl is not None
-                else self.spark.read.option("mergeSchema", "true")
+        for ddl, (srcs, dv_keys, dv_dirs) in by_ddl.items():
+            # without DVs this is the group's one plain scan relation
+            part = dvmod.scan_with_dv(
+                self.spark, self.base_path, srcs, dv_keys, dv_dirs, fs=self.fs,
+                schema_ddl=ddl,
             )
-            part = rd.option("basePath", self.base_path).parquet(*group)
             existing = (
                 part
                 if existing is None

@@ -239,8 +239,8 @@ SELECT CAST({_JAN} + (200 + b) * 60000 AS BIGINT), c FROM p
 """,
 )
 def events_optimistic_append(spark: SparkSession, sf_dir: str):
-    """OPTIMISTIC APPEND CONCURRENCY (writer._write_optimistic_append,
-    round 11): after a claimed bootstrap commit, two appends run their
+    """OPTIMISTIC APPEND CONCURRENCY (the optimistic schedule of
+    writer._write, round 11): after a claimed bootstrap commit, two appends run their
     data jobs OUTSIDE the commit claim (Delta's OptimisticTransaction)
     and validate under a milliseconds claim window — the read-back
     union must equal the three-way bucket arithmetic exactly, i.e.

@@ -94,7 +94,7 @@ def stream_append_ingest(
         if batch_df.isEmpty():
             return
         # optimistic: the micro-batch's Spark job runs outside the
-        # commit claim (writer._write_optimistic_append), so several
+        # commit claim (the optimistic schedule of writer._write), so several
         # ingest streams appending to ONE dataset scale instead of
         # serializing their jobs; txn idempotency is preserved on both
         # paths (checked again under the claim).  A ConcurrentWrite-

@@ -93,7 +93,10 @@ def test_dv_null_predicate_rows_survive(lake, spark):
 
 def test_dv_second_delete_merges_positions(lake, spark):
     w, r, _ = lake
-    w.write_ohlc(_candles(spark, 10), KEY)
+    # an append keeps the frame's ts-contiguous slices, so the two
+    # deleted rows share a file (an upsert's keep-last shuffle may split
+    # them)
+    w.write_ohlc(_candles(spark, 10), KEY, mode="append")
     assert w.delete_where(KEY, F.col("ts") == T0, strategy="dv").rows == 1
     assert w.delete_where(KEY, F.col("ts") == T0 + 60000, strategy="dv").rows == 1
     # re-deleting already-deleted rows matches nothing (no double count)
@@ -147,6 +150,22 @@ def test_dv_upsert_rewrite_materializes_and_retires(lake, spark):
     # ... but time travel to the DV commit still applies the sidecar
     assert r.read_dataset_at(KEY, 1).count() == 9
     assert r.read_dataset_at(KEY, 1).where(F.col("open") == 9.0).count() == 0
+
+
+def test_dv_multi_upsert_keeps_deleted_rows_deleted(spark, tmp_path):
+    """The multi upsert's read-back of a touched month goes through the
+    dataset's deletion vectors, like the single-dataset upsert's."""
+    base = str(tmp_path / "base")
+    w, r = LakeWriter(spark, base), LakeReader(spark, base)
+    k = DatasetKey("BINANCE", "SPOT", "DVM", "raw", "1m")
+    w.write_ohlc_multi(_candles(spark, 3).withColumn("symbol", F.lit("DVM")), "binance")
+    w.delete_where(k, F.col("ts") == T0, strategy="dv")
+    assert r.read_dataset(k).count() == 2
+    new = _candles(spark, 1, start=T0 + 10 * 60000, price=9.0)
+    w.write_ohlc_multi(new.withColumn("symbol", F.lit("DVM")), "binance")
+    got = r.read_dataset(k)
+    assert got.count() == 3
+    assert got.where(F.col("ts") == T0).count() == 0
 
 
 def test_dv_then_cow_delete_no_resurrection(lake, spark):
@@ -295,7 +314,8 @@ def test_dv_superseded_sidecar_ages_out(lake, spark):
     from dl_datalake_spark.lake.maintenance import vacuum_tombstones
 
     w, r, base = lake
-    w.write_ohlc(_candles(spark, 10), KEY)                              # v0
+    # append: both deleted rows in one file (see the test above)
+    w.write_ohlc(_candles(spark, 10), KEY, mode="append")               # v0
     w.delete_where(KEY, F.col("ts") == T0, strategy="dv")               # v1
     w.delete_where(KEY, F.col("ts") == T0 + 60000, strategy="dv")       # v2
     log = CommitLog(_ds_path(w), fs=w.fs)

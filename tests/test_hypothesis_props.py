@@ -8,6 +8,8 @@ unsorted input, scrambled partitions, degenerate vectors.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -710,9 +712,13 @@ def test_optimistic_validation_commute_rules(theirs, ours, mode):
             and (disjoint if theirs else True)
         )
     )
+    def window(e):
+        # a snapshot at version 6 and a claim at 8: commit 7 is `e`
+        return SimpleNamespace(committed_entry=lambda v: e), 6, 8
+
     try:
         LakeWriter._validate_concurrent(
-            object.__new__(LakeWriter), entry, base, ours_set, 7, "/ds"
+            object.__new__(LakeWriter), *window(entry), base, ours_set, "/ds"
         )
         ok = True
     except ConcurrentWriteConflict:
@@ -722,7 +728,7 @@ def test_optimistic_validation_commute_rules(theirs, ours, mode):
     moved = {**entry, "schema": {"ts": "bigint", "extra": "int"}}
     try:
         LakeWriter._validate_concurrent(
-            object.__new__(LakeWriter), moved, base, ours_set, 7, "/ds"
+            object.__new__(LakeWriter), *window(moved), base, ours_set, "/ds"
         )
         moved_ok = True
     except ConcurrentWriteConflict:

@@ -35,19 +35,44 @@ def _month_rows(spark, start, n=5, p0=0.0):
     return _mk(spark, [(start + i * 60000, p0 + i) for i in range(n)])
 
 
-def test_optimistic_append_roundtrip_and_delta_payload(spark, tmp_path):
+def test_optimistic_append_roundtrip_and_delta_payload(spark, tmp_path, monkeypatch):
     """Sequential behavior identical to a claimed append; the commit
-    carries files_add (the rebasable delta), and reads serve the union."""
+    carries files_add (the rebasable delta), and reads serve the union.
+    A replayed `txn` commits nothing, also when the replay is only seen
+    under the claim, after the optimistic job ran."""
     base = str(tmp_path / "lake")
     w = LakeWriter(spark, base)
     w.write_ticks(_month_rows(spark, JAN), KEY, mode="append")  # claimed: bootstrap
-    w.write_ticks(_month_rows(spark, FEB), KEY, mode="append", optimistic=True)
+    w.write_ticks(
+        _month_rows(spark, FEB), KEY, mode="append", optimistic=True, txn=("app", 1)
+    )
     log = w.commit_log(KEY)
     e = log.committed_entry(log.latest_version())
     assert e["optimistic"] is True and e["mode"] == "append"
     assert e.get("files_add") and not e.get("files_remove")
+    assert e["txn"] == {"app": "app", "version": 1}
     got = LakeReader(spark, base).read_dataset(KEY)
     assert got.count() == 10
+    # a replay the fast path misses (a concurrent replay committing
+    # between it and the claim) is caught under the claim
+    real = CommitLog.last_txn_version
+    calls = []
+
+    def late(self_, app_id):
+        calls.append(app_id)
+        return -1 if len(calls) == 1 else real(self_, app_id)
+
+    monkeypatch.setattr(CommitLog, "last_txn_version", late)
+    res = w.write_ticks(
+        _month_rows(spark, MAR), KEY, mode="append", optimistic=True, txn=("app", 1)
+    )
+    monkeypatch.setattr(CommitLog, "last_txn_version", real)
+    assert res.rows == 0 and len(calls) == 2
+    assert log.latest_version() == 1
+    from dl_datalake_spark.lake.snapshot import list_data_files
+
+    assert sorted(list_data_files(w.fs, w.dataset_path(KEY))) == sorted(log.latest_files())
+    assert LakeReader(spark, base).read_dataset(KEY).count() == 10
     # first write on a FRESH dataset falls back to the claimed path
     k2 = DatasetKey("SIM", "SPOT", "OPT2", "ticks", "1m")
     w.write_ticks(_month_rows(spark, JAN), k2, mode="append", optimistic=True)

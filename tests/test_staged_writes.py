@@ -196,6 +196,17 @@ def test_upserts_keep_every_null_ts_row(tmp_path, spark):
     ]
 
 
+def test_first_upserts_keep_one_row_per_ts(tmp_path, spark):
+    """A first upsert has nothing to read back, yet its batch is still
+    keep-last per ts: two rows at one ts land as one, as they do when
+    the same upsert is repeated."""
+    w = LakeWriter(spark, str(tmp_path / "lake"))
+    w.write_ticks(_ticks(spark, [(JAN, 1.0), (JAN, 2.0)]), KEY)
+    assert len(_live_rows(spark, w, KEY, ["ts"])) == 1
+    w.write_ohlc_multi(_ohlc(spark, [("AAA", JAN, 1.0), ("AAA", JAN, 2.0)]), "sim", "spot")
+    assert len(_live_rows(spark, w, MULTI_KEYS[0], ["ts"])) == 1
+
+
 def test_vacuum_sweeps_stale_lake_level_staging(tmp_path, spark):
     fs = LocalFS()
     base = str(tmp_path / "lake")
@@ -215,20 +226,57 @@ def test_vacuum_sweeps_stale_lake_level_staging(tmp_path, spark):
     assert not any(fs.exists(d) for d in stale) and fs.isdir(fresh)
 
 
+def _restore_to_the_seed(spark, w, seed):
+    w.write_ohlc_multi(
+        _ohlc(spark, [("AAA", FEB, 3.0), ("BBB", FEB, 4.0)]), "sim", "spot",
+        mode="append",
+    )
+    return lambda: w.restore_lake_to(seed["AAA"].txid)
+
+
+#: the multi-dataset commits, each (set-up after the seed write returning
+#: the commit to run, BBB's rows once BBB alone finalized it)
+MULTI_COMMITS = {
+    "write_ohlc_multi": (
+        lambda spark, w, seed: lambda: w.write_ohlc_multi(
+            _ohlc(spark, [("AAA", FEB, 3.0), ("BBB", FEB, 4.0)]), "sim", "spot",
+            mode="append",
+        ),
+        [(JAN, 2.0), (FEB, 4.0)],
+    ),
+    "delete_where_multi": (
+        lambda spark, w, seed: lambda: w.delete_where_multi(
+            MULTI_KEYS, F.col("ts") == JAN
+        ),
+        [],
+    ),
+    "restore_lake_to": (_restore_to_the_seed, [(JAN, 2.0)]),
+}
+
+
+@pytest.mark.parametrize("verb", list(MULTI_COMMITS))
 def test_multi_failure_after_a_finalize_keeps_the_committed_files(
-    tmp_path, spark, monkeypatch
+    tmp_path, spark, monkeypatch, verb
 ):
-    """A multi-write's datasets finalize one by one.  When a later
-    finalize dies, the dataset that already committed keeps every file
-    its commit pins (a single-dataset read serves that version at once);
-    only the unfinalized dataset's landed files are removed."""
+    """A multi-commit's datasets finalize one by one.  When a later
+    finalize dies, the dataset that already committed keeps its commit
+    and every file it pins (a single-dataset read serves that version
+    at once), the other stays at its prior head with no landed file
+    left behind, and the intent stays in-progress so multi-dataset
+    readers keep excluding the torn epoch."""
     from dl_datalake_spark.lake.commitlog import CommitLog
     from dl_datalake_spark.lake.multilog import MultiCommitLog
     from dl_datalake_spark.lake.reader import LakeReader
     from dl_datalake_spark.lake.snapshot import list_data_files
 
     w = LakeWriter(spark, str(tmp_path / "lake"))
-    w.write_ohlc_multi(_ohlc(spark, [("AAA", JAN, 1.0), ("BBB", JAN, 2.0)]), "sim", "spot")
+    seed = w.write_ohlc_multi(
+        _ohlc(spark, [("AAA", JAN, 1.0), ("BBB", JAN, 2.0)]), "sim", "spot"
+    )
+    setup, bbb_rows = MULTI_COMMITS[verb]
+    run = setup(spark, w, seed)
+    aaa, bbb = MULTI_KEYS
+    heads = {k: w.commit_log(k).latest_version() for k in MULTI_KEYS}
     real = CommitLog._finalize
     finalized: list[str] = []
 
@@ -240,27 +288,25 @@ def test_multi_failure_after_a_finalize_keeps_the_committed_files(
 
     monkeypatch.setattr(CommitLog, "_finalize", dying)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        w.write_ohlc_multi(
-            _ohlc(spark, [("AAA", FEB, 3.0), ("BBB", FEB, 4.0)]), "sim", "spot",
-            mode="append",
-        )
+        run()
     monkeypatch.setattr(CommitLog, "_finalize", real)
 
     # the unwind finalizes in reverse key order: BBB committed, AAA did not
-    aaa, bbb = MULTI_KEYS
     assert finalized == [w.dataset_path(bbb)]
+    assert w.commit_log(bbb).latest_version() == heads[bbb] + 1
     pinned = w.commit_log(bbb).latest_files()
     assert all(os.path.isfile(f"{w.dataset_path(bbb)}/{f}") for f in pinned)
-    assert _live_rows(spark, w, bbb, ["ts", "close"]) == [(JAN, 2.0), (FEB, 4.0)]
-    assert LakeReader(spark, w.base_path).read_dataset(bbb).count() == 2
-    # AAA: back to its first commit, and no landed file left behind
-    assert w.commit_log(aaa).latest_version() == 0
+    got = LakeReader(spark, w.base_path).read_dataset(bbb).select("ts", "close")
+    assert sorted(tuple(r) for r in got.collect()) == bbb_rows
+    # AAA: still at its prior head, and no landed file left behind
+    assert w.commit_log(aaa).latest_version() == heads[aaa]
     assert sorted(list_data_files(w.fs, w.dataset_path(aaa))) == sorted(
         w.commit_log(aaa).latest_files()
     )
     # the partial multi-commit stays constraining, and nothing is staged
-    recs = MultiCommitLog(w.base_path).records()
-    assert sorted(r["status"] for r in recs) == ["committed", "in-progress"]
+    statuses = [r["status"] for r in MultiCommitLog(w.base_path).records()]
+    assert statuses.count("in-progress") == 1
+    assert set(statuses) == {"committed", "in-progress"}
     assert not [
         d for _, ds, _ in os.walk(w.base_path) for d in ds if d.startswith("_staging_")
     ]
