@@ -746,16 +746,6 @@ class CommitLog:
             raise
         return True
 
-    def _owns_claim(self, version: int, token: str) -> bool:
-        """Re-read the slot file: do we still hold it?  Advisory only —
-        the authoritative ownership transfer is the fence rename in
-        _finalize/_abort/_try_rollback_stale."""
-        try:
-            entry = json.loads(self.fs.read_bytes(f"{self.log_dir}/{_fmt(version)}"))
-        except (OSError, ValueError):
-            return False
-        return entry.get("owner_token") == token
-
     CHECKPOINT_EVERY = 10
 
     def _encode_files(self, version: int, payload: dict, prev: list | None) -> dict:

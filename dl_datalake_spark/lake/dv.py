@@ -57,11 +57,6 @@ def base_marker(base_path: str) -> str:
     return base_path.rstrip("/").lstrip("/") + "/"
 
 
-def scan_key() -> tuple[str, str]:
-    """Names of the helper columns `with_scan_key` adds."""
-    return "_dv_file", "_dv_pos"
-
-
 def with_scan_key(df: DataFrame, base_path: str) -> DataFrame:
     """Materialize the DV join key from the scan's metadata pseudo-column
     (it must be captured BEFORE any join — `_metadata` belongs to the
@@ -124,26 +119,45 @@ def dv_total_bytes(fs, dv_dirs: list[str]) -> int:
     return total
 
 
+def read_files(
+    spark: SparkSession, base_path: str, srcs: list[str], schema_ddl: str | None
+) -> DataFrame:
+    """One parquet scan relation over `srcs`, partition columns
+    discovered below `base_path`.  `schema_ddl` pins the read to a
+    recorded write-time contract (lake/schema.py) instead of mergeSchema
+    inference — required to read widened columns."""
+    r = (
+        spark.read.schema(schema_ddl)
+        if schema_ddl is not None
+        else spark.read.option("mergeSchema", "true")
+    )
+    return r.option("basePath", base_path).parquet(*srcs)
+
+
 def apply_dv(
     spark: SparkSession,
     df: DataFrame,
     base_path: str,
     keys: list[str],
     dv_dirs: list[str],
-    fs=None,
+    fs,
+    keep_keys: bool = False,
 ) -> DataFrame:
     """Filter a freshly-built parquet scan through its deletion vectors:
     `keys` = lake-relative file keys of the planned files that have a DV,
     `dv_dirs` = absolute sidecar dirs holding their position rows.  The
     scan relation itself is untouched (filters/pruning still push down);
-    the DV side is broadcast when small, AQE-planned otherwise."""
+    the DV side is broadcast when small, AQE-planned otherwise.
+    `keep_keys` serves the scan-key columns on every surviving row, also
+    when no planned file has a DV (the DV-delete probe's shape)."""
     if not keys:
-        return df
-    bcast = True
-    if fs is not None:
-        bcast = dv_total_bytes(fs, dv_dirs) <= BROADCAST_MAX_BYTES
+        return with_scan_key(df, base_path) if keep_keys else df
+    bcast = dv_total_bytes(fs, dv_dirs) <= BROADCAST_MAX_BYTES
     return anti_join_dv(
-        with_scan_key(df, base_path), read_dv_rows(spark, dv_dirs, keys), bcast
+        with_scan_key(df, base_path),
+        read_dv_rows(spark, dv_dirs, keys),
+        bcast,
+        keep_keys,
     )
 
 
@@ -153,8 +167,7 @@ def scan_with_dv(
     srcs: list[str],
     dv_keys: list[str],
     dv_dirs: list[str],
-    fs=None,
-    read_options: dict | None = None,
+    fs,
     schema_ddl: str | None = None,
 ) -> DataFrame:
     """Build the scan so that ONLY the files carrying a deletion vector
@@ -162,36 +175,23 @@ def scan_with_dv(
     surgical purge on a 100 TB dataset) scan through the untouched
     fast path, and the two halves union by name.  A plan that wrapped
     the whole scan in the join would tax every row for deletes that
-    touch a handful of files.  `schema_ddl` pins the read to a recorded
-    write-time contract (lake/schema.py) instead of mergeSchema
-    inference — required to read widened columns."""
-    opts = {"mergeSchema": "true", "basePath": base_path, **(read_options or {})}
-    if schema_ddl is not None:
-        opts.pop("mergeSchema", None)
-
-    def _read(paths):
-        r = spark.read
-        if schema_ddl is not None:
-            r = r.schema(schema_ddl)
-        for key_, val in opts.items():
-            r = r.option(key_, val)
-        return r.parquet(*paths)
-
+    touch a handful of files.  Without `dv_keys` this is the plain
+    `read_files` relation."""
     keyset = set(dv_keys)
     marker = base_marker(base_path)
-
-    def _key_of(p: str) -> str:
-        _, _, suffix = p.rpartition(marker)
-        return suffix
-
-    dv_srcs = [p for p in srcs if _key_of(p) in keyset]
-    clean_srcs = [p for p in srcs if _key_of(p) not in keyset]
+    dv_srcs = [p for p in srcs if p.rpartition(marker)[2] in keyset]
     if not dv_srcs:
-        return _read(srcs)
-    dirty = apply_dv(spark, _read(dv_srcs), base_path, dv_keys, dv_dirs, fs=fs)
+        return read_files(spark, base_path, srcs, schema_ddl)
+    dirty = apply_dv(
+        spark, read_files(spark, base_path, dv_srcs, schema_ddl), base_path,
+        dv_keys, dv_dirs, fs,
+    )
+    clean_srcs = [p for p in srcs if p.rpartition(marker)[2] not in keyset]
     if not clean_srcs:
         return dirty
-    return _read(clean_srcs).unionByName(dirty, allowMissingColumns=True)
+    return read_files(spark, base_path, clean_srcs, schema_ddl).unionByName(
+        dirty, allowMissingColumns=True
+    )
 
 
 def plan_dv(

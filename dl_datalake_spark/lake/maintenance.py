@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from dl_datalake_spark.lake.fs import Filesystem, get_fs, has_visible_children
 from dl_datalake_spark.lake.manifest import ManifestManager
-from dl_datalake_spark.lake.paths import PARTITION_COLS
+from dl_datalake_spark.lake.paths import IDENTITY_COLS, PARTITION_COLS
 from dl_datalake_spark.lake.snapshot import (
     file_sizes,
     list_data_files,
@@ -612,75 +612,30 @@ def recluster(
         if not live:
             meta.update(partitions=[], files=[])
             return {"files_before": 0, "files_after": 0}
-        # contracted datasets scan through the recorded write-time
-        # schema (lake/schema.py): a merge_schema-widened dataset holds
-        # mixed INT32/INT64 files mergeSchema cannot read
-        # (CANNOT_MERGE_SCHEMAS); physical names in, physical names out
-        # so the column map stays valid for the rewritten files
-        from dl_datalake_spark.lake.schema import contract_read
-        from dl_datalake_spark.lake.spec import derive_spec_cols, spec_groups
+        # the snapshot as defined (`spec.grouped_scan`): per-spec-epoch
+        # groups under the recorded contract (widened types served,
+        # retired columns excluded), logical names for the caller's
+        # cluster columns and the recorded col_stats (reader bounds
+        # look up logical keys), and the deletion vectors applied — the
+        # rewrite materializes them and the fresh pin retires the refs
+        # (carry-forward filters the map to the new files -> empty)
+        from dl_datalake_spark.lake.paths import lake_base_of
+        from dl_datalake_spark.lake.spec import (
+            derive_spec_cols,
+            ghost_cols,
+            grouped_scan,
+        )
 
-        # per-spec-epoch scan groups (lake/spec.py): an evolved dataset
-        # holds mixed directory depths one partition-discovering read
-        # refuses; each group reads under its own layout and the union
-        # derives the finer level on coarser-epoch rows
-        rcontract = contract_read(log, ds, ds, live[0])
-        spec_now = log.partition_spec_at(None)
-        df = None
-        for rels in spec_groups(live):
-            gcontract = contract_read(log, ds, ds, rels[0])
-            rd = (
-                spark.read.schema(gcontract[0])
-                if gcontract is not None
-                else spark.read.option("mergeSchema", "true")
-            )
-            f = rd.option("basePath", ds).parquet(*[f"{ds}/{rel}" for rel in rels])
-            f = derive_spec_cols(f, spec_now)
-            df = f if df is None else df.unionByName(f, allowMissingColumns=True)
-        # a finer DIRECTORY level the HEAD spec does not want (daily->
-        # monthly downgrade) must not ride the union into the rewritten
-        # files as a null-padded ghost data column (spec.ghost_cols:
-        # judged by Hive signatures, so a contract DATA column named
-        # `day` survives)
-        from dl_datalake_spark.lake.spec import ghost_cols
-
-        ghost = ghost_cols(live, spec_now)
-        if ghost and df is not None:
-            df = df.drop(*ghost)
-        # serve LOGICAL names to the caller's cluster columns and the
-        # recorded col_stats (reader bounds look up logical keys), then
-        # rename back to physical just before the file write
-        to_logical = dict(rcontract[1]) if rcontract is not None else {}
-        to_physical = {lg: ph for ph, lg in to_logical.items()}
-        if to_logical:
-            df = df.withColumnsRenamed(to_logical)
-        # merge-on-read deletes (lake/dv.py): the recluster rewrite
-        # materializes them; the fresh pin retires the refs (carry-
-        # forward filters the map to the new files -> empty).  DV keys
-        # are lake-base-relative, so derive the lake root from the
-        # dataset's own hive suffix.
-        dv_map = log.dv_at(None)
-        if dv_map:
-            from dl_datalake_spark.lake import dv as dvmod
-
-            # DV sidecar keys are LAKE-BASE-relative: resolve the base
-            # from the caller (`base_path`) or the standard hive layout;
-            # guessing wrong would make the anti-join match nothing and
-            # silently RESURRECT every DV-deleted row in the rewrite, so
-            # an unrecognizable layout refuses instead
-            if base_path is not None:
-                lake_base = base_path.rstrip("/")
-            elif "/exchange=" in ds:
-                lake_base = ds.rsplit("/exchange=", 1)[0]
-            else:
-                raise ValueError(
-                    f"{ds} carries deletion vectors but its lake base cannot "
-                    f"be derived from the path — pass base_path= so the DV "
-                    f"keys resolve (a wrong base would resurrect deleted rows)"
-                )
-            keys, dv_dirs = dvmod.plan_dv(ds, lake_base, live, dv_map)
-            df = dvmod.apply_dv(spark, df, lake_base, keys, dv_dirs, fs=fs)
+        base = base_path.rstrip("/") if base_path is not None else lake_base_of(ds)
         spec = log.partition_spec_at(None)
+        df = derive_spec_cols(grouped_scan(spark, base, ds, live, log, fs), spec)
+        # a finer DIRECTORY level the HEAD spec does not want (daily->
+        # monthly downgrade) must not ride into the rewritten files as a
+        # ghost data column (spec.ghost_cols: judged by Hive signatures,
+        # so a contract DATA column named `day` survives); the identity
+        # levels are directories of the dataset itself
+        df = df.drop(*ghost_cols(live, spec), *IDENTITY_COLS)
+        to_physical = {lg: ph for lg, ph in log.column_map_at(None).items() if lg != ph}
         months = df.select(*spec).distinct().count()
         keyed = zorder_key(df, cols, bits)
         out_df = (
@@ -695,7 +650,7 @@ def recluster(
         # the writer's one staging path: stage, stat under the PHYSICAL
         # names while recording the LOGICAL keys reader bounds look up,
         # and land under this claim
-        staged = LakeWriter(spark, base_path or ds, fs=fs, stats_cols=cols).land_rewrite(
+        staged = LakeWriter(spark, base, fs=fs, stats_cols=cols).land_rewrite(
             ds,
             meta,
             lambda d: out_df.write.partitionBy(*spec)

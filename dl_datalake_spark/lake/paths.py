@@ -18,6 +18,8 @@ _SANITIZE = re.compile(r"[/: ]")
 # (raw/ticks/agg/alt/feature-set) is stored as `data_type` to avoid the
 # SQL keyword.
 PARTITION_COLS = ("exchange", "market", "symbol", "data_type", "period", "year", "month")
+# The dataset-identity levels: directory-constant within one dataset.
+IDENTITY_COLS = PARTITION_COLS[:5]
 
 
 def sanitize_symbol(symbol: str) -> str:
@@ -50,7 +52,7 @@ def key_from_rel_path(rel: str) -> DatasetKey:
     parts = dict(
         seg.split("=", 1) for seg in rel.strip("/").split("/") if "=" in seg
     )
-    missing = {"exchange", "market", "symbol", "data_type", "period"} - set(parts)
+    missing = set(IDENTITY_COLS) - set(parts)
     if missing:
         raise ValueError(f"not a dataset rel path (missing {sorted(missing)}): {rel!r}")
     return DatasetKey(
@@ -60,6 +62,20 @@ def key_from_rel_path(rel: str) -> DatasetKey:
         data_type=parts["data_type"],
         period=parts["period"],
     )
+
+
+def lake_base_of(dataset_path: str) -> str:
+    """Inverse of `LakeWriter.dataset_path`: the lake base a dataset
+    directory sits under (its path minus the `dataset_rel_path`
+    levels).  Raises ValueError for a path not laid out that way."""
+    parts = dataset_path.rstrip("/").split("/")
+    levels = [seg.partition("=")[0] for seg in parts[-5:]]
+    if len(parts) < 6 or levels != list(IDENTITY_COLS):
+        raise ValueError(
+            f"{dataset_path} is not a <lake base>/exchange=.../period=... "
+            f"dataset directory — pass the lake base explicitly"
+        )
+    return "/".join(parts[:-5])
 
 
 def dataset_marker_tag(key: DatasetKey) -> str:

@@ -113,36 +113,6 @@ class LakeReader:
             self._bucket_memo[key] = None if row["b"] is None else int(row["b"])
         return self._bucket_memo[key]
 
-    def _contract_ddl(
-        self, log, path: str, file_rel: str, version=None
-    ) -> tuple[str, dict] | None:
-        """The explicit read schema for a dataset whose commit log
-        records a write-time contract (lake/schema.py): the contract's
-        data columns plus the hive partition columns actually present
-        in this dataset's path layout (parsed from the dataset path +
-        one file path — never guessed, so no ghost null columns).
-
-        Reading with it instead of mergeSchema serves WIDENED columns
-        (Spark 4's parquet reader takes INT32 under bigint / FLOAT
-        under double; footer-merge inference throws
-        CANNOT_MERGE_SCHEMAS) and skips the O(files) footer inference
-        entirely — at 1e5 files that is 1e5 saved metadata RPCs per
-        scan.  None for pre-contract history (mergeSchema fallback).
-
-        Returns (ddl, physical->logical renames): the DDL names the
-        PHYSICAL parquet columns (renamed columns keep their original
-        on-disk names — column mapping, `CommitLog.column_map_at`), the
-        renames restore the LOGICAL names the contract promises.
-        Delegates to `schema.contract_read` — the single shared builder
-        the writer's internal scans use too."""
-        from dl_datalake_spark.lake.schema import contract_read
-
-        return contract_read(log, self.base_path, path, file_rel, version)
-
-    @staticmethod
-    def _apply_renames(df: DataFrame, back: dict) -> DataFrame:
-        return df.withColumnsRenamed(back) if back else df
-
     @staticmethod
     def _residual(bounds: dict | None, point: dict | None) -> list:
         """The exact row predicates behind `bounds` and `point` file
@@ -209,11 +179,9 @@ class LakeReader:
         from dl_datalake_spark.lake.spec import (
             DERIVED_SPEC_COLS,
             derive_spec_cols,
+            grouped_scan,
             sig_of,
-            spec_groups,
         )
-
-        from dl_datalake_spark.lake import dv as dvmod
 
         if not paths:
             return None, None
@@ -221,25 +189,23 @@ class LakeReader:
         timed = lo is not None or hi is not None
         planned: int | None = 0
         cbounds = dict(col_bounds or {})
-        # per-PATH, per-SPEC-EPOCH scan groups: each dataset is read
-        # under its OWN contract (widened columns, logical names,
-        # retired columns excluded) and, within a dataset, each
-        # partition-spec epoch under its OWN directory layout
-        # (lake/spec.py — Spark's partition discovery refuses mixed
-        # depths under one basePath); the groups union by name — one
+        # one frame per dataset path, each read under its OWN contract
+        # and spec epochs (`spec.grouped_scan`), unioned by name — one
         # shared mergeSchema read would serve stale physical names for
         # any renamed dataset and crash on widened-type mixes
-        groups: list[
-            tuple[list[str], tuple | None, list[str], list[str], tuple | None]
-        ] = []
+        frames: list[DataFrame] = []
+        sigs: set[tuple[str, ...]] = set()
         for p in paths:
             live = resolve_live_files(self.fs, p)
             if live is None:
-                groups.append(([p], None, [], [], None))
+                frames.append(
+                    self.spark.read.option("mergeSchema", "true")
+                    .option("basePath", self.base_path)
+                    .parquet(p)
+                )
                 planned = None  # directory scan: no recorded sizes
                 continue
             log = CommitLog(p, fs=self.fs)
-            dv_map = log.dv_at(None) if live else {}
             # ts stats and sizes come from one walk of the log
             stats, sizes = log.file_facts() if live else ({}, {})
             if live and (timed or cbounds):
@@ -290,65 +256,18 @@ class LakeReader:
             if planned is not None:
                 known = [sizes.get(rel) for rel in live]
                 planned = None if None in known else planned + sum(known)
-            for rels in spec_groups(live):
-                # contract per spec group: the partition-column NAMES
-                # in the read DDL come from a representative file path,
-                # which differs across epochs of an evolved dataset
-                contract = self._contract_ddl(log, p, rels[0])
-                dv_keys: list[str] = []
-                dv_dirs: list[str] = []
-                if dv_map:
-                    # merge-on-read deletes (lake/dv.py): remember which
-                    # of the PLANNED files carry a deletion vector; their
-                    # rows get anti-joined out after the scan is built
-                    ks, ds_ = dvmod.plan_dv(p, self.base_path, rels, dv_map)
-                    dv_keys.extend(ks)
-                    dv_dirs.extend(ds_)
-                groups.append(
-                    (
-                        [f"{p}/{rel}" for rel in rels],
-                        contract, dv_keys, dv_dirs, sig_of(rels[0]),
-                    )
-                )
-        # spec columns a coarser epoch's layout lacks are DERIVED from
-        # ts (the writer's own derivation), so e.g. a `day` filter is
-        # exact on pre-evolution monthly files too
-        derivable = [
-            c
-            for c in DERIVED_SPEC_COLS
-            if any(sig is not None and c in sig for *_x, sig in groups)
-        ]
-        frames = []
-        for srcs, contract, dv_keys, dv_dirs, _sig in groups:
-            if dv_keys:
-                # split scan: only the DV-bearing files pay the anti-join
-                out = dvmod.scan_with_dv(
-                    self.spark, self.base_path, srcs, dv_keys, dv_dirs,
-                    fs=self.fs,
-                    schema_ddl=contract[0] if contract else None,
-                )
-                frames.append(
-                    self._apply_renames(out, contract[1]) if contract else out
-                )
-            elif contract is not None:
-                ddl, back = contract
-                frames.append(
-                    self._apply_renames(
-                        self.spark.read.schema(ddl)
-                        .option("basePath", self.base_path)
-                        .parquet(*srcs),
-                        back,
-                    )
-                )
-            else:
-                frames.append(
-                    self.spark.read.option("mergeSchema", "true")
-                    .option("basePath", self.base_path)
-                    .parquet(*srcs)
-                )
+            df = grouped_scan(self.spark, self.base_path, p, live, log, self.fs)
+            if df is not None:
+                frames.append(df)
+                sigs.update(map(sig_of, live))
         if not frames:
             return None, planned  # pinned-empty or every file skipped by stats
-        frames = [derive_spec_cols(f, derivable) for f in frames]
+        if len(frames) > 1:
+            # a spec column one dataset's layout has is DERIVED from ts
+            # on the others (the writer's own derivation), so e.g. a
+            # `day` filter is exact across the union
+            derivable = [c for c in DERIVED_SPEC_COLS if any(c in s for s in sigs)]
+            frames = [derive_spec_cols(f, derivable) for f in frames]
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f, allowMissingColumns=True)
@@ -464,6 +383,8 @@ class LakeReader:
         with no pinned listings."""
         from dl_datalake_spark.lake.commitlog import CommitLog
         from dl_datalake_spark.lake.paths import dataset_rel_path
+        from dl_datalake_spark.lake.snapshot import reclaimed
+        from dl_datalake_spark.lake.spec import grouped_scan
 
         k = key.normalized()
         path = f"{self.base_path}/{dataset_rel_path(k)}"
@@ -481,37 +402,18 @@ class LakeReader:
             )
         if not files:
             return self.spark.createDataFrame([], "ts long")
-        gone = [rel for rel in files if not self.fs.exists(f"{path}/{rel}")]
-        if gone:
+        lost = reclaimed(self.fs, path, files, log.dv_at(version))
+        if lost:
             raise ValueError(
                 f"snapshot {version} of {path} is no longer reconstructable: "
-                f"{len(gone)} of its {len(files)} files were reclaimed by "
-                f"vacuum_tombstones (first: {gone[0]}) — raise the vacuum "
-                f"retention horizon if older snapshots must stay readable"
+                f"{lost} — raise the vacuum retention horizon if older "
+                f"snapshots must stay readable"
             )
-        # the snapshot's deletion vectors are part of its definition
-        # (lake/dv.py): the same vacuum-reclaim contract applies to the
-        # sidecars as to the data files
-        dv_map = log.dv_at(version)
-        dv_map = {rel: d for rel, d in dv_map.items() if rel in set(files)}
-        if dv_map:
-            dv_gone = sorted(
-                {d for d in dv_map.values() if not self.fs.exists(f"{path}/{d}")}
-            )
-            if dv_gone:
-                raise ValueError(
-                    f"snapshot {version} of {path} is no longer reconstructable: "
-                    f"its deletion-vector sidecar {dv_gone[0]} was reclaimed by "
-                    f"vacuum_tombstones — raise the vacuum retention horizon if "
-                    f"older snapshots must stay readable"
-                )
         # time travel serves the HISTORICAL schema (and names): the
         # contract as of `version`, not the head's post-evolution shape.
         # grouped_scan (lake/spec.py) splits a mixed-layout listing into
         # per-spec-epoch scan groups, so a snapshot straddling a
         # partition-spec evolution reads exactly as it was pinned.
-        from dl_datalake_spark.lake.spec import grouped_scan
-
         return grouped_scan(
             self.spark, self.base_path, path, files, log, self.fs,
             version=version,
@@ -882,11 +784,15 @@ class LakeReader:
         """Read several datasets at ONE consistent cut: a multi-dataset
         commit (`write_ohlc_multi`) is either visible in every returned
         DataFrame or in none — a reader overlapping the writer's
-        per-dataset finalize sequence never sees a mixed epoch.  Returns
-        {sanitized symbol: DataFrame}; a dataset with nothing visible at
-        the cut comes back as an empty frame."""
+        per-dataset finalize sequence never sees a mixed epoch.  Each
+        dataset is served as its snapshot at the cut: the pinned files
+        with that version's deletion vectors applied, read under that
+        version's contract and spec epochs (`spec.grouped_scan`).
+        Returns {sanitized symbol: DataFrame}; a dataset with nothing
+        visible at the cut comes back as an empty frame."""
         from dl_datalake_spark.lake.commitlog import CommitLog
         from dl_datalake_spark.lake.paths import dataset_rel_path
+        from dl_datalake_spark.lake.spec import grouped_scan
 
         cut = self.consistent_cut(keys)
         out: dict[str, DataFrame] = {}
@@ -894,29 +800,19 @@ class LakeReader:
             k = key.normalized()
             rel = dataset_rel_path(k)
             path = f"{self.base_path}/{rel}"
-            files = CommitLog(path, fs=self.fs).files_at(cut[rel])
+            log = CommitLog(path, fs=self.fs)
+            files = log.files_at(cut[rel])
             if files is None:
                 # legacy dataset (no pinned commits) or the cut's commit
                 # was pruned: the live directory is the only truth
                 df, _ = self._scan_paths(
                     [path] if has_visible_children(self.fs, path) else []
                 )
-            elif not files:
-                df = None
             else:
-                contract = self._contract_ddl(
-                    CommitLog(path, fs=self.fs), path, files[0], version=cut[rel]
+                df = grouped_scan(
+                    self.spark, self.base_path, path, files, log, self.fs,
+                    version=cut[rel],
                 )
-                r = (
-                    self.spark.read.schema(contract[0])
-                    if contract is not None
-                    else self.spark.read.option("mergeSchema", "true")
-                )
-                df = r.option("basePath", self.base_path).parquet(
-                    *[f"{path}/{rel_f}" for rel_f in files]
-                )
-                if contract is not None:
-                    df = self._apply_renames(df, contract[1])
             out[k.symbol] = (
                 df if df is not None else self.spark.createDataFrame([], "ts long")
             )

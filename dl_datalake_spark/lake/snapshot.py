@@ -85,6 +85,36 @@ def resolve_live_files(fs: Filesystem, dataset_path: str) -> list[str] | None:
     return log.latest_files()
 
 
+def reclaimed(
+    fs: Filesystem, dataset_path: str, files: list[str], dv_map: dict[str, str]
+) -> str | None:
+    """What `vacuum_tombstones` reclaimed of a pinned snapshot — its
+    data `files` or a deletion-vector sidecar `dv_map` names for them
+    (the DVs are part of the snapshot's definition, lake/dv.py) — as
+    the reason clause of the caller's error, or None when the snapshot
+    is still on disk in full."""
+    gone = [rel for rel in files if not fs.exists(f"{dataset_path}/{rel}")]
+    if gone:
+        return (
+            f"{len(gone)} of its {len(files)} files were reclaimed by "
+            f"vacuum_tombstones (first: {gone[0]})"
+        )
+    live = set(files)
+    dv_gone = sorted(
+        {
+            d
+            for rel, d in dv_map.items()
+            if rel in live and not fs.exists(f"{dataset_path}/{d}")
+        }
+    )
+    if dv_gone:
+        return (
+            f"its deletion-vector sidecar {dv_gone[0]} was reclaimed by "
+            f"vacuum_tombstones"
+        )
+    return None
+
+
 #: speculative tail read: a Spark-written footer is a few KiB, so one
 #: read almost always covers it; a larger footer costs one exact re-read
 FOOTER_READ = 64 * 1024

@@ -121,56 +121,64 @@ def grouped_scan(
     fs,
     version: int | None = None,
     logical: bool = True,
+    *,
+    dv_probe: bool = False,
+    dv_map: dict | None = None,
 ) -> DataFrame | None:
     """Mixed-spec-safe snapshot scan — the ONE way a pinned live list
-    becomes a DataFrame (`reader._scan_paths`, `writer._read_existing`,
-    `writer._read_pinned_at` all resolve through here): group `live`
-    by Hive signature (Spark's partition discovery refuses mixed
-    directory depths under one basePath), read each group under its
-    own layout + the dataset's contract-at-`version` (widened types,
-    logical names, retired columns excluded), anti-join each group's
-    deletion vectors, DERIVE the spec columns a coarser-epoch group
-    lacks (a ``day`` filter is exact on monthly-epoch files too), and
-    union by name.  A never-evolved dataset takes the identical
-    single-group path it always did — same plan, zero extra jobs.
+    becomes a DataFrame.  Callers: the reader's scans
+    (`LakeReader._scan_paths`, `read_dataset_at`, `read_datasets`), the
+    writer's rewrites and DV probes (`_read_existing`, `_read_pinned_at`,
+    `_delete_dv_into`, `_update_where_dv`), restore's row count and
+    change-feed diff (`_restore_into`, `_restore_tag_changes`), and
+    `maintenance.compact` / `recluster`.  Group `live` by Hive
+    signature (Spark's partition discovery refuses mixed directory
+    depths under one basePath), read each group under its own layout +
+    the dataset's contract-at-`version` (widened types, logical names,
+    retired columns excluded), anti-join each group's deletion vectors
+    at `version`, DERIVE the spec columns a coarser-epoch group lacks
+    (a ``day`` filter is exact on monthly-epoch files too), and union by
+    name.  A never-evolved dataset takes the identical single-group
+    path it always did — same plan, zero extra jobs.  `base_path` is
+    the lake base: DV keys and the identity partition columns are
+    relative to it.
 
     `logical=False` serves PHYSICAL column names (compaction's shape:
     rewritten files must keep their physical columns so the
-    column_map stays valid for them)."""
+    column_map stays valid for them).  `dv_probe` is the DV delete and
+    update probe's shape: every row carries its scan position
+    (`_dv_file`, `_dv_pos` — the new sidecar's content), so each group
+    is ONE relation with the current deletion vectors anti-joined out
+    (not `dv.scan_with_dv`'s split scan).  `dv_map` is the DV map at
+    `version` when the caller already resolved it (the probe's sidecar
+    merge needs the same map), saving the log reads."""
     from dl_datalake_spark.lake import dv as dvmod
     from dl_datalake_spark.lake.schema import contract_read
 
     if not live:
         return None
     groups = spec_groups(live)
-    sigs = [sig_of(g[0]) for g in groups]
-    all_keys: set[str] = set().union(*sigs) if sigs else set()
-    derivable = [c for c in DERIVED_SPEC_COLS if c in all_keys]
-    dv_map = log.dv_at(version)
+    derivable = [
+        c for c in DERIVED_SPEC_COLS if any(c in sig_of(g[0]) for g in groups)
+    ]
+    if dv_map is None:
+        dv_map = log.dv_at(version)
     frames = []
-    for rels, _sig in zip(groups, sigs):
+    for rels in groups:
         contract = contract_read(log, base_path, path, rels[0], version=version)
+        ddl = contract[0] if contract else None
         srcs = [f"{path}/{rel}" for rel in rels]
-        dv_keys: list[str] = []
-        dv_dirs: list[str] = []
-        if dv_map:
-            dv_keys, dv_dirs = dvmod.plan_dv(path, base_path, rels, dv_map)
-        if dv_keys:
-            out = dvmod.scan_with_dv(
-                spark, base_path, srcs, dv_keys, dv_dirs, fs=fs,
-                schema_ddl=contract[0] if contract else None,
-            )
-        elif contract is not None:
-            out = (
-                spark.read.schema(contract[0])
-                .option("basePath", base_path)
-                .parquet(*srcs)
+        dv_keys, dv_dirs = (
+            dvmod.plan_dv(path, base_path, rels, dv_map) if dv_map else ([], [])
+        )
+        if dv_probe:
+            out = dvmod.apply_dv(
+                spark, dvmod.read_files(spark, base_path, srcs, ddl), base_path,
+                dv_keys, dv_dirs, fs, keep_keys=True,
             )
         else:
-            out = (
-                spark.read.option("mergeSchema", "true")
-                .option("basePath", base_path)
-                .parquet(*srcs)
+            out = dvmod.scan_with_dv(
+                spark, base_path, srcs, dv_keys, dv_dirs, fs=fs, schema_ddl=ddl
             )
         if contract and logical and contract[1]:
             out = out.withColumnsRenamed(contract[1])

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from dl_datalake_spark.lake.commitlog import CommitLog
 from dl_datalake_spark.lake.fs import Filesystem, get_fs, has_visible_children
 from dl_datalake_spark.lake.manifest import ManifestManager
-from dl_datalake_spark.lake.paths import PARTITION_COLS, DatasetKey
+from dl_datalake_spark.lake.paths import IDENTITY_COLS, PARTITION_COLS, DatasetKey
 from dl_datalake_spark.lake.snapshot import (
     added_file_stats,
     file_sizes,
@@ -113,29 +113,29 @@ class _Staging:
         return f"{self.dir}/{LakeWriter.CDF_DIR}"
 
 
-@contextmanager
-def dynamic_partition_overwrite(spark: SparkSession):
-    """Pin ``partitionOverwriteMode=dynamic`` for the duration, restoring
-    the caller's value after.  Every lake overwrite MUST run under this:
-    the semantics of both upsert and row-level delete are "replace only
-    the partitions present in the output".  DataLakeClient accepts any
-    SparkSession — on a plain session the ambient mode is ``static``,
-    under which the same ``mode("overwrite")`` replaces the ENTIRE
-    ``base_path`` with just the batch's months (for delete_where, the
-    entire lake with only the kept rows of the touched months): silent
-    loss of every untouched dataset.  Never trust the ambient conf for a
-    destructive write."""
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
 #: the most (symbol, year, month) triples a multi-dataset upsert prunes
 #: its read-back by; wider batches prune by month alone
 _MULTI_PRUNE_TRIPLES = 1024
+
+
+def _month_of(row) -> tuple[int | None, int | None]:
+    """A collected (year, month) row as a partition key; null-ts rows
+    are the month (None, None), as `partition_of` maps their files."""
+    if row["year"] is None:
+        return None, None
+    return int(row["year"]), int(row["month"])
+
+
+def _month_sorted(months) -> list:
+    """(year, month) pairs in order, the null-ts month (None, None)
+    first (it does not compare with ints)."""
+    return sorted(months, key=lambda p: (p[0] is not None, p))
+
+
+def _dated(months) -> list[list[int]]:
+    """The months a commit records: every touched month but the null-ts
+    one, which no write records (`LakeWriter._probe_months`)."""
+    return [list(p) for p in _month_sorted(months) if p[0] is not None]
 
 
 def _require_ts(df: DataFrame, ts_col: str) -> str:
@@ -678,16 +678,9 @@ class LakeWriter:
                 return None
             scan = existing.where(self._month_pred(months)) if months else existing
             matched = F.coalesce(pred, F.lit(False))
-            probe = (
-                scan.where(matched)
-                .groupBy("year", "month")
-                .agg(F.count(F.lit(1)).alias("n_del"))
-                .collect()
-            )
-            if not probe:
+            touched, rows_deleted = self._probe_months(scan.where(matched))
+            if not touched:
                 return None
-            touched = sorted((int(r["year"]), int(r["month"])) for r in probe)
-            rows_deleted = int(sum(r["n_del"] for r in probe))
             mp = self._month_pred(touched)
             cdf = (
                 scan.where(mp).where(matched)
@@ -704,7 +697,7 @@ class LakeWriter:
             }
 
         res = self._cow_dml(k, "delete", compute, commit_meta, optimistic=optimistic)
-        if not res.partitions:
+        if not res.rows:
             return res  # no match: nothing committed
         # incremental catalog refresh: a delete only removes rows, so
         # the prior entry's count adjusts by the delta and its (widen-
@@ -778,20 +771,13 @@ class LakeWriter:
             meta.update(rows=0, partitions=[])
             return 0, []
         dv_map = log.dv_at(None)
-        df = self._dv_probe_frame(path, live, dv_map, months)
         # NULL predicate rows survive, like SQL DELETE
-        probe = df.where(F.coalesce(pred, F.lit(False))).persist()
+        probe = self._dv_probe(path, live, log, dv_map, months, pred).persist()
         try:
-            agg = (
-                probe.groupBy("year", "month")
-                .agg(F.count(F.lit(1)).alias("n_del"))
-                .collect()
-            )
-            if not agg:
+            touched, rows_deleted = self._probe_months(probe)
+            if not touched:
                 meta.update(rows=0, partitions=[])
                 return 0, []
-            touched = sorted((int(r["year"]), int(r["month"])) for r in agg)
-            rows_deleted = int(sum(r["n_del"] for r in agg))
             if self.emit_cdf:
                 meta["cdf_bytes"] = self._write_cdf(
                     k,
@@ -812,7 +798,7 @@ class LakeWriter:
             new_map[r] = dv_rel
         meta.update(
             rows=rows_deleted,
-            partitions=[list(p) for p in touched],
+            partitions=_dated(touched),
             files_add=[],
             files_remove=[],
             dv=new_map,
@@ -866,7 +852,7 @@ class LakeWriter:
                 )
                 out[r] = WriteResult(
                     path=self.dataset_path(k), time_from=None, time_to=None,
-                    rows=n, partitions=[list(p) for p in touched], txid=txid,
+                    rows=n, partitions=_dated(touched), txid=txid,
                 )
         # manifest AFTER the flip (committed-or-invisible to the catalog
         # too); incremental — no dataset rescan
@@ -984,8 +970,7 @@ class LakeWriter:
 
         def compute(existing, snap):
             months = [
-                (int(r["year"]), int(r["month"]))
-                for r in src.select("year", "month").distinct().collect()
+                _month_of(r) for r in src.select("year", "month").distinct().collect()
             ]
             if not months:
                 return None
@@ -994,10 +979,10 @@ class LakeWriter:
                 # target partition (kept_t re-emits all unmatched rows)
                 # plus the batch's own months
                 t_months = [
-                    (int(r["year"]), int(r["month"]))
+                    _month_of(r)
                     for r in existing.select("year", "month").distinct().collect()
                 ]
-                months = sorted(set(months) | set(t_months))
+                months = _month_sorted(set(months) | set(t_months))
                 t_df = existing
             else:
                 t_df = (
@@ -1183,11 +1168,31 @@ class LakeWriter:
     @staticmethod
     def _month_pred(months) -> Column:
         """OR of (year, month) equalities — the partition-pruning scan
-        bound every month-scoped DML uses."""
+        bound every month-scoped DML uses.  The null-ts month
+        (None, None) selects the rows with a null ``year``."""
         p = F.lit(False)
         for y, m in months:
-            p = p | ((F.col("year") == int(y)) & (F.col("month") == int(m)))
+            p = p | (
+                F.col("year").isNull()
+                if y is None
+                else (F.col("year") == int(y)) & (F.col("month") == int(m))
+            )
         return p
+
+    @staticmethod
+    def _probe_months(matched: DataFrame) -> tuple[list, int]:
+        """(touched months, row count) of a DML probe's matched rows —
+        one grouped count job.  Null-ts rows form the month (None,
+        None): the ``__HIVE_DEFAULT_PARTITION__`` files that
+        `partition_of` maps there, which `_month_pred` and `_land`'s
+        `drop` address like any month.  Commits never record it
+        (`_dated`): writes record no month for null-ts rows either."""
+        agg = (
+            matched.groupBy("year", "month")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        )
+        return _month_sorted(map(_month_of, agg)), int(sum(r["n"] for r in agg))
 
     def update_where(
         self,
@@ -1258,16 +1263,9 @@ class LakeWriter:
                 return None
             scan = existing.where(self._month_pred(months)) if months else existing
             matched = F.coalesce(pred, F.lit(False))
-            probe = (
-                scan.where(matched)
-                .groupBy("year", "month")
-                .agg(F.count(F.lit(1)).alias("n_upd"))
-                .collect()
-            )
-            if not probe:
+            touched, rows_updated = self._probe_months(scan.where(matched))
+            if not touched:
                 return None
-            touched = sorted((int(r["year"]), int(r["month"])) for r in probe)
-            rows_updated = int(sum(r["n_upd"] for r in probe))
             mp = self._month_pred(touched)
             # the SNAPSHOT's spec: the staged files are written under
             # it, and a concurrent spec move conflicts at validation —
@@ -1303,7 +1301,7 @@ class LakeWriter:
             }
 
         res = self._cow_dml(k, "update", compute, commit_meta, optimistic=optimistic)
-        if not res.partitions:
+        if not res.rows:
             return res  # no match: nothing committed
         # incremental catalog refresh: updates keep the row count and
         # can only EXTEND the range (ts moves ride the added files'
@@ -1451,7 +1449,7 @@ class LakeWriter:
         no prior entry (or no recorded row count) exists."""
         result = WriteResult(
             path=path, time_from=None, time_to=None, rows=n_rows,
-            partitions=[list(p) for p in touched],
+            partitions=_dated(touched),
         )
         if self.manifest is None:
             return result
@@ -1520,18 +1518,11 @@ class LakeWriter:
                 if not live:
                     raise _NoMatch
                 dv_map = log.dv_at(None)
-                df = self._dv_probe_frame(path, live, dv_map, months)
-                probe = df.where(F.coalesce(pred, F.lit(False))).persist()
+                probe = self._dv_probe(path, live, log, dv_map, months, pred).persist()
                 try:
-                    agg = (
-                        probe.groupBy("year", "month")
-                        .agg(F.count(F.lit(1)).alias("n_upd"))
-                        .collect()
-                    )
-                    if not agg:
+                    touched, rows_updated = self._probe_months(probe)
+                    if not touched:
                         raise _NoMatch
-                    touched = sorted((int(r["year"]), int(r["month"])) for r in agg)
-                    rows_updated = int(sum(r["n_upd"] for r in agg))
                     spec = log.partition_spec_at(None)
                     # post-images: every probe row IS matched, so the
                     # transform applies unconditionally
@@ -1568,7 +1559,7 @@ class LakeWriter:
                     (
                         self._with_spec_cols(self._rename_frame(post, cmap), spec)
                         .sortWithinPartitions("ts")
-                        .drop("exchange", "market", "symbol", "data_type", "period")
+                        .drop(*IDENTITY_COLS)
                         .write.partitionBy(*spec)
                         .option("compression", "snappy")
                         .mode("append")
@@ -1585,9 +1576,10 @@ class LakeWriter:
                     st, staged, path, meta, [], delta=True,
                     cdf=st.cdf if self.emit_cdf else None,
                 )
-                parts = sorted(set(touched) | set(staged.pcounts))
                 meta.update(
-                    rows=rows_updated, partitions=[list(p) for p in parts], dv=new_map
+                    rows=rows_updated,
+                    partitions=_dated(set(touched) | set(staged.pcounts)),
+                    dv=new_map,
                 )
         except _NoMatch:
             return WriteResult(path=path, time_from=None, time_to=None, rows=0, partitions=[])
@@ -1599,49 +1591,23 @@ class LakeWriter:
             delta_rows=0, batch_bounds=(staged.facts["t0"], staged.facts["t1"]),
         )
 
-    def _dv_probe_frame(self, path: str, live: list[str], dv_map: dict, months):
-        """The DV-delete/update probe input: the pinned live files with
-        the scan-key columns (`_dv_file`/`_dv_pos`) materialized and the
-        CURRENT deletion vectors anti-joined out, optionally bounded to
-        known [year, month] partitions — shared by `_delete_where_dv`
-        and `_update_where_dv` so the broadcast gating and key handling
-        cannot drift between them."""
-        from dl_datalake_spark.lake import dv as dvmod
-        from dl_datalake_spark.lake.schema import contract_read
+    def _dv_probe(
+        self, path: str, live: list[str], log: CommitLog, dv_map: dict, months, pred
+    ):
+        """The DV delete/update probe: the head snapshot's rows matching
+        `pred` (NULL counts as no match, like SQL), each keyed by its
+        scan position (`grouped_scan(dv_probe=True)`), optionally bounded
+        to known [year, month] partitions.  `dv_map` is the head's DV
+        map, which the caller's sidecar merge reuses."""
+        from dl_datalake_spark.lake.spec import grouped_scan
 
-        contract = contract_read(
-            CommitLog(path, fs=self.fs), self.base_path, path, live[0]
+        df = grouped_scan(
+            self.spark, self.base_path, path, live, log, self.fs,
+            dv_probe=True, dv_map=dv_map,
         )
-        r = (
-            self.spark.read.schema(contract[0])
-            if contract is not None
-            else self.spark.read.option("mergeSchema", "true")
-        )
-        df = r.option("basePath", self.base_path).parquet(
-            *[f"{path}/{rel}" for rel in live]
-        )
-        # scan key first (the _metadata pseudo-column belongs to the
-        # scan relation), THEN resolve physical -> logical names
-        df = dvmod.with_scan_key(df, self.base_path)
-        if contract is not None:
-            df = self._rename_frame(df, contract[1])
-        keys, dirs = dvmod.plan_dv(path, self.base_path, live, dv_map)
-        if keys:
-            df = dvmod.anti_join_dv(
-                df,
-                dvmod.read_dv_rows(self.spark, dirs, keys),
-                broadcast=dvmod.dv_total_bytes(self.fs, dirs)
-                <= dvmod.BROADCAST_MAX_BYTES,
-                keep_keys=True,
-            )
         if months:
-            scan_pred = F.lit(False)
-            for y, m in months:
-                scan_pred = scan_pred | (
-                    (F.col("year") == int(y)) & (F.col("month") == int(m))
-                )
-            df = df.where(scan_pred)
-        return df
+            df = df.where(self._month_pred(months))
+        return df.where(F.coalesce(pred, F.lit(False)))
 
     def _write_dv_sidecar(
         self, path: str, ds_rel: str, probe: DataFrame, dv_map: dict, n_rows: int
@@ -1727,6 +1693,9 @@ class LakeWriter:
         changed partitions, and fill `meta` so the finalize pins the
         historical snapshot as the new head.  Shared by the per-dataset
         `restore_dataset` and the lake-level `restore_lake_to`."""
+        from dl_datalake_spark.lake.snapshot import reclaimed
+        from dl_datalake_spark.lake.spec import grouped_scan
+
         ds = self.dataset_path(k)
         target = log.files_at(version)
         if target is None:
@@ -1734,44 +1703,28 @@ class LakeWriter:
                 f"no pinned snapshot at version {version} of {ds}: history "
                 "pruned past it or the dataset predates pinned listings"
             )
-        gone = [rel for rel in target if not self.fs.exists(f"{ds}/{rel}")]
-        if gone:
-            raise ValueError(
-                f"snapshot {version} of {ds} is no longer restorable: "
-                f"{len(gone)} of its {len(target)} files were reclaimed by "
-                f"vacuum_tombstones (first: {gone[0]})"
-            )
         head = log.latest_files() or []
         # the snapshot's deletion vectors are part of its definition
         # (lake/dv.py): the target's map must be restorable and gets
         # re-pinned explicitly (carrying the HEAD's map forward would
         # keep rows deleted that the target still had)
-        dv_target = {
-            rel: d for rel, d in log.dv_at(version).items() if rel in set(target)
-        }
-        dv_head = {rel: d for rel, d in log.dv_at(None).items() if rel in set(head)}
-        dv_gone = sorted(
-            {d for d in dv_target.values() if not self.fs.exists(f"{ds}/{d}")}
-        )
-        if dv_gone:
+        t_set, h_set = set(target), set(head)
+        dv_target = {rel: d for rel, d in log.dv_at(version).items() if rel in t_set}
+        dv_head = {rel: d for rel, d in log.dv_at(None).items() if rel in h_set}
+        lost = reclaimed(self.fs, ds, target, dv_target)
+        if lost:
             raise ValueError(
-                f"snapshot {version} of {ds} is no longer restorable: its "
-                f"deletion-vector sidecar {dv_gone[0]} was reclaimed by "
-                f"vacuum_tombstones"
+                f"snapshot {version} of {ds} is no longer restorable: {lost}"
             )
-        changed = set(head) ^ set(target)
+        changed = h_set ^ t_set
         # a DV-only difference changes rows without changing the listing
-        changed |= {
-            f
-            for f in set(head) & set(target)
-            if dv_head.get(f) != dv_target.get(f)
-        }
+        changed |= {f for f in h_set & t_set if dv_head.get(f) != dv_target.get(f)}
         parts = sorted({partition_of(f) for f in changed} - {(None, None)})
         if target:
-            snap = self._read_snapshot(
-                ds, target, dv_target, log=log, version=version
-            )
-            s = snap.agg(
+            s = grouped_scan(
+                self.spark, self.base_path, ds, target, log, self.fs,
+                version=version,
+            ).agg(
                 F.min("ts").alias("t0"),
                 F.max("ts").alias("t1"),
                 F.count(F.lit(1)).alias("n"),
@@ -1793,10 +1746,7 @@ class LakeWriter:
             meta["cdf_bytes"] = self._write_cdf(
                 k,
                 meta["version"],
-                self._restore_tag_changes(
-                    ds, head, target, parts, dv_head, dv_target,
-                    log=log, version=version,
-                ),
+                self._restore_tag_changes(ds, head, target, parts, log, version),
             )
             meta["cdf"] = True
         meta.update(
@@ -1821,103 +1771,39 @@ class LakeWriter:
             partitions=[list(p) for p in parts], files=sorted(target),
         )
 
-    def _read_snapshot(
-        self,
-        ds: str,
-        files: list[str],
-        dv_map: dict[str, str],
-        base_path: str | None = None,
-        log: CommitLog | None = None,
-        version: int | None = None,
-    ) -> DataFrame:
-        """Scan an explicit pinned file list through its deletion
-        vectors — the snapshot AS DEFINED, shared by restore's row
-        counting and its CDF diff.  When `log` is given the scan goes
-        through THAT EPOCH's schema contract (lake/schema.py,
-        `version=None` = head): a merge_schema-widened dataset holds
-        mixed INT32/INT64 files that mergeSchema footer inference
-        cannot read (CANNOT_MERGE_SCHEMAS), and retired physical
-        columns must not leak into the restore diff.  Serves PHYSICAL
-        names either way (callers rename per their epoch's map)."""
-        from dl_datalake_spark.lake.schema import contract_read
-
-        bp = base_path if base_path is not None else self.base_path
-        ddl = None
-        if log is not None and files:
-            contract = contract_read(log, bp, ds, files[0], version)
-            if contract is not None:
-                ddl = contract[0]
-        dvm = {rel: d for rel, d in dv_map.items() if rel in set(files)}
-        if dvm:
-            from dl_datalake_spark.lake import dv as dvmod
-
-            # DV keys are ALWAYS lake-base-relative (that's what the
-            # sidecars store) regardless of the basePath read option,
-            # which only drives partition-column inference — scan_with_dv
-            # splits on those keys but reads with `bp`
-            keys, dirs = dvmod.plan_dv(ds, self.base_path, files, dvm)
-            return dvmod.scan_with_dv(
-                self.spark,
-                self.base_path,
-                [f"{ds}/{rel}" for rel in files],
-                keys,
-                dirs,
-                fs=self.fs,
-                read_options={"basePath": bp},
-                schema_ddl=ddl,
-            )
-        rd = (
-            self.spark.read.schema(ddl)
-            if ddl is not None
-            else self.spark.read.option("mergeSchema", "true")
-        )
-        return rd.option("basePath", bp).parquet(
-            *[f"{ds}/{rel}" for rel in files]
-        )
-
     def _restore_tag_changes(
         self,
         ds: str,
         head: list[str],
         target: list[str],
         parts: list,
-        dv_head: dict[str, str] | None = None,
-        dv_target: dict[str, str] | None = None,
-        log: CommitLog | None = None,
-        version: int | None = None,
+        log: CommitLog,
+        version: int,
     ) -> DataFrame:
         """Row-level diff of the head vs target snapshots over the
         restore's changed partitions, `_change_type`-tagged for the
         feed: target row with an existing ts -> update_postimage,
         target-only ts -> insert, head-only ts -> delete pre-image.
         Window key is `ts` alone — the other dataset coordinates are
-        directory-constant within one dataset.  Each side reads through
-        its OWN deletion vectors, so a restore across a DV delete diffs
-        the row sets the two snapshots actually served.  Each side also
-        resolves its OWN epoch's column mapping, so the feed rows carry
-        the logical names their epoch promised (a restore across a
-        rename would otherwise emit stale physical names)."""
+        directory-constant within one dataset.  Each side is read as
+        ITS snapshot (`spec.grouped_scan`): its own deletion vectors, so
+        a restore across a DV delete diffs the row sets the two
+        snapshots actually served, and its own epoch's contract, so the
+        feed rows carry the logical names their epoch promised (a
+        restore across a rename would otherwise emit stale physical
+        names)."""
+        from dl_datalake_spark.lake.spec import grouped_scan
+
         t_set = {tuple(p) for p in parts}
-        cmap_head = log.column_map_at(None) if log is not None else {}
-        cmap_tgt = (
-            log.column_map_at(version)
-            if log is not None and version is not None
-            else cmap_head
-        )
 
-        def _rd(files, dvm, cmap, epoch):
+        def _rd(files, epoch):
             sel = [rel for rel in files if partition_of(rel) in t_set]
-            if not sel:
-                return None
-            # each side scans through ITS epoch's contract (widened
-            # types readable, retired columns excluded from the diff)
-            df = self._read_snapshot(
-                ds, sel, dvm or {}, base_path=ds, log=log, version=epoch
+            return grouped_scan(
+                self.spark, self.base_path, ds, sel, log, self.fs, version=epoch
             )
-            return self._rename_frame(df, {p: l for l, p in cmap.items()})
 
-        old = _rd(head, dv_head, cmap_head, None)
-        new = _rd(target, dv_target, cmap_tgt, version)
+        old = _rd(head, None)
+        new = _rd(target, version)
         if old is None and new is None:
             raise ValueError("restore diff requested with no changed files")
         if old is None:
@@ -2217,13 +2103,6 @@ class LakeWriter:
             return df
         return df.withColumnsRenamed(todo)
 
-    def _to_logical(self, df: DataFrame, log: CommitLog) -> DataFrame:
-        """Physical -> logical column names right after a data-file
-        read, so every internal frame (and every predicate/assignment
-        the caller passed) speaks logical names."""
-        cmap = log.column_map_at(None)
-        return self._rename_frame(df, {p: l for l, p in cmap.items()})
-
     def rename_column(self, key: DatasetKey, old: str, new: str) -> None:
         """Metadata-only column RENAME (Delta's column-mapping verb):
         one commit updates the schema contract and the logical->physical
@@ -2460,7 +2339,7 @@ class LakeWriter:
                 (
                     self._with_spec_cols(self._rename_frame(rewritten, cmap), spec)
                     .sortWithinPartitions("ts")
-                    .drop("exchange", "market", "symbol", "data_type", "period")
+                    .drop(*IDENTITY_COLS)
                     .write.partitionBy(*spec)
                     .option("compression", "snappy")
                     .mode("append")
@@ -2783,6 +2662,10 @@ class LakeWriter:
                 commutable
                 and (parts is not None or rew is not None)
                 and not (eff & touched)
+                # no commit records the null-ts month (`_dated`), so a
+                # write that read its rows cannot tell whether this commit
+                # added, rewrote or deleted some of them
+                and (read_set == "none" or (None, None) not in touched)
             ):
                 # disjoint partition-scoped effect, or a recorded no-op
                 # (e.g. delete matching nothing); a legacy tree-swap compact
@@ -2792,7 +2675,7 @@ class LakeWriter:
             raise ConcurrentWriteConflict(
                 f"commit {version} (mode={mode_e}, partitions={parts}, "
                 f"rewrite_partitions={rew}) of {ds_path} overlaps this write's "
-                f"months {sorted(touched)} or rewrote the tree — the snapshot "
+                f"months {_month_sorted(touched)} or rewrote the tree — the snapshot "
                 "this write validated against is stale; retry from a fresh "
                 "snapshot"
             )
@@ -3122,7 +3005,7 @@ class LakeWriter:
                 )
                 if plan is None:
                     raise _NoMatch
-                r_set = {(int(y), int(m)) for y, m in plan["read_months"]}
+                r_set = set(map(tuple, plan["read_months"]))
                 out = plan.get("out")
                 if out is not None:
                     # DML post-images take the writer's file layout (the
@@ -3141,7 +3024,7 @@ class LakeWriter:
                     base_spec = tuple(base_contract[4])
                     (
                         self._with_spec_cols(frame, base_spec)
-                        .drop("exchange", "market", "symbol", "data_type", "period")
+                        .drop(*IDENTITY_COLS)
                         .write.partitionBy(*base_spec)
                         .option("compression", "snappy")
                         .mode("append")
@@ -3156,7 +3039,7 @@ class LakeWriter:
                 # writer shares (`rows` is the plan's: a delete counts
                 # the rows it removed, not the ones it kept)
                 (staged,) = self._stage_facts([st.dir], "ts", base_cmap)
-                write_months = r_set | set(staged.pcounts)
+                write_months = _dated(r_set | set(staged.pcounts))
 
                 if optimistic:
                     meta = claim.enter_context(
@@ -3175,12 +3058,7 @@ class LakeWriter:
                     meta.setdefault(mk, mv)  # commit_meta keys win
                 meta.update(
                     rows=int(plan["rows"]),
-                    partitions=[
-                        list(p)
-                        for p in sorted(
-                            write_months if cdc_parts is None else cdc_parts
-                        )
-                    ],
+                    partitions=write_months if cdc_parts is None else _dated(cdc_parts),
                 )
         except _NoMatch:
             return WriteResult(
@@ -3191,7 +3069,7 @@ class LakeWriter:
             time_from=staged.facts["t0"],
             time_to=staged.facts["t1"],
             rows=int(plan["rows"]),
-            partitions=[list(p) for p in sorted(write_months)],
+            partitions=write_months,
             files=None,
             file_stats=staged.file_stats or None,
             col_stats=staged.col_stats or None,
@@ -3362,7 +3240,7 @@ class LakeWriter:
                     self._rename_frame(out, column_map),  # logical -> physical
                     spec, ts_col,
                 )
-                .drop("exchange", "market", "symbol", "data_type", "period")
+                .drop(*IDENTITY_COLS)
                 .write.partitionBy(*spec)
                 .option("compression", "snappy")
                 .mode("append")

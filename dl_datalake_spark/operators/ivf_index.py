@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from dl_datalake_spark.lake.commitlog import CommitLog
 from dl_datalake_spark.lake.fs import get_fs
 from dl_datalake_spark.operators.similarity import _with_norm, cosine, cosine_scored
+from dl_datalake_spark.session import dynamic_partition_overwrite
 
 CENTROIDS_DIR = "centroids"
 VECTORS_DIR = "vectors"
@@ -341,17 +342,13 @@ def upsert_ivf_index(
         )
         try:
             n = merged.count()  # pin rows before the overwrite drops inputs
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
+            with dynamic_partition_overwrite(spark):
                 (
                     merged.repartition("cell")
                     .write.mode("overwrite")
                     .partitionBy("cell")
                     .parquet(vdir)
                 )
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         finally:
             merged.unpersist()
         meta["rows"] = n
@@ -414,9 +411,7 @@ def delete_from_ivf_index(
             before = sub.count()
             after = keep.count()
             keep_cells = {r["cell"] for r in keep.select("cell").distinct().collect()}
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
+            with dynamic_partition_overwrite(spark):
                 if after:
                     (
                         keep.repartition("cell")
@@ -424,8 +419,6 @@ def delete_from_ivf_index(
                         .partitionBy("cell")
                         .parquet(vdir)
                     )
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             fs = get_fs(vdir, spark)
             for c in set(cells) - keep_cells:
                 fs.rmtree(os.path.join(vdir, f"cell={c}"))
@@ -556,11 +549,7 @@ def apply_cdf_to_ivf(
                 keep_cells = {
                     r["cell"] for r in keep.select("cell").distinct().collect()
                 }
-                prev = spark.conf.get(
-                    "spark.sql.sources.partitionOverwriteMode", "static"
-                )
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-                try:
+                with dynamic_partition_overwrite(spark):
                     if n:
                         (
                             keep.repartition("cell")
@@ -568,8 +557,6 @@ def apply_cdf_to_ivf(
                             .partitionBy("cell")
                             .parquet(vdir)
                         )
-                finally:
-                    spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
                 fs = get_fs(vdir, spark)
                 for c in set(cells) - keep_cells:
                     fs.rmtree(os.path.join(vdir, f"cell={c}"))
@@ -695,17 +682,13 @@ def repair_ivf_index(spark: SparkSession, path: str) -> int:
             before = sub.count()
             after = keep.count()
             keep_cells = {r["cell"] for r in keep.select("cell").distinct().collect()}
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
+            with dynamic_partition_overwrite(spark):
                 (
                     keep.repartition("cell")
                     .write.mode("overwrite")
                     .partitionBy("cell")
                     .parquet(vdir)
                 )
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             # dynamic overwrite only replaces partitions PRESENT in the
             # output — a cell whose every row was stale produces nothing,
             # so its directory must be dropped explicitly

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from dl_datalake_spark.lake.commitlog import CommitLog
 from dl_datalake_spark.lake.fs import get_fs
 from dl_datalake_spark.operators.dedup import minhash_signatures, word_shingles
+from dl_datalake_spark.session import dynamic_partition_overwrite
 
 BANDS_DIR = "bands"
 
@@ -271,11 +272,7 @@ def apply_cdf_to_lsh(
                     int(r["bucket"])
                     for r in keep.select("bucket").distinct().collect()
                 }
-                prev = spark.conf.get(
-                    "spark.sql.sources.partitionOverwriteMode", "static"
-                )
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-                try:
+                with dynamic_partition_overwrite(spark):
                     if n:
                         (
                             keep.repartition("bucket")
@@ -284,8 +281,6 @@ def apply_cdf_to_lsh(
                             .option("compression", "snappy")
                             .parquet(bdir)
                         )
-                finally:
-                    spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
                 fs = get_fs(bdir, spark)
                 for bk in set(touched) - keep_buckets:
                     fs.rmtree(os.path.join(bdir, f"bucket={bk}"))

@@ -14,7 +14,6 @@ map — no shuffle.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Callable, Iterator
 
 import pandas as pd
@@ -46,15 +45,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("features", T.ArrayType(T.FloatType())),
     ]
 )
-
-
-def _fake_decode(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic stand-in for a real image/audio decoder: derives a
-    feature vector from the payload digest. Replace with a real codec
-    (PIL/torchaudio/ffmpeg) via the `decoder` argument or
-    register_codec()."""
-    d = hashlib.sha256(payload or b"").digest()
-    return [d[i] / 255.0 for i in range(dim)]
 
 
 # ---------------------------------------------------------------------------
@@ -91,23 +81,6 @@ def unregister_codec(kind: str, mime_prefix: str) -> None:
 def _codec_snapshot(kind: str) -> dict[str, Callable]:
     """Driver-side snapshot for capture-by-value into worker closures."""
     return {m: f for (k, m), f in _CODECS.items() if k == kind}
-
-
-def _pick_codec(snapshot: dict[str, Callable], mime: str | None):
-    """Longest registered mime-prefix match, or None.
-
-    NOTE: driver-side use only. Worker closures must NOT reference this
-    module-level function — cloudpickle serializes module functions BY
-    IMPORT PATH, and the Python workers of a driver-owned session may
-    not have this package importable. Each operator inlines the same
-    three-line picker inside its closure instead.
-    """
-    best, best_len = None, -1
-    m = mime or ""
-    for prefix, fn in snapshot.items():
-        if m.startswith(prefix) and len(prefix) > best_len:
-            best, best_len = fn, len(prefix)
-    return best
 
 
 def attach_binary_column(

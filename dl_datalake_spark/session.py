@@ -2,8 +2,8 @@
 
 One module owns session construction so every entry point (tests, bench,
 CLI, driver harness) gets identical behavior: UTC timestamps, AQE on,
-Arrow transfer on, dynamic partition overwrite for the lake's upsert
-path, and nanosecond-parquet tolerance for the events table.
+Arrow transfer on, and nanosecond-parquet tolerance for the events
+table.
 
 The reference reads everything through one in-process DuckDB connection
 (`storage/reader.py:57-68`); the Spark analogue is one shared session —
@@ -14,6 +14,7 @@ comparable quantity.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -29,17 +30,37 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # lake upsert rewrites only the partitions present in the batch
-    "spark.sql.sources.partitionOverwriteMode": "dynamic",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.filterPushdown": "true",
     # NOT set: spark.sql.parquet.aggregatePushdown — it only engages on
-    # the DSv2 read path, and moving parquet off the v1 source list
-    # would change dynamic-partition-overwrite semantics the writer's
-    # upsert depends on. Commit stats need none of it: the writer reads
-    # per-file min/max from the Parquet footers on the driver
+    # the DSv2 read path, and commit stats need none of it: the writer
+    # reads per-file min/max from the Parquet footers on the driver
     # (lake/snapshot.added_file_stats).
+    # NOT set: spark.sql.sources.partitionOverwriteMode.  Lake writes
+    # stage with mode("append"); the index and view writes that replace
+    # only their output's partitions pin "dynamic" around the write
+    # (`dynamic_partition_overwrite`: operators/ivf_index.py,
+    # lsh_index.py, streaming/mv.py); and the from-scratch writes
+    # (write_lsh_index, write_training_shards) need the default
+    # "static", under which an overwrite also clears the partitions a
+    # rebuild no longer produces.
 }
+
+
+@contextmanager
+def dynamic_partition_overwrite(spark: SparkSession):
+    """Pin ``partitionOverwriteMode=dynamic`` for the duration, restoring
+    the caller's value after: a ``mode("overwrite")`` + ``partitionBy``
+    write inside replaces only the partitions present in its output.
+    Under the ambient default ``static`` the same write replaces the
+    whole directory — never trust the ambient conf for it."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, "static")
+    spark.conf.set(key, "dynamic")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:

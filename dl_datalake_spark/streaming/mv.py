@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from dl_datalake_spark.session import dynamic_partition_overwrite
+
 MV_AGG_COLS = ("_n", "_sum", "_min", "_max")
 
 # Marker file inside the MV dir recording the highest _batch_id folded
@@ -123,9 +125,7 @@ def write_mv_batch(
             )
         return
     spark = batch_df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with dynamic_partition_overwrite(spark):
         (
             _partials(batch_df, group_cols, value_col, distinct_col)
             .withColumn("_batch_id", F.lit(int(batch_id)))
@@ -134,8 +134,6 @@ def write_mv_batch(
             .partitionBy("_batch_id")
             .parquet(mv_path)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def incremental_mv(

@@ -272,6 +272,14 @@ def test_dv_vacuum_reclaims_after_refs_retire(lake, spark):
     assert not w.fs.exists(f"{_ds_path(w)}/{dv_rel}")
 
 
+def test_read_datasets_hides_dv_deleted_rows(lake, spark):
+    w, r, _ = lake
+    w.write_ohlc(_candles(spark, 30), KEY)
+    w.delete_where(KEY, F.col("ts") >= T0 + 20 * 60000, strategy="dv")
+    got = r.read_datasets([KEY])[KEY.symbol]
+    assert got.count() == 20 == r.read_dataset(KEY).count()
+
+
 def test_dv_missing_sidecar_raises_on_time_travel(lake, spark):
     w, r, _ = lake
     w.write_ohlc(_candles(spark, 10), KEY)                                # v0

@@ -180,3 +180,24 @@ def test_merge_empty_target_with_s_condition(lake, spark):
     )
     assert res.rows == 1
     assert r.read_dataset(KEY).collect()[0]["price"] == 100.0
+
+
+def test_full_scan_merge_keeps_a_null_ts_row(lake, spark):
+    w, r, _ = lake
+    w.write_ticks(
+        spark.createDataFrame(
+            [(T0, 1.0, 1), (None, 2.0, 1)], "ts long, price double, k int"
+        ),
+        KEY,
+        mode="append",
+    )
+    src = spark.createDataFrame([(T0 + 60000, 5.0, 2)], "ts long, price double, k int")
+    res = w.merge_into(
+        KEY, src, on="k", when_matched_update={"price": "s.price"},
+        when_not_matched_insert=True, full_scan=True,
+    )
+    assert res.rows == 1 and res.partitions == [[2023, 1]]
+    got = sorted(
+        (x["ts"] is None, x["price"]) for x in r.read_dataset(KEY).collect()
+    )
+    assert got == [(False, 1.0), (False, 5.0), (True, 2.0)]

@@ -218,6 +218,40 @@ def test_optimistic_update_conflicts_with_overlapping_rewrite(spark, tmp_path):
     assert len(got) == 19 and (JAN + 9 * 60000, 9.0) not in got
 
 
+@pytest.mark.parametrize(
+    "ours, racer",
+    [
+        (
+            lambda w: w.delete_where(KEY, "price > 400", optimistic=True),
+            lambda w: w.delete_where(KEY, "price = 500", optimistic=True),
+        ),
+        (
+            lambda w: w.update_where(
+                KEY, {"price": "price + 1"}, "price > 400", optimistic=True
+            ),
+            lambda w: w.delete_where(KEY, "price = 500", strategy="dv"),
+        ),
+    ],
+    ids=["delete-vs-delete", "update-vs-dv-delete"],
+)
+def test_optimistic_dml_conflicts_on_the_null_ts_month(spark, tmp_path, ours, racer):
+    """No commit records the null-ts month, so a racer that rewrote or
+    DV-deleted only null-ts rows looks like a no-op in the window; the
+    write that read those rows must still conflict, else both
+    post-images stay live (the racer's delete comes undone)."""
+    base = str(tmp_path / "lake")
+    w = _seed(spark, base)
+    w.write_ticks(_mk(spark, [(None, 500.0)]), KEY, mode="append")
+    restore = _race_once(w, lambda: racer(LakeWriter(spark, base)))
+    try:
+        with pytest.raises(ConcurrentWriteConflict, match="overlaps|stale"):
+            ours(w)
+    finally:
+        restore()
+    got = LakeReader(spark, base).read_dataset(KEY).select("ts", "price").collect()
+    assert len(got) == 20 and not [r for r in got if r["ts"] is None]
+
+
 # -- compact_partitions (read_set="files") --------------------------------
 
 

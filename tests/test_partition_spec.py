@@ -394,6 +394,50 @@ def test_recluster_drops_ghost_day_after_downgrade(spark, tmp_path):
     assert _rows(spark, str(tmp_path)) == before
 
 
+@pytest.mark.parametrize(
+    "verb",
+    [
+        "dv_delete", "dv_update", "delete_where_multi", "restore_dataset",
+        "read_datasets",
+    ],
+)
+def test_snapshot_verbs_read_a_mixed_epoch_listing(spark, tmp_path, verb):
+    """Every verb that reads a pinned listing serves one spanning both
+    spec epochs (`spec.grouped_scan`): one partition-discovering read
+    over monthly and daily files raises
+    CONFLICTING_PARTITION_COLUMN_NAMES."""
+    base = str(tmp_path)
+    # v0, monthly; with the feed on, restore also diffs head vs target
+    w = _seed(spark, base, emit_cdf=verb == "restore_dataset")
+    w.set_partition_spec(KEY, "daily")  # v1
+    w.write_ticks(_mk(spark, [(JAN2, 200.0)]), KEY, mode="append")  # v2
+    before = _rows(spark, base)
+    hit = F.col("price").isin(1.0, 200.0)  # one row of each epoch
+    kept = [r for r in before if r[1] not in (1.0, 200.0)]
+    if verb == "dv_delete":
+        w.delete_where(KEY, hit, strategy="dv")
+        want = kept
+    elif verb == "dv_update":
+        w.update_where(KEY, {"price": F.col("price") + 1000.0}, hit, strategy="dv")
+        want = sorted(kept + [(t, p + 1000.0) for t, p in before if p in (1.0, 200.0)])
+    elif verb == "delete_where_multi":
+        w.delete_where_multi([KEY], hit)
+        want = kept
+    elif verb == "restore_dataset":
+        # v3 adds a daily file to February, whose monthly file stays
+        w.write_ticks(_mk(spark, [(FEB7 + 86_400_000, 7.0)]), KEY, mode="append")
+        w.restore_dataset(KEY, 2)
+        want = before
+    else:
+        want = before
+    if verb == "read_datasets":
+        df = LakeReader(spark, base).read_datasets([KEY])[KEY.symbol]
+        got = sorted((x["ts"], x["price"]) for x in df.select("ts", "price").collect())
+    else:
+        got = _rows(spark, base)
+    assert got == want
+
+
 def test_dml_on_downgraded_mixed_tree(spark, tmp_path):
     """Row-level DML must work BETWEEN a daily->monthly downgrade and
     the compaction that migrates the old daily files: the scan serves a

@@ -145,6 +145,45 @@ def test_update_no_match_commits_nothing(lake, spark, strategy):
     assert CommitLog(ds, fs=w.fs).latest_version() == 0
 
 
+def _with_null_ts(spark):
+    """Five January candles (close 0, 20, .., 80) and one row with a
+    null ts (close 99), which lands in the null partition."""
+    rows = [(T0 + i * 60000, 1.0, 2.0, 0.5, 20.0 * i, 10.0) for i in range(5)]
+    rows.append((None, 1.0, 2.0, 0.5, 99.0, 10.0))
+    return spark.createDataFrame(
+        rows,
+        "ts long, open double, high double, low double, close double, volume double",
+    )
+
+
+@pytest.mark.parametrize("strategy", ["rewrite", "dv"])
+def test_delete_matching_a_null_ts_row(lake, spark, strategy):
+    w, r, _ = lake
+    w.write_ohlc(_with_null_ts(spark), KEY, mode="append")
+    res = w.delete_where(KEY, "close > 50", strategy=strategy)
+    assert res.rows == 3 and res.partitions == [[2023, 1]]
+    got = r.read_dataset(KEY)
+    assert sorted(x["close"] for x in got.collect()) == [0.0, 20.0, 40.0]
+    # the null partition is addressed, never recorded
+    log = CommitLog(w.dataset_path(KEY), fs=w.fs)
+    assert log.committed_entry(1)["partitions"] == [[2023, 1]]
+    assert r.changes_since(KEY, 0).touched == [(2023, 1)]
+
+
+@pytest.mark.parametrize("strategy", ["rewrite", "dv"])
+def test_update_matching_a_null_ts_row(lake, spark, strategy):
+    w, r, _ = lake
+    w.write_ohlc(_with_null_ts(spark), KEY, mode="append")
+    res = w.update_where(KEY, {"close": F.lit(0.0)}, "close > 50", strategy=strategy)
+    assert res.rows == 3 and res.partitions == [[2023, 1]]
+    got = r.read_dataset(KEY).collect()
+    assert len(got) == 6
+    assert sorted(x["close"] for x in got) == [0.0, 0.0, 0.0, 0.0, 20.0, 40.0]
+    assert [x["close"] for x in got if x["ts"] is None] == [0.0]
+    log = CommitLog(w.dataset_path(KEY), fs=w.fs)
+    assert log.committed_entry(1)["partitions"] == [[2023, 1]]
+
+
 def test_update_refuses_partition_identity_columns(lake, spark):
     w, _, _ = lake
     w.write_ohlc(_candles(spark, 5), KEY)
